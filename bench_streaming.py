@@ -141,7 +141,7 @@ def run(spark, sf_dir: str = SF_DIR) -> dict:
 
         sink_rows = (
             spark.read.parquet(out).count()
-            if glob.glob(os.path.join(out, "*.parquet"))
+            if glob.glob(os.path.join(out, "batch_id=*", "*.parquet"))
             else 0
         )
         nonempty = [

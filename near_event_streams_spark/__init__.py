@@ -9,7 +9,7 @@ Spark-first:
   ``operators.flatten``, ``operators.enrich``, ``streaming``): the
   reference's dataflow — explode blocks → shards → outcomes → logs, filter
   ``EVENT_JSON:`` lines, parse + validate, stamp provenance, whitelist /
-  blacklist, NEP-171 flatten, token-metadata enrichment, 3-way topic
+  blacklist, NEP-171 flatten, token-metadata enrichment, 2-topic
   fan-out — as declarative DataFrame plans runnable in batch or
   Structured Streaming.
 * **Analytics layer** (``plans.analytics``): the relational query surface

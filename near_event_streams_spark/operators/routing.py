@@ -1,4 +1,4 @@
-"""Routing: whitelist/blacklist, Kafka key/topic derivation, 3-way fan-out.
+"""Routing: whitelist/blacklist, Kafka key/topic derivation, 2-way fan-out.
 
 Reference behavior being re-expressed:
 
@@ -10,22 +10,23 @@ Reference behavior being re-expressed:
   contract id defaults to ``""`` for grouping (``src/events.rs:123``,
   ``unwrap_or_default``).
 * every event goes to 2 topics — the all-events topic and
-  ``"{prefix}.{standard}.{event}"`` — and enriched flat events additionally
-  to ``"{prefix}.{standard}.{event}_metadata"``
-  (``src/events.rs:147-233``, suffix at ``:216``).
+  ``"{prefix}.{standard}.{event}"`` (``src/events.rs:147-196``). The
+  reference's third topic, ``…_metadata`` for enriched flat events
+  (``:216``), carries a record this job does not build, so it is not routed.
 
-Spark-first design: the 3-way send is a *union of three projections* with a
-computed ``topic`` column feeding ONE Kafka sink (dynamic topic routing) —
-no per-row fan-out code. Per-contract ordering (the reference sends each
-contract group sequentially, groups concurrently — ``src/events.rs:119-193``)
-maps to ``repartition(key) + sortWithinPartitions(block_height, …)`` before
-the sink: Kafka preserves order within a producer/partition, and each Spark
+Spark-first design: one projection computes key, value, block height and
+the event's destination-topic array once per event, and a single
+``explode`` emits one record per topic into ONE Kafka sink (dynamic topic
+routing) — one scan and one parse of the source, no per-row fan-out code.
+Per-contract ordering (the reference sends each contract group
+sequentially, groups concurrently — ``src/events.rs:119-193``) maps to
+``repartition(key) + sortWithinPartitions(block_height, …)`` before the
+sink: Kafka preserves order within a producer/partition, and each Spark
 partition holds complete key groups.
 
 Scale note: whitelist/blacklist are config-sized (10s-1000s of entries) →
 ``isin`` literals, which Catalyst turns into an in-predicate pushed to the
-scan. If the lists were tables, use broadcast left-semi / left-anti joins —
-provided here as ``semi_filter``/``anti_filter``.
+scan.
 """
 
 from __future__ import annotations
@@ -54,16 +55,6 @@ def apply_blacklist(events: DataFrame, blacklist: Sequence[str]) -> DataFrame:
     )
 
 
-def semi_filter(events: DataFrame, allow: DataFrame, key: str) -> DataFrame:
-    """Table-sized whitelist: broadcast left-semi join."""
-    return events.join(F.broadcast(allow), on=key, how="left_semi")
-
-
-def anti_filter(events: DataFrame, deny: DataFrame, key: str) -> DataFrame:
-    """Table-sized blacklist: broadcast left-anti join."""
-    return events.join(F.broadcast(deny), on=key, how="left_anti")
-
-
 def event_key() -> Column:
     """Kafka message key (src/event_types.rs:26-35)."""
     return F.when(
@@ -80,46 +71,24 @@ def specific_topic(prefix: str) -> Column:
 
 
 def routed_records(
-    events: DataFrame,
-    topic_prefix: str,
-    all_topic: str,
-    include_metadata_topic: bool = False,
+    events: DataFrame, topic_prefix: str, all_topic: str
 ) -> DataFrame:
-    """Fan events out to (topic, key, value) records — union of projections.
+    """Fan events out to (topic, key, value, block_height) records.
 
-    One record per (event, destination topic):
-      1. the all-events topic (src/events.rs:158-166)
-      2. the specific ``{prefix}.{standard}.{event}`` topic (:168-176)
-      3. (optional, for enriched flats) ``…_metadata`` (:216)
+    One record per (event, destination topic): the all-events topic
+    (src/events.rs:158-166) and the specific ``{prefix}.{standard}.{event}``
+    topic (:168-176). Key and value are computed once per event, below the
+    explode, so the fan-out only copies them.
     """
-    base = events.select(
+    per_event = events.select(
+        F.array(F.lit(all_topic), specific_topic(topic_prefix)).alias("topics"),
         event_key().alias("key"),
         serialize_event().alias("value"),
         F.col("emit_info.block_height").alias("block_height"),
-        F.col("standard"),
-        F.col("event"),
     )
-    to_all = base.select(
-        F.lit(all_topic).alias("topic"), "key", "value", "block_height"
+    return per_event.select(
+        F.explode("topics").alias("topic"), "key", "value", "block_height"
     )
-    to_specific = base.select(
-        specific_topic(topic_prefix).alias("topic"),
-        "key",
-        "value",
-        "block_height",
-    )
-    out = to_all.unionByName(to_specific)
-    if include_metadata_topic:
-        to_meta = base.select(
-            F.concat(specific_topic(topic_prefix), F.lit("_metadata")).alias(
-                "topic"
-            ),
-            "key",
-            "value",
-            "block_height",
-        )
-        out = out.unionByName(to_meta)
-    return out
 
 
 def ordered_for_sink(records: DataFrame, partitions: int | None = None) -> DataFrame:

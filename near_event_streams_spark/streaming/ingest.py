@@ -209,7 +209,7 @@ def start_incremental_dedup_ingest(
 
     Output layout is ``corpus_dir/batch_id=N/`` with per-batch dynamic
     partition overwrite, so a replayed batch rewrites its own partition
-    (effectively-once, same contract as ``start_to_parquet_idempotent``).
+    (effectively-once, same contract as ``job.start_to_parquet``).
 
     ``vacuum_retain`` prunes superseded registry versions after each
     commit — a 24/7 ingest loop creates one store version per

@@ -6,14 +6,19 @@ Maps the reference's run loop (``src/main.rs:111-141`` listen_blocks →
     readStream (file/Kafka StreamerMessage source)
       → extract_events (explode×3, filter, parse, validate, emit_info)
       → whitelist/blacklist
-      → routed_records (3-way topic fan-out as a union)
-      → foreachBatch: per-key ordering + sink write
+      → routed_records (2-topic fan-out: one projection, one explode)
+      → run_batches: foreachBatch per-key ordering + sink write
 
 Semantics parity:
 
-* at-least-once delivery with restart from checkpoint (the reference is
-  at-least-once fire-and-await, ``src/events.rs:89-97``; its sync modes
-  map to checkpoint/startingOffsets — ``src/configs.rs:101-127``).
+* restart from checkpoint (the reference's sync modes map to
+  checkpoint/startingOffsets — ``src/configs.rs:101-127``). The routed
+  stream starts through ``run_batches``, whose ``foreachBatch`` redelivers a
+  batch that crashed between its write and its commit. The Kafka sink is
+  therefore at-least-once, like the reference's fire-and-await sends
+  (``src/events.rs:89-97``); the parquet sink overwrites its own
+  ``batch_id=N`` directory, so a replay rewrites identical data and the
+  file output is effectively exactly-once.
 * per-contract ordering inside each micro-batch via
   ``repartition(key) + sortWithinPartitions`` (done in ``foreachBatch``
   where the batch is a static frame — streaming frames cannot sort);
@@ -62,6 +67,28 @@ def build_routed_stream(
     return routed, rejected
 
 
+def run_batches(
+    frame: DataFrame,
+    checkpoint_dir: str,
+    sink: Callable[[DataFrame, int], None],
+    available_now: bool = True,
+) -> StreamingQuery:
+    """The one stream runner: ``frame`` → ``foreachBatch(sink)``.
+
+    ``update`` mode equals append on stateless plans and emits changed
+    rows of stateful ones, so it serves every caller. ``available_now``
+    drains what is there and stops; otherwise the stream keeps running.
+    """
+    writer = (
+        frame.writeStream.outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(sink)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_to_parquet(
     messages: DataFrame,
     config: NesConfig,
@@ -69,23 +96,27 @@ def start_to_parquet(
     checkpoint_dir: str,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Run the pipeline into a parquet sink (test/replay target).
+    """Run the pipeline into an effectively-once parquet sink.
 
-    ``foreachBatch`` applies the per-key ordering discipline then appends.
+    Each micro-batch is put in per-key order and overwrites its own
+    ``out_dir/batch_id=N`` partition, so a replayed batch (foreachBatch
+    redelivery after a crash between write and commit) rewrites identical
+    data instead of appending duplicates. Exactly-once needs this
+    sink-side idempotence on top of the checkpointed source offsets. One
+    partition dir per micro-batch: readers prune on their own columns, so
+    the batch_id layer costs only directory fan-out (compact with
+    ``sinks.parquet_sink`` if batches are tiny).
     """
     routed, _ = build_routed_stream(messages, config)
 
     def _write(batch: DataFrame, batch_id: int) -> None:
-        ordered_for_sink(batch).write.mode("append").parquet(out_dir)
+        (
+            ordered_for_sink(batch)
+            .write.mode("overwrite")
+            .parquet(f"{out_dir}/batch_id={batch_id}")
+        )
 
-    writer = (
-        routed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(routed, checkpoint_dir, _write, available_now)
 
 
 def start_to_kafka(
@@ -96,8 +127,8 @@ def start_to_kafka(
 ) -> StreamingQuery:
     """Run the pipeline into Kafka with dynamic topic routing.
 
-    One sink, ``topic`` column per record — the 3-way fan-out is already a
-    union upstream. Requires the spark-sql-kafka package on the cluster.
+    One sink, ``topic`` column per record — the fan-out is already done
+    upstream. Requires the spark-sql-kafka package on the cluster.
     """
     routed, _ = build_routed_stream(messages, config)
 
@@ -112,12 +143,7 @@ def start_to_kafka(
             .save()
         )
 
-    return (
-        routed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write)
-        .start()
-    )
+    return run_batches(routed, checkpoint_dir, _write, available_now=False)
 
 
 def start_rejected_sink(
@@ -236,59 +262,3 @@ def with_batch_observability(
         ),
         F.max("emit_info.block_height").alias("max_height"),
     )
-
-
-def run_batches(
-    stream_df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-    checkpoint_dir: str,
-    sink: Callable[[DataFrame, int], None],
-) -> StreamingQuery:
-    """Generic runner: transform → foreachBatch sink, availableNow."""
-    return (
-        transform(stream_df)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_to_parquet_idempotent(
-    messages: DataFrame,
-    config: NesConfig,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Effectively-once parquet sink: each micro-batch overwrites its own
-    ``batch_id=N`` partition, so a replayed batch (at-least-once
-    foreachBatch redelivery after a crash between write and commit)
-    rewrites identical data instead of appending duplicates.
-
-    This is the improvement SURVEY §2.1 notes over the reference's
-    at-least-once fire-and-await Kafka sends (``events.rs:89-97``):
-    exactly-once needs sink-side idempotence, which a deterministic
-    partition overwrite provides for file sinks. Scale: one partition
-    dir per micro-batch; downstream readers prune on their own columns,
-    so the batch_id layer costs only directory fan-out (compact
-    periodically if batches are tiny).
-    """
-    routed, _ = build_routed_stream(messages, config)
-
-    def _write(batch: DataFrame, batch_id: int) -> None:
-        (
-            ordered_for_sink(batch)
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch_id={batch_id}")
-        )
-
-    writer = (
-        routed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,9 +1,11 @@
 """Routing parity tests (SURVEY §2.1 ops 8, 9, 12, 13)."""
 
 import json
+import re
 
 from pyspark.sql import functions as F
 
+from near_event_streams_spark.config import NesConfig
 from near_event_streams_spark.operators.extract import extract_events
 from near_event_streams_spark.operators.routing import (
     apply_blacklist,
@@ -13,6 +15,7 @@ from near_event_streams_spark.operators.routing import (
     serialize_event,
 )
 from near_event_streams_spark.sources.streamer import read_messages_json
+from near_event_streams_spark.streaming.job import build_routed_stream
 
 
 def _events(spark, fixture_messages_path):
@@ -50,6 +53,18 @@ def test_fanout_two_topics_per_event(spark, fixture_messages_path):
     assert "near_events_all" in topics
     assert "near_events.nep171.nft_mint" in topics
     assert "near_events.custom.thing_happened" in topics
+
+
+def test_routed_plan_scans_source_once(spark, fixture_messages_path):
+    """The 2-topic fan-out is one explode over one projection: the
+    executed plan reads the source once and holds no Union (a union of
+    per-topic projections re-runs scan, explode and parse per branch)."""
+    routed, _ = build_routed_stream(
+        read_messages_json(spark, fixture_messages_path), NesConfig()
+    )
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bFileScan\b", plan)) == 1, plan
+    assert not re.search(r"\bUnion\b", plan), plan
 
 
 def test_key_is_contract_account(spark, fixture_messages_path):

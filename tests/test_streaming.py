@@ -110,7 +110,7 @@ def test_windowed_contract_counts_with_watermark(
         events, _ = extract_events(stream_df)
         return job.windowed_contract_counts(events)
 
-    q = job.run_batches(msgs, transform, ckpt, sink)
+    q = job.run_batches(transform(msgs), ckpt, sink)
     q.awaitTermination(120)
     counts = {
         (r["contract_account_id"], r["n_events"]) for r in collected
@@ -164,7 +164,7 @@ def test_streaming_dedup_receipts(spark, tmp_path):
         return job.dedup_receipts(events)
 
     msgs = stream_messages_json(spark, str(src))
-    q = job.run_batches(msgs, transform, str(tmp_path / "ck2"), sink)
+    q = job.run_batches(transform(msgs), str(tmp_path / "ck2"), sink)
     q.awaitTermination(120)
     assert len(collected) == 1
 
@@ -212,7 +212,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         return job.dedup_receipts_within_watermark(events)
 
     msgs = stream_messages_json(spark, str(src))
-    q = job.run_batches(msgs, transform, str(tmp_path / "ckwm"), sink)
+    q = job.run_batches(transform(msgs), str(tmp_path / "ckwm"), sink)
     q.awaitTermination(120)
     assert len(collected) == 1
 
@@ -260,8 +260,7 @@ def test_observe_metrics_surface_in_listener(
             return job.with_batch_observability(events)
 
         q = job.run_batches(
-            stream_messages_json(spark, str(src)),
-            transform,
+            transform(stream_messages_json(spark, str(src))),
             str(tmp_path / "ckobs"),
             lambda b, i: collected.extend(b.collect()),
         )
@@ -308,27 +307,51 @@ def test_stats_listener_reports_throughput(
 
 
 def test_idempotent_sink_replay_safe(spark, fixture_messages_path, tmp_path):
-    """Replaying a micro-batch (the at-least-once failure mode) must not
-    duplicate rows: the per-batch partition overwrite makes the sink
-    idempotent — effectively exactly-once end to end."""
+    """A crash after a micro-batch's write and before its commit (the
+    at-least-once failure mode) replays that batch on restart; the
+    per-batch partition overwrite must make the replay rewrite, not
+    duplicate, its rows — effectively exactly-once end to end."""
+    import os as _os
     import shutil as _shutil
+    from collections import Counter
 
     src = tmp_path / "blocks"
     src.mkdir()
-    _shutil.copy(fixture_messages_path, src / "blocks.jsonl")
+    for i in range(2):
+        dst = src / f"blocks{i}.jsonl"
+        _shutil.copy(fixture_messages_path, dst)
+        # deterministic batch order: file-source batches sort by mtime
+        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    msgs = stream_messages_json(spark, str(src))
-    q = job.start_to_parquet_idempotent(msgs, NesConfig(), out, ckpt)
-    q.awaitTermination(120)
-    first = spark.read.parquet(out).count()
-    assert first == 8  # 4 valid events x 2 topics
 
-    # simulate redelivery: wipe the checkpoint so the SAME source file
-    # replays as batch 0 again
+    def run():
+        job.start_to_parquet(
+            stream_messages_json(spark, str(src), max_files_per_trigger=1),
+            NesConfig(),
+            out,
+            ckpt,
+        ).awaitTermination(180)
+
+    def rows():
+        return Counter(
+            tuple(r) for r in spark.read.parquet(out).drop("batch_id").collect()
+        )
+
+    run()
+    first = rows()
+    assert sum(first.values()) == 16  # 2 files x 4 valid events x 2 topics
+
+    # crash between batch 1's write and its commit: its offsets are
+    # logged, its output is written, its commit marker (and checksum) lost
+    for name in ("1", ".1.crc"):
+        _os.remove(_os.path.join(ckpt, "commits", name))
+    run()
+    assert rows() == first  # batch 1 replayed without duplicates
+
+    # checkpoint lost entirely: both batches replay over their own dirs
     _shutil.rmtree(ckpt)
-    q2 = job.start_to_parquet_idempotent(msgs, NesConfig(), out, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == first  # no duplicates
+    run()
+    assert rows() == first
 
 
 def test_inplace_compaction_preserves_rows_and_replay_safety(
@@ -355,7 +378,7 @@ def test_inplace_compaction_preserves_rows_and_replay_safety(
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     def run():
-        q = job.start_to_parquet_idempotent(
+        q = job.start_to_parquet(
             stream_messages_json(spark, str(src), max_files_per_trigger=1),
             NesConfig(),
             out,
@@ -403,7 +426,7 @@ def test_compaction_crash_recovery(spark, fixture_messages_path, tmp_path):
         _shutil.copy(fixture_messages_path, dst)
         _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = job.start_to_parquet_idempotent(
+    q = job.start_to_parquet(
         stream_messages_json(spark, str(src), max_files_per_trigger=1),
         NesConfig(),
         out,
@@ -434,7 +457,7 @@ def test_compact_batches_roundtrip(spark, fixture_messages_path, tmp_path):
 
     _shutil.copy(fixture_messages_path, src / "blocks.jsonl")
     out, ckpt = str(tmp_path / "batches"), str(tmp_path / "ckpt")
-    q = job.start_to_parquet_idempotent(
+    q = job.start_to_parquet(
         stream_messages_json(spark, str(src)), NesConfig(), out, ckpt
     )
     q.awaitTermination(120)
