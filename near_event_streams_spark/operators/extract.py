@@ -3,22 +3,23 @@
 Re-expresses the reference's per-block extraction loop
 (reference: ``src/events.rs:102-145, 272-350``) as one declarative plan of
 narrow transformations — it runs identically on a static DataFrame or a
-streaming DataFrame, and whole-stage codegen fuses the entire chain into a
-single pass per partition (no materialization between steps, matching the
-reference's iterator fusion).
+streaming DataFrame, in one pass per partition with no exchange.
 
 Pipeline (each step cites the reference behavior it mirrors):
 
 1. explode ``shards`` → explode ``receipt_execution_outcomes`` → explode
    ``logs``  (3-level unnest, ``src/events.rs:115-118, 272-275, 312``)
-2. cheap prefix filter on the *raw* string BEFORE any JSON parse
-   (``src/events.rs:313-315`` — predicate ordering is load-bearing: Catalyst
-   cannot reorder through an opaque ``from_json``, so we write the filter
-   first explicitly)
-3. strip the ``EVENT_JSON:`` prefix + trim, ``from_json`` into the typed
-   envelope (``src/events.rs:318-320``); the ``data`` payload is parsed
-   per-variant into the superset struct (mint / transfer / raw_json —
-   ``src/event_types.rs:77-91``)
+2. cheap prefix filter on the *raw* string before any JSON parse
+   (``src/events.rs:313-315``), then one regexp pass strips the
+   ``EVENT_JSON:`` prefix and trims (``src/events.rs:318-319``)
+3. one ``from_json`` per line into ``standard, version, event`` plus
+   ``data`` as raw JSON text (``src/events.rs:320``), inside a ``Generate``
+   (inline of a one-element array). A Filter on generator output cannot be
+   pushed below it, so step 4 reads the parsed fields instead of Catalyst
+   inlining, and re-running, the parse in the Filter. One more
+   ``from_json`` types the payload as a superset NEP-171 item array, from
+   which the mint and transfer variants are projected
+   (``src/event_types.rs:77-91``)
 4. split into OK stream and rejected stream:
    - unparseable envelope → rejected, reason ``parse_error``
      (``src/events.rs:336-344`` warn-and-drop)
@@ -34,19 +35,21 @@ rows but never exchange them.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from near_event_streams_spark.schemas import (
     EVENT_ENVELOPE_SCHEMA,
     EVENT_FIELD_PATTERN,
     EVENT_JSON_PREFIX,
+    NEP171_ITEM_SCHEMA,
     NEP171_MINT_SCHEMA,
     NEP171_TRANSFER_SCHEMA,
 )
-from pyspark.sql.types import ArrayType
-
-_PREFIX_LEN = len(EVENT_JSON_PREFIX)  # 11
 
 
 def explode_to_logs(messages: DataFrame) -> DataFrame:
@@ -79,100 +82,81 @@ def explode_to_logs(messages: DataFrame) -> DataFrame:
     )
 
 
-def ws_trim(c: Column) -> Column:
-    """Whitespace trim matching Rust's ``str::trim``: Spark's ``trim`` only
-    strips ASCII spaces, but the reference trims tabs/newlines too
-    (``src/events.rs:313``), so use a regexp trim."""
-    return F.regexp_replace(c, r"^\s+|\s+$", "")
+# Rust's ``str::trim`` strips tabs and newlines as well as spaces, so the
+# trims are regexps over ``\s``, not Spark's space-only ``trim``. The prefix
+# has no regex metacharacters.
+_PREFIX_PATTERN = r"^\s*" + EVENT_JSON_PREFIX
+# Leading whitespace + prefix + whitespace, or trailing whitespace.
+_STRIP_PATTERN = _PREFIX_PATTERN + r"\s*|\s+$"
 
 
 def event_json_filter(log: Column) -> Column:
     """``log.trim().starts_with("EVENT_JSON:")`` (src/events.rs:313-315)."""
-    return F.startswith(ws_trim(log), F.lit(EVENT_JSON_PREFIX))
+    return log.rlike(_PREFIX_PATTERN)
 
 
 def raw_event_json(log: Column) -> Column:
-    """Strip the prefix from the trimmed log and trim again
-    (``src/events.rs:318-319``: ``log[prefix.len()..].trim()``)."""
-    return ws_trim(F.substring(ws_trim(log), _PREFIX_LEN + 1, 2_000_000_000))
+    """``log.trim()[prefix.len()..].trim()`` (``src/events.rs:318-319``) as
+    one regexp pass over a line that passed :func:`event_json_filter`."""
+    return F.regexp_replace(log, _STRIP_PATTERN, "")
+
+
+def _typed(items: Column, schema: StructType) -> Column:
+    """Superset items projected back to one NEP-171 variant's item shape."""
+    return F.transform(
+        items, lambda x: F.struct(*[x[f.name].alias(f.name) for f in schema])
+    ).cast(ArrayType(schema))
 
 
 def parse_events(logs: DataFrame, log_col: str = "log") -> DataFrame:
     """Prefix-filter, parse, and type event log lines (no validation yet).
 
     Output adds:
+      ``event_json`` — the full raw event JSON after prefix strip
       ``standard, version, event`` — envelope fields (null if parse failed)
-      ``data_mint, data_transfer`` — typed arrays when the payload matches
-        that NEP-171 shape (``src/event_types.rs:84-91`` untagged union)
       ``data_json`` — the raw payload JSON (always retained; the reference's
         ``Generic(Value)`` escape hatch, ``src/event_types.rs:81``)
-      ``event_json`` — the full raw event JSON after prefix strip
+      ``data_mint, data_transfer`` — typed arrays when the payload matches
+        that NEP-171 shape (``src/event_types.rs:84-91`` untagged union)
     """
-    raw = F.col("_raw_event_json")
-
-    # Untagged-union matching (src/event_types.rs:84-91). serde tries the
-    # variants in declaration order — Mint(Vec) → Transfer(Vec) → MintFlat →
-    # TransferFlat — and a variant only matches when its *required* fields
-    # are present (owner_id+token_ids for mint; old/new_owner_id+token_ids
-    # for transfer). from_json with a struct schema tolerates missing fields
-    # (returns nulls), so we re-impose serde's required-field semantics with
-    # explicit null checks, and the when-cascade imposes declaration order.
-    mint_arr = F.from_json(F.col("data_json"), ArrayType(NEP171_MINT_SCHEMA))
-    tx_arr = F.from_json(F.col("data_json"), ArrayType(NEP171_TRANSFER_SCHEMA))
-    mint_flat = F.from_json(F.col("data_json"), NEP171_MINT_SCHEMA)
-    tx_flat = F.from_json(F.col("data_json"), NEP171_TRANSFER_SCHEMA)
-
-    def _mint_ok(x: Column) -> Column:
-        return x["owner_id"].isNotNull() & x["token_ids"].isNotNull()
-
-    def _tx_ok(x: Column) -> Column:
-        return (
-            x["old_owner_id"].isNotNull()
-            & x["new_owner_id"].isNotNull()
-            & x["token_ids"].isNotNull()
-        )
-
-    is_mint_arr = (
-        mint_arr.isNotNull()
-        & (F.size(mint_arr) > 0)
-        & F.forall(mint_arr, _mint_ok)
-    )
-    is_tx_arr = (
-        tx_arr.isNotNull() & (F.size(tx_arr) > 0) & F.forall(tx_arr, _tx_ok)
-    )
-    is_mint_flat = mint_flat.isNotNull() & _mint_ok(mint_flat)
-    is_tx_flat = tx_flat.isNotNull() & _tx_ok(tx_flat)
-
-    df = (
+    envelope = F.from_json(F.col("event_json"), EVENT_ENVELOPE_SCHEMA)
+    parsed = (
         logs.filter(event_json_filter(F.col(log_col)))
-        .withColumn("_raw_event_json", raw_event_json(F.col(log_col)))
-        .withColumn(
-            "_envelope", F.from_json(raw, EVENT_ENVELOPE_SCHEMA)
+        .withColumn("event_json", raw_event_json(F.col(log_col)))
+        # The barrier: a filter on generator output cannot move below the
+        # Generate, so the envelope is parsed here once per line.
+        .select("*", F.inline(F.array(envelope)))
+        .withColumnRenamed("data", "data_json")
+    )
+
+    # Untagged-union matching (src/event_types.rs:84-91). serde tries
+    # Mint(Vec) → Transfer(Vec) → MintFlat → TransferFlat, and a variant
+    # matches only when its required fields are present (owner_id+token_ids
+    # for mint; old/new_owner_id+token_ids for transfer). Under an
+    # array-of-struct schema ``from_json`` reads a lone object as a
+    # one-element array, so the flat variants need no case of their own.
+    items = F.col("_items")
+
+    def _every_item_has(*fields: str) -> Column:
+        return (F.size(items) > 0) & F.forall(
+            items, lambda x: reduce(and_, [x[f].isNotNull() for f in fields])
         )
-        # `data` payload, extracted as raw JSON text first …
-        .withColumn("data_json", F.get_json_object(raw, "$.data"))
-        # … then typed per union variant (superset struct, SURVEY §1.2).
-        # Flat variants are normalized to 1-element arrays so downstream
-        # sees one shape per variant.
-        .withColumn(
-            "data_mint",
-            F.when(is_mint_arr, mint_arr).when(
-                ~is_tx_arr & is_mint_flat, F.array(mint_flat)
-            ),
+
+    is_mint = _every_item_has("owner_id", "token_ids")
+    is_transfer = ~is_mint & _every_item_has(
+        "old_owner_id", "new_owner_id", "token_ids"
+    )
+    return (
+        parsed.withColumn(
+            "_items", F.from_json("data_json", ArrayType(NEP171_ITEM_SCHEMA))
         )
+        .withColumn("data_mint", F.when(is_mint, _typed(items, NEP171_MINT_SCHEMA)))
         .withColumn(
             "data_transfer",
-            F.when(~is_mint_arr & is_tx_arr, tx_arr).when(
-                ~is_mint_arr & ~is_mint_flat & is_tx_flat, F.array(tx_flat)
-            ),
+            F.when(is_transfer, _typed(items, NEP171_TRANSFER_SCHEMA)),
         )
-        .withColumn("standard", F.col("_envelope.standard"))
-        .withColumn("version", F.col("_envelope.version"))
-        .withColumn("event", F.col("_envelope.event"))
-        .withColumn("event_json", raw)
-        .drop("_envelope", "_raw_event_json")
+        .drop("_items")
     )
-    return df
 
 
 def field_is_valid(c: Column) -> Column:

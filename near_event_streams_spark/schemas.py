@@ -7,9 +7,11 @@ a production path (SURVEY §1.3).
 
 Untagged unions (``EventData``, ``Nep171Data`` — ``src/event_types.rs:77-91``)
 have no Spark equivalent; we model them as a *superset struct*: typed NEP-171
-``mint`` / ``transfer`` arrays plus a raw-JSON fallback string. A ``from_json``
-parse that matches neither typed shape leaves the typed columns null and the
-raw string retained — mirroring the reference's ``Generic(Value)`` variant.
+``mint`` / ``transfer`` arrays plus a raw-JSON fallback string. The envelope
+parse keeps ``data`` as JSON text, which is parsed once more under the
+superset item schema; a payload that matches neither typed shape leaves the
+typed columns null and the raw string retained — mirroring the reference's
+``Generic(Value)`` variant.
 
 All ``u64`` fields (block heights, nanosecond timestamps, shard ids) map to
 ``LongType``: NEAR heights and ns-timestamps fit in i64 until ~year 2262;
@@ -109,14 +111,22 @@ NEP171_TRANSFER_SCHEMA = StructType(
     ]
 )
 
-# Typed parse target for the event JSON. ``data`` is intentionally parsed
-# twice from the raw log line: once as a mint-shaped array, once as a
-# transfer-shaped array; whichever matches is kept (see operators/extract.py).
+# Superset of both NEP-171 item shapes: the payload is parsed once under
+# ``ArrayType(NEP171_ITEM_SCHEMA)`` and each variant is projected from it
+# (see operators/extract.py).
+NEP171_ITEM_SCHEMA = StructType(
+    list({f.name: f for f in [*NEP171_MINT_SCHEMA, *NEP171_TRANSFER_SCHEMA]}.values())
+)
+
+# Typed parse target for the event JSON. ``data`` is a string field: for a
+# non-string value ``from_json`` keeps the value's compact JSON text, the
+# ``Generic(Value)`` passthrough, which the NEP-171 parse then types.
 EVENT_ENVELOPE_SCHEMA = StructType(
     [
         StructField("standard", StringType()),
         StructField("version", StringType()),
         StructField("event", StringType()),
+        StructField("data", StringType()),
     ]
 )
 

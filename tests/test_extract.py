@@ -1,5 +1,7 @@
 """Extraction-path parity tests (SURVEY §2.1 ops 3-7, §5 strategy)."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from near_event_streams_spark.operators.extract import (
@@ -7,6 +9,8 @@ from near_event_streams_spark.operators.extract import (
     parse_events,
     split_valid,
 )
+from near_event_streams_spark.operators.routing import serialize_event
+from near_event_streams_spark.schemas import EMIT_INFO_SCHEMA
 from near_event_streams_spark.sources.streamer import read_messages_json
 
 
@@ -116,3 +120,114 @@ def test_emit_info_provenance(spark, fixture_messages_path):
     assert e["block_timestamp"] == 1_700_000_000_000_000_000
     assert e["shard_id"] == 0
     assert e["contract_account_id"] == "nft.contract-b.near"
+
+
+def _plan_nodes(df):
+    """(node name, node line) for each operator of the optimized plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    nodes = []
+    for line in plan.splitlines():
+        body = re.sub(r"^[\s:|+\-]*", "", line)
+        if body:
+            nodes.append((body.split(" ", 1)[0], body))
+    return nodes
+
+
+def test_event_line_parsed_once(spark, fixture_messages_path):
+    """The envelope is parsed once per log line, behind a Generate the
+    validity filters cannot be pushed under: no parse in any Filter, no
+    second ``get_json_object`` pass for ``data``."""
+    spark.catalog.clearCache()
+    for frame in _extract(spark, fixture_messages_path):
+        nodes = _plan_nodes(frame)
+        for name, body in nodes:
+            if name == "Filter":
+                assert "from_json" not in body, body
+                assert "get_json_object" not in body, body
+        plan = "\n".join(body for _, body in nodes)
+        assert "get_json_object" not in plan
+        assert plan.count("from_json(StructField(standard,") == 1, plan
+
+
+# Payloads that take each route through serde's untagged-union order
+# (src/event_types.rs:77-91): value expected after ``"data":``, or None
+# for a parse error.
+_UNION_CASES = [
+    ("[]", "[]"),
+    ("{}", "{}"),
+    ("[1,2]", "[1,2]"),
+    ("12.500", "12.5"),
+    ("true", "true"),
+    # flat mint / flat transfer → typed one-element arrays
+    (
+        '{"owner_id":"a.near","token_ids":["1"]}',
+        '[{"owner_id":"a.near","token_ids":["1"]}]',
+    ),
+    (
+        '{"old_owner_id":"a.near","new_owner_id":"b.near",'
+        '"token_ids":["1"],"memo":"m"}',
+        '[{"old_owner_id":"a.near","new_owner_id":"b.near",'
+        '"token_ids":["1"],"memo":"m"}]',
+    ),
+    # mint and transfer fields together: mint is declared first
+    (
+        '{"owner_id":"o.near","old_owner_id":"a.near",'
+        '"new_owner_id":"b.near","token_ids":["1"]}',
+        '[{"owner_id":"o.near","token_ids":["1"]}]',
+    ),
+    # mixed and partially valid arrays match no typed variant
+    (
+        '[{"owner_id":"o.near","token_ids":["1"]},'
+        '{"old_owner_id":"a.near","new_owner_id":"b.near","token_ids":["2"]}]',
+        '[{"owner_id":"o.near","token_ids":["1"]},'
+        '{"old_owner_id":"a.near","new_owner_id":"b.near","token_ids":["2"]}]',
+    ),
+    (
+        '[{"owner_id":"o.near","token_ids":["1"]},{"owner_id":"p.near"}]',
+        '[{"owner_id":"o.near","token_ids":["1"]},{"owner_id":"p.near"}]',
+    ),
+    (
+        '{"owner_id":"a","token_ids":"1"}',
+        '{"owner_id":"a","token_ids":"1"}',
+    ),
+    # generic payloads keep insertion order, compacted
+    (
+        '{"pool_id": 7, "amounts": [{"x": 1.50, "y": [true, null]}], '
+        '"z": {"k": "v"}}',
+        '{"pool_id":7,"amounts":[{"x":1.5,"y":[true,null]}],"z":{"k":"v"}}',
+    ),
+    ("null", None),
+]
+
+
+def test_untagged_union_serialization(spark):
+    logs = spark.createDataFrame(
+        [
+            (
+                i,
+                'EVENT_JSON:{"standard":"nep171","version":"1.0.0",'
+                f'"event":"e{i}","data":{payload}}}',
+            )
+            for i, (payload, _) in enumerate(_UNION_CASES)
+        ],
+        "i int, log string",
+    )
+    ok, rejected = split_valid(parse_events(logs))
+    got = {
+        r["i"]: r["value"]
+        for r in ok.withColumn(
+            "emit_info", F.lit(None).cast(EMIT_INFO_SCHEMA)
+        )
+        .select("i", serialize_event().alias("value"))
+        .collect()
+    }
+    rejects = {r["i"]: r["reject_reason"] for r in rejected.collect()}
+    for i, (payload, data) in enumerate(_UNION_CASES):
+        if data is None:
+            assert i not in got and rejects.get(i) == "parse_error", payload
+        else:
+            assert got.get(i) == (
+                '{"standard":"nep171","version":"1.0.0",'
+                f'"event":"e{i}","data":{data}}}'
+            ), payload
+    assert set(rejects) == {len(_UNION_CASES) - 1}

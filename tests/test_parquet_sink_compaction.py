@@ -15,20 +15,25 @@ import glob
 from pyspark.sql import functions as F
 
 from near_event_streams_spark.sinks.parquet_sink import (
+    _hadoop_fs,
     compact_batch_dirs_inplace,
     compact_batches,
     zorder_key,
 )
 
 
-def _write_batches(spark, out, sizes):
-    """One batch_id dir per entry; entry = rows in that batch."""
+def _write_batches(spark, out, sizes, noise=False):
+    """One batch_id dir per entry; entry = rows in that batch. ``noise``
+    adds a per-row sha256 column, which parquet cannot compress away."""
     for bid, n in sizes.items():
+        k = F.col("id") + bid * 1_000_000
+        extra = [F.sha2(k.cast("string"), 256).alias("noise")] if noise else []
         (
             spark.range(n)
             .select(
-                (F.col("id") + bid * 1_000_000).alias("k"),
+                k.alias("k"),
                 F.lit("x" * 64).alias("pad"),
+                *extra,
                 F.lit(bid).alias("batch_id"),
             )
             .write.mode("append")
@@ -41,11 +46,20 @@ def test_inplace_fold_skips_already_compacted_dirs(spark, tmp_path):
     """A dir at/above target_file_bytes must NOT be re-read and
     re-written by later cycles — only the new small dirs merge."""
     out = str(tmp_path / "corpus")
-    _write_batches(spark, out, {0: 2000, 1: 5, 2: 5, 3: 5})
-    # batch 0 (2000 padded rows) is well above a 20 KB target; 1 and 2
-    # are tiny and closed; 3 is the open max batch
+    target = 20 * 1024
+    _write_batches(spark, out, {0: 2000, 1: 5, 2: 5, 3: 5}, noise=True)
+    # batch 0 (2000 rows of 64 hex chars each) is well above a 20 KB
+    # target; 1 and 2 are tiny and closed; 3 is the open max batch.
+    # Measured the way the fold measures it.
+    fs, mk_path = _hadoop_fs(spark, out)
+    on_disk = {
+        bid: fs.getContentSummary(mk_path(f"{out}/batch_id={bid}")).getLength()
+        for bid in range(4)
+    }
+    assert on_disk[0] >= target, on_disk
+    assert all(on_disk[bid] < target for bid in (1, 2, 3)), on_disk
     n_merged, _ = compact_batch_dirs_inplace(
-        spark, out, target_file_bytes=20 * 1024
+        spark, out, target_file_bytes=target
     )
     assert n_merged == 2  # only batches 1 and 2 — 0 skipped, 3 open
     dirs = sorted(
@@ -56,7 +70,7 @@ def test_inplace_fold_skips_already_compacted_dirs(spark, tmp_path):
     assert total == 2015  # nothing lost, nothing duplicated
     # a second cycle finds <2 small closed dirs -> no-op
     assert compact_batch_dirs_inplace(
-        spark, out, target_file_bytes=20 * 1024
+        spark, out, target_file_bytes=target
     ) == (0, 0)
 
 
