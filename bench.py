@@ -774,26 +774,9 @@ def main() -> None:
     total = round(total + guard["total_delta"], 3)
     heavy_total = round(heavy_total + guard["heavy_delta"], 3)
 
-    # Streaming-mode throughput for the parity layer (extract →
-    # validate → route as a real micro-batch stream; bench_streaming.py
-    # is also runnable standalone). The analytics numbers above answer
-    # "how fast are the queries"; this answers the reference's own
-    # question — blocks/s sustained (stats.rs:27-69) vs the ~1 block/s
-    # mainnet production bar in BASELINE.md.
-    import bench_streaming
-
-    streaming = bench_streaming.run(spark, SF_DIR)
-    print(
-        f"# streaming catch-up: {streaming['catchup']['blocks_per_sec']}"
-        f" blocks/s ({streaming['catchup']['events_per_sec']} events/s),"
-        f" paced p50={streaming['paced']['batch_p50_ms']}ms"
-        f" p95={streaming['paced']['batch_p95_ms']}ms",
-        file=sys.stderr,
-    )
-
     # Full per-query detail (dispersion bands, steady-run counts — 3
-    # for every query incl. the heavy tier since r13 — cold totals,
-    # and the streaming section) goes to a side file committed with the
+    # for every query incl. the heavy tier since r13 — cold totals)
+    # goes to a side file committed with the
     # round. The FINAL stdout line must stay under the driver's
     # 2,000-byte tail capture (it parses only the last JSON line of
     # stdout; rounds 7-8 outgrew it → "parsed": null), so it carries
@@ -835,7 +818,6 @@ def main() -> None:
         "guard_controls": guard["controls"],
         "steady_runs": {name: 3 for name, _ in HEADLINE},
         "cold_total": round(cold_total, 3),
-        "streaming": streaming,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     detail_path = os.path.join(

@@ -1,9 +1,11 @@
 """Pipeline configuration — parity with the reference's CLI + TOML config.
 
-Field-for-field mirror of ``NesConfig`` / ``RunArgs``
+Field-for-field mirror of ``NesConfig``
 (reference: ``src/configs.rs:148-186``, sample keys ``nes.toml.sample:1-17``),
 loaded from ``{home}/nes.toml`` with the ``[kafka]`` table passed through
-verbatim to the Kafka client options.
+verbatim to the Kafka client options. The run args (``RunArgs``,
+``configs.rs:71-82``) are CLI flags (``cli.py``); ``load`` ignores keys it
+does not know, so a ``nes.toml`` that still carries them loads.
 """
 
 from __future__ import annotations
@@ -27,10 +29,6 @@ class NesConfig:
     stats_enabled: bool = True
     # [kafka] table, verbatim client config (configs.rs:180-186)
     kafka: dict[str, str] = field(default_factory=dict)
-    # run-args parity (configs.rs:71-82)
-    concurrency: int = 1
-    sync_mode: str = "from-interruption"  # | from-latest | from-block:<h>
-    checkpoint_location: str | None = None
 
     @classmethod
     def load(cls, home: str) -> "NesConfig":

@@ -67,70 +67,3 @@ def stream_messages_kafka(
         ).alias("msg")
     ).select("msg.*")
 
-
-def events_to_streamer_messages(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    events_per_block: int = 50,
-    n_files: int = 40,
-) -> int:
-    """Replay adapter: re-encode the ``events`` table as a JSON-lines
-    StreamerMessage corpus (one block per ``events_per_block`` events,
-    each event an ``EVENT_JSON:`` log line under a single shard) so the
-    PARITY pipeline — extract → validate → route — can be driven as a
-    real file-source micro-batch stream at testdata scale. Written as
-    ``n_files`` JSON files so ``maxFilesPerTrigger`` paces the stream
-    into a controllable number of micro-batches.
-
-    This is the throughput-bench input (the reference's own stats task
-    reports blocks/s over exactly this shape — ``src/stats.rs:27-69``);
-    building it IS a Spark job: group into blocks, ONE shuffle on the
-    bounded block-height key, nested-struct assembly JVM-side.
-
-    Returns the number of blocks written."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    log_line = F.format_string(
-        'EVENT_JSON:{"standard":"app","version":"1.0.0","event":"%s",'
-        '"data":{"event_id":%d,"user_id":%d,"value":%s}}',
-        F.col("event_type"),
-        F.col("event_id"),
-        F.col("user_id"),
-        F.col("value"),
-    )
-    outcome = F.struct(
-        F.struct(
-            F.format_string("r%d", F.col("event_id")).alias("receipt_id"),
-            F.format_string("app-%s.near", F.col("event_type")).alias(
-                "receiver_id"
-            ),
-        ).alias("receipt"),
-        F.struct(
-            F.struct(F.array(log_line).alias("logs")).alias("outcome")
-        ).alias("execution_outcome"),
-    )
-    blocks = (
-        ev.groupBy(
-            F.expr(f"event_id div {events_per_block}").alias("height")
-        )
-        .agg(
-            F.collect_list(outcome).alias("outs"),
-            (F.min(F.unix_micros(F.col("ts").cast("timestamp"))) * 1000)
-            .alias("ts_ns"),
-        )
-        .select(
-            F.struct(
-                F.struct(
-                    F.col("height"), F.col("ts_ns").alias("timestamp")
-                ).alias("header")
-            ).alias("block"),
-            F.array(
-                F.struct(
-                    F.lit(0).cast("long").alias("shard_id"),
-                    F.col("outs").alias("receipt_execution_outcomes"),
-                )
-            ).alias("shards"),
-        )
-    )
-    blocks.repartition(n_files).write.mode("overwrite").json(out_dir)
-    return spark.read.schema(STREAMER_MESSAGE_SCHEMA).json(out_dir).count()

@@ -52,6 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 from near_event_streams_spark.operators import similarity
 from near_event_streams_spark.session import partition_overwrite_mode
 from near_event_streams_spark.streaming import ingest as ingest_mod
+from near_event_streams_spark.streaming.job import run_batches
 
 
 def seed_ann_index(
@@ -337,26 +338,22 @@ def start_ann_index_ingest(
     from the checkpoint resumes exactly where a kill left off, with
     :func:`similarity.ivfpq_recover` healing any mid-compact death at
     the top of the next batch."""
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            ann_index_ingest_sink(
-                index_path,
-                lake_dir,
-                min_appended_frac=min_appended_frac,
-                opq=opq,
-                id_col=id_col,
-                vec_col=vec_col,
-                compact_seed=compact_seed,
-                rescale_cells=rescale_cells,
-                lake_compact_every=lake_compact_every,
-                compact_check_every=compact_check_every,
-                drift_psi_threshold=drift_psi_threshold,
-                retain_versions=retain_versions,
-            )
-        )
+    return run_batches(
+        stream_df,
+        checkpoint_dir,
+        ann_index_ingest_sink(
+            index_path,
+            lake_dir,
+            min_appended_frac=min_appended_frac,
+            opq=opq,
+            id_col=id_col,
+            vec_col=vec_col,
+            compact_seed=compact_seed,
+            rescale_cells=rescale_cells,
+            lake_compact_every=lake_compact_every,
+            compact_check_every=compact_check_every,
+            drift_psi_threshold=drift_psi_threshold,
+            retain_versions=retain_versions,
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

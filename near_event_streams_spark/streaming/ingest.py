@@ -45,6 +45,7 @@ from near_event_streams_spark.operators import dedup
 from near_event_streams_spark.operators.dedup import normalized_text
 from near_event_streams_spark.session import partition_overwrite_mode
 from near_event_streams_spark.streaming import upsert
+from near_event_streams_spark.streaming.job import run_batches
 
 
 def fingerprint_col(text_col: str = "text"):
@@ -246,14 +247,7 @@ def start_incremental_dedup_ingest(
         finally:
             survivors.unpersist()
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_df, checkpoint_dir, _sink, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -652,14 +646,7 @@ def start_incremental_neardup_ingest(
             for df in cached:
                 df.unpersist()
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_df, checkpoint_dir, _sink, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -974,11 +961,4 @@ def start_incremental_image_ingest(
             payload_col=payload_col,
         )
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_df, checkpoint_dir, _sink, available_now)

@@ -26,7 +26,9 @@ Semantics parity:
   concurrent group sends (``src/events.rs:127-142``).
 * rejected records (parse/validation failures) go to a side sink instead
   of only a warn log — a strict superset of the reference's behavior
-  (``src/events.rs:325-344``).
+  (``src/events.rs:325-344``). ``start_rejected_sink`` runs through the
+  same ``run_batches`` with the same ``batch_id=N`` overwrite, so both
+  outputs are replay-safe in the same way.
 * the ``concurrency`` knob maps to ``maxFilesPerTrigger`` /
   ``maxOffsetsPerTrigger`` pacing (``src/configs.rs:79-81``).
 """
@@ -154,8 +156,9 @@ def start_rejected_sink(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Side stream of rejected rows (reason + raw log) — the warn-and-drop
-    path made durable."""
-    _, rejected = build_routed_stream(messages, config)
+    path made durable, with the same replay-safe ``out_dir/batch_id=N``
+    overwrite as :func:`start_to_parquet`."""
+    _, rejected = extract_events(messages)
     keep = rejected.select(
         "block_height",
         "shard_id",
@@ -164,15 +167,11 @@ def start_rejected_sink(
         "log",
         "reject_reason",
     )
-    writer = (
-        keep.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    def _write(batch: DataFrame, batch_id: int) -> None:
+        batch.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+
+    return run_batches(keep, checkpoint_dir, _write, available_now)
 
 
 # --------------------------------------------------------------------------

@@ -37,13 +37,6 @@ class BlockStatsListener(StreamingQueryListener):
         self.last_height_provider = last_height_provider
         self.emit = emit or log.info
         self.lines: list[str] = []
-        # structured per-batch record for throughput benches: the same
-        # numbers the log line renders, kept machine-readable
-        self.progress: list[dict] = []
-        # QueryIdleEvent count — since Spark 3.4 an exhausted source
-        # under a continuous trigger raises idle events instead of
-        # zero-row progress; benches use this as the drain signal
-        self.idle_events: int = 0
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
         self.emit(f"stream started id={event.id}")
@@ -51,15 +44,6 @@ class BlockStatsListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
         bps = p.inputRowsPerSecond or 0.0
-        self.progress.append(
-            {
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "input_rows_per_second": bps,
-                "process_rows_per_second": p.processedRowsPerSecond or 0.0,
-                "trigger_ms": (p.durationMs or {}).get("triggerExecution"),
-            }
-        )
         line = (
             f"Stats: {bps:.2f} bps, {p.numInputRows} blocks in batch "
             f"{p.batchId}"
@@ -73,6 +57,3 @@ class BlockStatsListener(StreamingQueryListener):
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         self.emit(f"stream terminated id={event.id}")
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        self.idle_events += 1

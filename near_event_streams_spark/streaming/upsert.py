@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from near_event_streams_spark.streaming.job import run_batches
+
 _BUCKET = "_bucket"
 _LATEST = "_LATEST"
 _META = "_META"
@@ -488,11 +490,4 @@ def start_upsert_stream(
         if vacuum_retain is not None:
             vacuum(path, vacuum_retain)
 
-    writer = (
-        stream_df.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_df, checkpoint_dir, _sink, available_now)

@@ -6,6 +6,7 @@ import json
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from near_event_streams_spark.config import NesConfig
@@ -306,7 +307,26 @@ def test_stats_listener_reports_throughput(
         spark.streams.removeListener(listener)
 
 
-def test_idempotent_sink_replay_safe(spark, fixture_messages_path, tmp_path):
+@pytest.mark.parametrize(
+    "start, cols, n_rows",
+    [
+        pytest.param(
+            job.start_to_parquet,
+            ["topic", "key", "value", "block_height"],
+            16,  # 2 files x 4 valid events x 2 topics
+            id="start_to_parquet",
+        ),
+        pytest.param(
+            job.start_rejected_sink,
+            ["block_height", "receipt_id", "log", "reject_reason"],
+            4,  # 2 files x (1 parse + 1 validation reject)
+            id="start_rejected_sink",
+        ),
+    ],
+)
+def test_idempotent_sink_replay_safe(
+    spark, fixture_messages_path, tmp_path, start, cols, n_rows
+):
     """A crash after a micro-batch's write and before its commit (the
     at-least-once failure mode) replays that batch on restart; the
     per-batch partition overwrite must make the replay rewrite, not
@@ -325,7 +345,7 @@ def test_idempotent_sink_replay_safe(spark, fixture_messages_path, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     def run():
-        job.start_to_parquet(
+        start(
             stream_messages_json(spark, str(src), max_files_per_trigger=1),
             NesConfig(),
             out,
@@ -334,12 +354,12 @@ def test_idempotent_sink_replay_safe(spark, fixture_messages_path, tmp_path):
 
     def rows():
         return Counter(
-            tuple(r) for r in spark.read.parquet(out).drop("batch_id").collect()
+            tuple(r) for r in spark.read.parquet(out).select(*cols).collect()
         )
 
     run()
     first = rows()
-    assert sum(first.values()) == 16  # 2 files x 4 valid events x 2 topics
+    assert sum(first.values()) == n_rows
 
     # crash between batch 1's write and its commit: its offsets are
     # logged, its output is written, its commit marker (and checksum) lost
@@ -352,6 +372,22 @@ def test_idempotent_sink_replay_safe(spark, fixture_messages_path, tmp_path):
     _shutil.rmtree(ckpt)
     run()
     assert rows() == first
+
+
+def test_one_stream_runner():
+    """Every stream in the package starts through ``job.run_batches``:
+    ``writeStream`` appears exactly once in the package source."""
+    import pathlib
+
+    pkg = pathlib.Path(job.__file__).parents[1]
+    hits = [
+        (str(path.relative_to(pkg)), n)
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "writeStream" in line
+    ]
+    assert len(hits) == 1, hits
+    assert hits[0][0] == "streaming/job.py", hits
 
 
 def test_inplace_compaction_preserves_rows_and_replay_safety(
