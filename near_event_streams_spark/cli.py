@@ -11,7 +11,9 @@ Spark mapping:
   source — a JSONL block directory (``--source-dir``, the relay/fixture
   form) or Kafka (when the loaded ``nes.toml`` has a ``[kafka]`` table
   and ``--source kafka``) — and writes routed records to a parquet dir
-  or Kafka.
+  or Kafka. Parse and validation rejects go to ``{home}/rejected``
+  through a second query with its own checkpoint,
+  ``{checkpoint}-rejected``, on the routed query's trigger.
 * sync modes (``configs.rs:101-117``):
   - ``sync-from-interruption`` → reuse ``{home}/checkpoint`` (restart
     continues from the last committed micro-batch);
@@ -79,7 +81,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--timeout",
         type=float,
         default=None,
-        help="awaitTermination timeout in seconds (default: forever)",
+        help="awaitTermination timeout in seconds, per query "
+        "(default: forever)",
     )
     sync = run.add_subparsers(dest="sync_mode", required=True)
     sync.add_parser("sync-from-interruption")
@@ -160,10 +163,21 @@ def cmd_run(args: argparse.Namespace) -> int:
             print("--out-dir required for the parquet sink", file=sys.stderr)
             return 2
         query = job.start_to_parquet(messages, config, args.out_dir, checkpoint)
+    rejects = job.start_rejected_sink(
+        messages,
+        config,
+        os.path.join(args.home_dir, "rejected"),
+        checkpoint + "-rejected",
+        available_now=args.sink == "parquet",
+    )
 
-    query.awaitTermination(args.timeout)
-    if args.timeout is not None:
-        query.stop()
+    queries = [query, rejects]
+    try:
+        for q in queries:
+            q.awaitTermination(args.timeout)
+    finally:
+        for q in queries:
+            q.stop()
     return 0
 
 

@@ -28,15 +28,18 @@ Pipeline (each step cites the reference behavior it mirrors):
      pattern ``src/event_types.rs:9-10``)
 5. stamp ``emit_info`` provenance (``src/events.rs:304-310, 346-349``)
 
-At 100 TB scale every step here is a narrow map — no shuffle is introduced
-until routing repartitions by key (see routing.py). The explodes multiply
-rows but never exchange them.
+At 100 TB scale every step here is a narrow map. No shuffle is introduced
+before the sink, and only the Kafka sink repartitions by key (see
+routing.py). The explodes multiply rows but never exchange them.
+
+Every projection is SQL text for ``selectExpr``/``filter``, built once at
+import from the ``schemas.py`` types (``simpleString()``). In classic
+PySpark each DSL ``Column`` call is several py4j round trips, paid at
+every query start; from text, building the routed stream takes about a
+hundred (``tests/test_routing.py`` gates it).
 """
 
 from __future__ import annotations
-
-from functools import reduce
-from operator import and_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -52,6 +55,12 @@ from near_event_streams_spark.schemas import (
 )
 
 
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal. SQL literals take backslash
+    escapes, so a regex's ``\\s`` must reach the parser as ``\\\\s``."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def explode_to_logs(messages: DataFrame) -> DataFrame:
     """3-level unnest: blocks → shards → outcomes → log lines.
 
@@ -60,24 +69,24 @@ def explode_to_logs(messages: DataFrame) -> DataFrame:
     same values through its call stack, ``src/events.rs:104-118, 297-310``).
     """
     return (
-        messages.select(
-            F.col("block.header.height").alias("block_height"),
-            F.col("block.header.timestamp").alias("block_timestamp"),
-            F.explode("shards").alias("shard"),
+        messages.selectExpr(
+            "block.header.height AS block_height",
+            "block.header.timestamp AS block_timestamp",
+            "explode(shards) AS shard",
         )
-        .select(
+        .selectExpr(
             "block_height",
             "block_timestamp",
-            F.col("shard.shard_id").alias("shard_id"),
-            F.explode("shard.receipt_execution_outcomes").alias("outcome"),
+            "shard.shard_id AS shard_id",
+            "explode(shard.receipt_execution_outcomes) AS outcome",
         )
-        .select(
+        .selectExpr(
             "block_height",
             "block_timestamp",
             "shard_id",
-            F.col("outcome.receipt.receipt_id").alias("receipt_id"),
-            F.col("outcome.receipt.receiver_id").alias("contract_account_id"),
-            F.explode("outcome.execution_outcome.outcome.logs").alias("log"),
+            "outcome.receipt.receipt_id AS receipt_id",
+            "outcome.receipt.receiver_id AS contract_account_id",
+            "explode(outcome.execution_outcome.outcome.logs) AS log",
         )
     )
 
@@ -101,11 +110,34 @@ def raw_event_json(log: Column) -> Column:
     return F.regexp_replace(log, _STRIP_PATTERN, "")
 
 
-def _typed(items: Column, schema: StructType) -> Column:
-    """Superset items projected back to one NEP-171 variant's item shape."""
-    return F.transform(
-        items, lambda x: F.struct(*[x[f.name].alias(f.name) for f in schema])
-    ).cast(ArrayType(schema))
+def _every_item_has(*fields: str) -> str:
+    checks = " AND ".join(f"x.{f} IS NOT NULL" for f in fields)
+    return f"(size(_items) > 0 AND forall(_items, x -> {checks}))"
+
+
+def _typed(schema: StructType) -> str:
+    """Superset ``_items`` projected back to one NEP-171 variant's item
+    shape."""
+    fields = ", ".join(f"x.{f.name} AS {f.name}" for f in schema)
+    return (
+        f"CAST(transform(_items, x -> struct({fields})) "
+        f"AS {ArrayType(schema).simpleString()})"
+    )
+
+
+# Untagged-union matching (src/event_types.rs:84-91). serde tries
+# Mint(Vec) → Transfer(Vec) → MintFlat → TransferFlat, and a variant
+# matches only when its required fields are present (owner_id+token_ids
+# for mint; old/new_owner_id+token_ids for transfer). Under an
+# array-of-struct schema ``from_json`` reads a lone object as a
+# one-element array, so the flat variants need no case of their own.
+_IS_MINT = _every_item_has("owner_id", "token_ids")
+_IS_TRANSFER = (
+    f"(NOT {_IS_MINT}) AND "
+    + _every_item_has("old_owner_id", "new_owner_id", "token_ids")
+)
+_ENVELOPE = sql_string(EVENT_ENVELOPE_SCHEMA.simpleString())
+_ITEMS = sql_string(ArrayType(NEP171_ITEM_SCHEMA).simpleString())
 
 
 def parse_events(logs: DataFrame, log_col: str = "log") -> DataFrame:
@@ -119,41 +151,27 @@ def parse_events(logs: DataFrame, log_col: str = "log") -> DataFrame:
       ``data_mint, data_transfer`` — typed arrays when the payload matches
         that NEP-171 shape (``src/event_types.rs:84-91`` untagged union)
     """
-    envelope = F.from_json(F.col("event_json"), EVENT_ENVELOPE_SCHEMA)
-    parsed = (
-        logs.filter(event_json_filter(F.col(log_col)))
-        .withColumn("event_json", raw_event_json(F.col(log_col)))
+    return (
+        logs.filter(f"{log_col} RLIKE {sql_string(_PREFIX_PATTERN)}")
+        .selectExpr(
+            "*",
+            f"regexp_replace({log_col}, {sql_string(_STRIP_PATTERN)}, '') "
+            "AS event_json",
+        )
         # The barrier: a filter on generator output cannot move below the
         # Generate, so the envelope is parsed here once per line.
-        .select("*", F.inline(F.array(envelope)))
-        .withColumnRenamed("data", "data_json")
-    )
-
-    # Untagged-union matching (src/event_types.rs:84-91). serde tries
-    # Mint(Vec) → Transfer(Vec) → MintFlat → TransferFlat, and a variant
-    # matches only when its required fields are present (owner_id+token_ids
-    # for mint; old/new_owner_id+token_ids for transfer). Under an
-    # array-of-struct schema ``from_json`` reads a lone object as a
-    # one-element array, so the flat variants need no case of their own.
-    items = F.col("_items")
-
-    def _every_item_has(*fields: str) -> Column:
-        return (F.size(items) > 0) & F.forall(
-            items, lambda x: reduce(and_, [x[f].isNotNull() for f in fields])
+        .selectExpr(
+            "*",
+            f"inline(array(from_json(event_json, {_ENVELOPE}))) "
+            "AS (standard, version, event, data_json)",
         )
-
-    is_mint = _every_item_has("owner_id", "token_ids")
-    is_transfer = ~is_mint & _every_item_has(
-        "old_owner_id", "new_owner_id", "token_ids"
-    )
-    return (
-        parsed.withColumn(
-            "_items", F.from_json("data_json", ArrayType(NEP171_ITEM_SCHEMA))
-        )
-        .withColumn("data_mint", F.when(is_mint, _typed(items, NEP171_MINT_SCHEMA)))
-        .withColumn(
-            "data_transfer",
-            F.when(is_transfer, _typed(items, NEP171_TRANSFER_SCHEMA)),
+        .selectExpr("*", f"from_json(data_json, {_ITEMS}) AS _items")
+        .selectExpr(
+            "*",
+            f"CASE WHEN {_IS_MINT} THEN {_typed(NEP171_MINT_SCHEMA)} END "
+            "AS data_mint",
+            f"CASE WHEN {_IS_TRANSFER} THEN {_typed(NEP171_TRANSFER_SCHEMA)} "
+            "END AS data_transfer",
         )
         .drop("_items")
     )
@@ -164,6 +182,19 @@ def field_is_valid(c: Column) -> Column:
     return c.rlike(EVENT_FIELD_PATTERN)
 
 
+# NearEvent.data is a required serde field (src/event_types.rs:75-81): an
+# envelope with standard/version/event but no `data` member is a parse
+# error in the reference, not a valid event with a null payload.
+_PARSE_FAILED = (
+    "(standard IS NULL OR version IS NULL OR event IS NULL "
+    "OR data_json IS NULL)"
+)
+_FIELD_PATTERN = sql_string(EVENT_FIELD_PATTERN)
+_INVALID = (
+    f"(NOT (standard RLIKE {_FIELD_PATTERN} AND event RLIKE {_FIELD_PATTERN}))"
+)
+
+
 def split_valid(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split parsed rows into (valid events, rejected rows with reason).
 
@@ -172,39 +203,21 @@ def split_valid(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     (``src/events.rs:322-334``). The reference logs and drops; we keep the
     rejects as a side stream so operators/sinks can count or persist them.
     """
-    # NearEvent.data is a required serde field (src/event_types.rs:75-81):
-    # an envelope with standard/version/event but no `data` member is a
-    # parse error in the reference, not a valid event with a null payload.
-    parse_failed = (
-        F.col("standard").isNull()
-        | F.col("version").isNull()
-        | F.col("event").isNull()
-        | F.col("data_json").isNull()
+    rejected = parsed.filter(f"{_PARSE_FAILED} OR {_INVALID}").selectExpr(
+        "*",
+        f"CASE WHEN {_PARSE_FAILED} THEN 'parse_error' "
+        "ELSE 'validation_error' END AS reject_reason",
     )
-    invalid = ~(
-        field_is_valid(F.col("standard")) & field_is_valid(F.col("event"))
-    )
-    rejected = parsed.filter(parse_failed | invalid).withColumn(
-        "reject_reason",
-        F.when(parse_failed, F.lit("parse_error")).otherwise(
-            F.lit("validation_error")
-        ),
-    )
-    ok = parsed.filter(~parse_failed & ~invalid)
+    ok = parsed.filter(f"(NOT {_PARSE_FAILED}) AND (NOT {_INVALID})")
     return ok, rejected
 
 
 def with_emit_info(events: DataFrame) -> DataFrame:
     """Stamp provenance (reference: src/events.rs:304-310, 346-349)."""
-    return events.withColumn(
-        "emit_info",
-        F.struct(
-            F.col("receipt_id"),
-            F.col("block_timestamp"),
-            F.col("block_height"),
-            F.col("shard_id"),
-            F.col("contract_account_id"),
-        ),
+    return events.selectExpr(
+        "*",
+        "struct(receipt_id, block_timestamp, block_height, shard_id, "
+        "contract_account_id) AS emit_info",
     )
 
 

@@ -7,7 +7,7 @@ Maps the reference's run loop (``src/main.rs:111-141`` listen_blocks →
       → extract_events (explode×3, filter, parse, validate, emit_info)
       → whitelist/blacklist
       → routed_records (2-topic fan-out: one projection, one explode)
-      → run_batches: foreachBatch per-key ordering + sink write
+      → run_batches: foreachBatch per-target layout + sink write
 
 Semantics parity:
 
@@ -19,11 +19,15 @@ Semantics parity:
   (``src/events.rs:89-97``); the parquet sink overwrites its own
   ``batch_id=N`` directory, so a replay rewrites identical data and the
   file output is effectively exactly-once.
-* per-contract ordering inside each micro-batch via
-  ``repartition(key) + sortWithinPartitions`` (done in ``foreachBatch``
-  where the batch is a static frame — streaming frames cannot sort);
+* the batch layout is chosen per target, in ``foreachBatch`` where the
+  batch is a static frame (streaming frames cannot sort). Per-contract
+  order is a contract of the Kafka producer (``src/events.rs:119-193``),
+  so ``start_to_kafka`` shuffles by key and sorts (``ordered_for_sink``);
   cross-contract order is unconstrained, matching the reference's
-  concurrent group sends (``src/events.rs:127-142``).
+  concurrent group sends (``src/events.rs:127-142``). A parquet file needs
+  only a layout, so ``start_to_parquet`` sorts each batch within its
+  partitions by (key, block_height), with no exchange: no task takes a
+  hot key's whole share.
 * rejected records (parse/validation failures) go to a side sink instead
   of only a warn log — a strict superset of the reference's behavior
   (``src/events.rs:325-344``). ``start_rejected_sink`` runs through the
@@ -100,20 +104,21 @@ def start_to_parquet(
 ) -> StreamingQuery:
     """Run the pipeline into an effectively-once parquet sink.
 
-    Each micro-batch is put in per-key order and overwrites its own
-    ``out_dir/batch_id=N`` partition, so a replayed batch (foreachBatch
-    redelivery after a crash between write and commit) rewrites identical
-    data instead of appending duplicates. Exactly-once needs this
-    sink-side idempotence on top of the checkpointed source offsets. One
-    partition dir per micro-batch: readers prune on their own columns, so
-    the batch_id layer costs only directory fan-out (compact with
-    ``sinks.parquet_sink`` if batches are tiny).
+    Each micro-batch is sorted by (key, block_height) within its
+    partitions, with no shuffle, so every file is in key order. It
+    overwrites its own ``out_dir/batch_id=N`` partition, so a replayed
+    batch (foreachBatch redelivery after a crash between write and commit)
+    rewrites identical data instead of appending duplicates. Exactly-once
+    needs this sink-side idempotence on top of the checkpointed source
+    offsets. One partition dir per micro-batch: readers prune on their own
+    columns, so the batch_id layer costs only directory fan-out (compact
+    with ``sinks.parquet_sink`` if batches are tiny).
     """
     routed, _ = build_routed_stream(messages, config)
 
     def _write(batch: DataFrame, batch_id: int) -> None:
         (
-            ordered_for_sink(batch)
+            batch.sortWithinPartitions("key", "block_height")
             .write.mode("overwrite")
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )

@@ -44,6 +44,10 @@ def test_run_file_to_parquet(spark, tmp_path, fixture_messages_path):
     got = spark.read.parquet(str(out))
     # 4 valid events x 2 topics (same fixture as test_streaming)
     assert got.count() == 8
+    rejected = spark.read.parquet(str(home / "rejected"))
+    reasons = sorted(r["reject_reason"] for r in rejected.collect())
+    assert reasons == ["parse_error", "validation_error"]
+    assert (home / "checkpoint-rejected").is_dir()
 
 
 def test_run_sync_from_block_filters_height(

@@ -1,6 +1,7 @@
 """Routing parity tests (SURVEY §2.1 ops 8, 9, 12, 13)."""
 
 import json
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -14,7 +15,10 @@ from near_event_streams_spark.operators.routing import (
     routed_records,
     serialize_event,
 )
-from near_event_streams_spark.sources.streamer import read_messages_json
+from near_event_streams_spark.sources.streamer import (
+    read_messages_json,
+    stream_messages_json,
+)
 from near_event_streams_spark.streaming.job import build_routed_stream
 
 
@@ -30,7 +34,8 @@ def test_whitelist_empty_keeps_all(spark, fixture_messages_path):
 
 def test_whitelist_filters(spark, fixture_messages_path):
     ev = _events(spark, fixture_messages_path)
-    kept = apply_whitelist(ev, ["nft.contract-a.near"])
+    # a quote and a backslash must stay literal in the SQL IN list
+    kept = apply_whitelist(ev, ["nft.contract-a.near", "o'dd\\.near"])
     assert {
         r["emit_info"]["contract_account_id"] for r in kept.collect()
     } == {"nft.contract-a.near"}
@@ -38,10 +43,11 @@ def test_whitelist_filters(spark, fixture_messages_path):
 
 def test_blacklist_filters(spark, fixture_messages_path):
     ev = _events(spark, fixture_messages_path)
-    kept = apply_blacklist(ev, ["nft.contract-a.near"])
+    kept = apply_blacklist(ev, ["nft.contract-a.near", "o'dd\\.near"])
     assert "nft.contract-a.near" not in {
         r["emit_info"]["contract_account_id"] for r in kept.collect()
     }
+    assert kept.count() == ev.count() - 2
 
 
 def test_fanout_two_topics_per_event(spark, fixture_messages_path):
@@ -65,6 +71,28 @@ def test_routed_plan_scans_source_once(spark, fixture_messages_path):
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"\bFileScan\b", plan)) == 1, plan
     assert not re.search(r"\bUnion\b", plan), plan
+
+
+def test_routed_stream_builds_in_few_round_trips(
+    spark, fixture_messages_path, monkeypatch
+):
+    """The parity plan is built from SQL text: a query start costs about a
+    hundred py4j commands, not the ~1,800 of a per-``Column`` DSL build
+    (each ``F.col``/``F.when``/``.alias`` is several round trips)."""
+    from py4j.clientserver import ClientServerConnection
+
+    messages = stream_messages_json(spark, os.path.dirname(fixture_messages_path))
+    send = ClientServerConnection.send_command
+    sent = []
+
+    def counting(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build_routed_stream(messages, NesConfig())
+    monkeypatch.undo()
+    assert len(sent) <= 300, len(sent)
 
 
 def test_key_is_contract_account(spark, fixture_messages_path):

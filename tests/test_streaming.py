@@ -374,6 +374,77 @@ def test_idempotent_sink_replay_safe(
     assert rows() == first
 
 
+def test_sink_exchange_per_target(
+    spark, fixture_messages_path, tmp_path, monkeypatch
+):
+    """Per-key order is a Kafka-producer contract: only the Kafka sink
+    shuffles by key. The parquet sink sorts each batch within its
+    partitions, with no exchange, so every file it writes is in
+    (key, block_height) order."""
+    import glob
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    src = tmp_path / "blocks"
+    src.mkdir()
+    for i in range(2):
+        dst = src / f"blocks{i}.jsonl"
+        shutil.copy(fixture_messages_path, dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    plans = {"parquet": [], "kafka": []}
+
+    def plan(writer):
+        return writer._df._jdf.queryExecution().executedPlan().toString()
+
+    parquet, save = DataFrameWriter.parquet, DataFrameWriter.save
+
+    def parquet_recorded(self, path, *args, **kwargs):
+        plans["parquet"].append(plan(self))
+        return parquet(self, path, *args, **kwargs)
+
+    def save_recorded(self, *args, **kwargs):
+        plans["kafka"].append(plan(self))  # no broker: record, write nothing
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_recorded)
+    monkeypatch.setattr(DataFrameWriter, "save", save_recorded)
+    spark.catalog.clearCache()
+
+    out = tmp_path / "out"
+    job.start_to_parquet(
+        stream_messages_json(spark, str(src), max_files_per_trigger=1),
+        NesConfig(),
+        str(out),
+        str(tmp_path / "ckpt"),
+    ).awaitTermination(180)
+    assert len(plans["parquet"]) == 2
+    for p in plans["parquet"]:
+        assert "Exchange" not in p, p
+    files = glob.glob(str(out / "batch_id=*" / "*.parquet"))
+    assert files
+    for f in files:
+        rows = pq.read_table(f, columns=["key", "block_height"]).to_pylist()
+        keys = [(r["key"], r["block_height"]) for r in rows]
+        assert keys == sorted(keys), f
+
+    q = job.start_to_kafka(
+        stream_messages_json(spark, str(src)),
+        NesConfig(),
+        str(tmp_path / "ckpt-kafka"),
+        "localhost:9092",
+    )
+    try:
+        for _ in range(240):
+            if plans["kafka"] or not q.isActive:
+                break
+            time.sleep(0.25)
+    finally:
+        q.stop()
+    assert plans["kafka"], q.exception()
+    assert "hashpartitioning(key" in plans["kafka"][0], plans["kafka"][0]
+
+
 def test_one_stream_runner():
     """Every stream in the package starts through ``job.run_batches``:
     ``writeStream`` appears exactly once in the package source."""
