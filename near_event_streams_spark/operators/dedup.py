@@ -400,8 +400,9 @@ def containment_pairs(
     from candidate GENERATION — both the probe prefixes and, crucially,
     the full-set inverted index, whose hot rows are this operator's
     dominant skew cost (a df≈n/2 boilerplate shingle contributes ~n/2
-    index rows per occurrence stream; BENCH_scale's skew appendix
-    plants exactly that). Precision is untouched (survivors still
+    index rows per occurrence stream; the retired scale harness's skew
+    appendix planted exactly that, see ``git show
+    98af745:BENCH_scale.md``). Precision is untouched (survivors still
     verify on FULL shingle sets); recall loss is confined to pairs
     whose every probe-prefix witness is hot — and because the global
     prefix order is df-ASCENDING, hot shingles are the LAST thing a
@@ -528,7 +529,8 @@ def containment_lsh_pairs(
     """Approximate-candidate containment dedup — the LSH escape hatch
     for :func:`containment_pairs`, whose exact PPJoin must inverted-
     index the FULL contained side (its honest cost outlier at skewed
-    scale: 14-20x wall at 16-32x input, BENCH_scale.md).
+    scale: 14-20x wall at 16-32x input, ``git show
+    98af745:BENCH_scale.md``).
 
     Candidate generation uses the ONE-SIDED MinHash containment
     estimator instead of symmetric Jaccard banding: slot j of the

@@ -41,8 +41,7 @@ hundred (``tests/test_routing.py`` gates it).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StructType
 
 from near_event_streams_spark.schemas import (
@@ -97,17 +96,6 @@ def explode_to_logs(messages: DataFrame) -> DataFrame:
 _PREFIX_PATTERN = r"^\s*" + EVENT_JSON_PREFIX
 # Leading whitespace + prefix + whitespace, or trailing whitespace.
 _STRIP_PATTERN = _PREFIX_PATTERN + r"\s*|\s+$"
-
-
-def event_json_filter(log: Column) -> Column:
-    """``log.trim().starts_with("EVENT_JSON:")`` (src/events.rs:313-315)."""
-    return log.rlike(_PREFIX_PATTERN)
-
-
-def raw_event_json(log: Column) -> Column:
-    """``log.trim()[prefix.len()..].trim()`` (``src/events.rs:318-319``) as
-    one regexp pass over a line that passed :func:`event_json_filter`."""
-    return F.regexp_replace(log, _STRIP_PATTERN, "")
 
 
 def _every_item_has(*fields: str) -> str:
@@ -175,11 +163,6 @@ def parse_events(logs: DataFrame, log_col: str = "log") -> DataFrame:
         )
         .drop("_items")
     )
-
-
-def field_is_valid(c: Column) -> Column:
-    """Regex validation for ``standard``/``event`` (src/event_types.rs:9-10)."""
-    return c.rlike(EVENT_FIELD_PATTERN)
 
 
 # NearEvent.data is a required serde field (src/event_types.rs:75-81): an

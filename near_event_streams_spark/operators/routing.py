@@ -64,6 +64,7 @@ def apply_blacklist(events: DataFrame, blacklist: Sequence[str]) -> DataFrame:
     return events.filter(f"NOT ({_contract_in(blacklist)})")
 
 
+# Kafka message key (src/event_types.rs:26-35).
 _KEY = (
     "CASE WHEN emit_info IS NOT NULL "
     "THEN coalesce(emit_info.contract_account_id, '') "
@@ -71,18 +72,9 @@ _KEY = (
 )
 
 
-def event_key() -> Column:
-    """Kafka message key (src/event_types.rs:26-35)."""
-    return F.expr(_KEY)
-
-
 def _specific_topic(prefix: str) -> str:
-    return f"format_string('%s.%s.%s', {sql_string(prefix)}, standard, event)"
-
-
-def specific_topic(prefix: str) -> Column:
     """``"{prefix}.{standard}.{event}"`` (src/event_types.rs:37-39)."""
-    return F.expr(_specific_topic(prefix))
+    return f"format_string('%s.%s.%s', {sql_string(prefix)}, standard, event)"
 
 
 # Compact JSON of the full event, preserving the reference field order

@@ -3619,9 +3619,8 @@ ORDER BY 1, 2
 
 def hopping_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping (sliding) window aggregation in batch: 1-hour windows
-    every 15 minutes over the event stream, per event type — the batch
-    twin of the streaming sliding-window job (`streaming/stateful.py`),
-    via Spark's native ``F.window(ts, "1 hour", "15 minutes")``.
+    every 15 minutes over the event stream, per event type, via
+    Spark's native ``F.window(ts, "1 hour", "15 minutes")``.
 
     Each event lands in exactly 4 windows (the built-in does the
     explode); the aggregate is one hash agg on the (window, type) key
@@ -5305,8 +5304,7 @@ def session_window_exact_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     stayed green while contradicting Spark). Pins the INCLUSIVE
     contract cross-engine: grid neighbors (diff == gap) merge into
     one session; a break needs an empty cell between events
-    (diff >= 2*gap). Same contract as the r17 stateful sessionizer
-    (inclusive sweep, strict watermark finalization).
+    (diff >= 2*gap).
 
     Scale: the grid floor is a scalar projection in the scan stage;
     one shuffle on user_id into Spark's dedicated session-window

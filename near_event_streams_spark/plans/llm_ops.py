@@ -354,12 +354,11 @@ def ingest_neardup_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ingest_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of the streaming incremental NEAR-dup ingest
-    (``streaming/ingest.py``), driver-gated: even ``doc_id`` docs play
-    the already-ingested corpus (registry = their fingerprints + MinHash
-    band keys), odd docs play the arriving micro-batch, and the decision
-    runs through the SAME ``neardup_select`` code path the 24/7 stream
-    uses — the gate and the pipeline cannot drift.
+    """Incremental NEAR-dup ingest (``streaming/ingest.py``),
+    driver-gated: even ``doc_id`` docs play the already-ingested corpus
+    (registry = their fingerprints + MinHash band keys), odd docs play
+    the arriving batch, and the decision runs through
+    ``ingest.neardup_select``.
 
     xxhash64 minhashing is not DuckDB-expressible, so the gate is
     engine-local invariants: ground truth = odd docs with an exact
@@ -1322,13 +1321,12 @@ FROM ranked WHERE rank <= 5
 
 
 def ann_ivfpq_stream_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming index-maintenance loop
-    (``streaming/ann_ingest.py``), driven through the EXACT
-    ``foreachBatch`` sink body a production stream runs (r12 verdict
-    #3; the full readStream + checkpoint kill/restart e2e lives in
-    ``tests/test_ann_stream_ingest.py``): seed index on half the
-    corpus, one micro-batch appended through the sink, the SAME batch
-    REDELIVERED (at-least-once replay must be a no-op — the
+    """The index-maintenance loop (``streaming/ann_ingest.py``),
+    driven through its ``ann_index_ingest_sink`` batch body (r12
+    verdict #3; the four-batch crash-recovery run across both swap
+    protocols lives in ``tests/test_ann_stream_ingest.py``): seed index
+    on half the corpus, one micro-batch appended through the sink, the
+    SAME batch REDELIVERED (at-least-once replay must be a no-op — the
     ``if_absent`` anti-join), a maintenance compact crash-injected
     mid-swap (live renamed away, complete retrain stranded at tmp),
     and the NEXT batch's sink healing it mechanically
@@ -3907,13 +3905,12 @@ def multimodal_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ingest_image_neardup_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Batch form of the streaming incremental IMAGE ingest
+    """Incremental IMAGE ingest
     (``streaming/ingest.py: image_neardup_batch_against_registry``),
     driver-gated at FULL VALUE strength: even doc_ids play the
     already-ingested corpus (their dHash band keys committed to a real
-    bucket-pruned upsert store), odd doc_ids play the arriving
-    micro-batch, and the decision runs through the SAME pruned-probe
-    code path the 24/7 stream uses. Unlike the MinHash text twin
+    bucket-pruned upsert store), odd doc_ids play the arriving batch,
+    and the decision runs through the pruned registry probe. Unlike the MinHash text twin
     (``ingest_neardup_incremental``, invariant-gated because xxhash64
     minhashing is not DuckDB-expressible), the dHash decision is fully
     SQL-replayable, so the oracle recomputes the EXACT accepted id set:

@@ -1,27 +1,28 @@
-"""Streaming ANN-index maintenance: the production loop that keeps a
-persisted IVF-PQ / OPQ index fresh while embedding batches stream in.
+"""ANN-index maintenance per batch: the sink body that keeps a
+persisted IVF-PQ / OPQ index fresh while embedding batches arrive.
 
 The pieces shipped separately in earlier rounds — ``ivfpq_append``
 (encode-against-standing-geometry ingest), ``ivfpq_compact``
 (scheduled retrain-and-swap), ``ivfpq_recover`` (mechanical crash
-recovery for the swap window) — and this module wires them into the
-shape a 24/7 pipeline actually runs (the reference's restart-resilience
-story, ``configs.rs:101-127``, applied to derived index state):
+recovery for the swap window) — and this module wires them into one
+batch body with ``foreachBatch``'s signature (the reference's
+restart-resilience story, ``configs.rs:101-127``, applied to derived
+index state):
 
-* per micro-batch (``foreachBatch``): heal any crash debris from a
-  previous run (``ivfpq_recover`` — one namenode RPC when healthy),
-  land the RAW vectors in a lake directory (the index is lossy derived
-  state; compaction re-reads the source), append the batch to the
-  standing index idempotently (``if_absent=True`` — a replayed batch
+* per batch: heal any crash debris from a previous run
+  (``ivfpq_recover`` — one namenode RPC when healthy), land the RAW
+  vectors in a lake directory (the index is lossy derived state;
+  compaction re-reads the source), append the batch to the standing
+  index idempotently (``if_absent=True`` — a replayed batch
   cannot double-insert candidates), then offer the scheduler an
   unconditional compact that only fires past ``min_appended_frac``.
 
-Replay safety (``foreachBatch`` is at-least-once): the lake write uses
-a ``batch_id=N`` partition with dynamic partition overwrite, so a
-replayed batch rewrites its own partition (effectively-once — the same
-contract as ``start_incremental_dedup_ingest``); the index append
-anti-joins the batch's ``vec_id`` against the touched cells only
-(hive partition pruning keeps the probe proportional to cell size).
+Replay safety (a batch may be delivered again): the lake write uses a
+``batch_id=N`` partition with dynamic partition overwrite, so a replayed
+batch rewrites its own partition (effectively-once — the same contract
+as ``job.start_to_parquet``); the index append anti-joins the batch's
+``vec_id`` against the touched cells only (hive partition pruning keeps
+the probe proportional to cell size).
 Crash safety: a death inside the compact swap strands tmp/old dirs
 that the NEXT batch's ``ivfpq_recover`` resolves before touching the
 index. Precisely (r13 review — the swap window is narrower than
@@ -40,19 +41,17 @@ index size, so ``compact_check_every`` runs the check on a batch
 cadence instead of every batch (r13 review) — and the fired compact
 itself, the deliberate retrain the fraction threshold amortizes. The
 lake accumulates one partition dir per batch; ``lake_compact_every``
-folds closed dirs in-place (same transactional machinery as the
-text-corpus ingest), or manage it out-of-band.
+folds closed dirs in-place (``sinks.parquet_sink``'s transactional
+machinery), or manage it out-of-band.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from near_event_streams_spark.operators import similarity
 from near_event_streams_spark.session import partition_overwrite_mode
 from near_event_streams_spark.streaming import ingest as ingest_mod
-from near_event_streams_spark.streaming.job import run_batches
 
 
 def seed_ann_index(
@@ -133,11 +132,10 @@ def ann_index_ingest_sink(
     drift_psi_threshold: float | None = None,
     retain_versions: int | None = None,
 ):
-    """Return the ``foreachBatch`` sink body for streaming ANN-index
-    ingest: recover → lake-land → idempotent append → scheduled
-    compact. Exposed separately from :func:`start_ann_index_ingest` so
-    gated queries and tests can drive the exact production batch path
-    without a streaming runtime.
+    """Return the ``(batch, batch_id)`` sink body for ANN-index ingest:
+    recover → lake-land → idempotent append → scheduled compact.
+    Gated queries and tests call it directly, batch by batch; a stream
+    would pass it to ``foreachBatch``.
 
     ``compact_check_every`` rate-limits the compact-due evaluation to
     every N-th batch: the check's codes row-count is metadata-only but
@@ -169,10 +167,9 @@ def ann_index_ingest_sink(
     out-of-band :func:`similarity.ivfpq_vacuum`).
     ``lake_compact_every`` folds the lake's closed ``batch_id=N`` dirs
     into size-targeted files every that-many batches (the 24/7
-    small-files countermeasure, same transactional
-    ``compact_batch_dirs_inplace`` machinery and closed-batches-only
-    replay contract as the text-corpus ingest); None = manage
-    out-of-band."""
+    small-files countermeasure, the transactional
+    ``compact_batch_dirs_inplace`` machinery with its closed-batches-only
+    replay contract); None = manage out-of-band."""
     if compact_check_every < 1:
         raise ValueError(
             f"compact_check_every={compact_check_every}: must be >= 1 "
@@ -314,46 +311,3 @@ def ann_index_ingest_sink(
 
     return _sink
 
-
-def start_ann_index_ingest(
-    stream_df: DataFrame,
-    index_path: str,
-    lake_dir: str,
-    checkpoint_dir: str,
-    min_appended_frac: float | None = None,
-    opq: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    compact_seed: int = 42,
-    rescale_cells: bool = False,
-    lake_compact_every: int | None = None,
-    compact_check_every: int = 1,
-    drift_psi_threshold: float | None = None,
-    retain_versions: int | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Run the streaming ANN-index ingest loop: each micro-batch of
-    ``(id_col, vec_col)`` rows is landed in the lake, appended to the
-    persisted index, and offered to the compact scheduler — restart
-    from the checkpoint resumes exactly where a kill left off, with
-    :func:`similarity.ivfpq_recover` healing any mid-compact death at
-    the top of the next batch."""
-    return run_batches(
-        stream_df,
-        checkpoint_dir,
-        ann_index_ingest_sink(
-            index_path,
-            lake_dir,
-            min_appended_frac=min_appended_frac,
-            opq=opq,
-            id_col=id_col,
-            vec_col=vec_col,
-            compact_seed=compact_seed,
-            rescale_cells=rescale_cells,
-            lake_compact_every=lake_compact_every,
-            compact_check_every=compact_check_every,
-            drift_psi_threshold=drift_psi_threshold,
-            retain_versions=retain_versions,
-        ),
-        available_now,
-    )

@@ -3,7 +3,7 @@
 Maps the reference's run loop (``src/main.rs:111-141`` listen_blocks →
 ``handle_message`` → ``store_events``) onto:
 
-    readStream (file/Kafka StreamerMessage source)
+    file/Kafka StreamerMessage stream (sources/streamer.py)
       → extract_events (explode×3, filter, parse, validate, emit_info)
       → whitelist/blacklist
       → routed_records (2-topic fan-out: one projection, one explode)
@@ -33,8 +33,15 @@ Semantics parity:
   (``src/events.rs:325-344``). ``start_rejected_sink`` runs through the
   same ``run_batches`` with the same ``batch_id=N`` overwrite, so both
   outputs are replay-safe in the same way.
-* the ``concurrency`` knob maps to ``maxFilesPerTrigger`` /
-  ``maxOffsetsPerTrigger`` pacing (``src/configs.rs:79-81``).
+* the reference's ``concurrency`` bound maps to the sources'
+  ``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger`` pacing
+  (``src/configs.rs:79-81``, ``sources/streamer.py``).
+
+This parity job is the package's only stream: every query starts through
+``run_batches`` over a source from ``sources/streamer.py``
+(``tests/test_streaming.py::test_one_stream_runner`` gates both).
+``with_batch_observability`` attaches per-batch ``observe()`` metrics to
+the event stream.
 """
 
 from __future__ import annotations
@@ -81,9 +88,9 @@ def run_batches(
 ) -> StreamingQuery:
     """The one stream runner: ``frame`` → ``foreachBatch(sink)``.
 
-    ``update`` mode equals append on stateless plans and emits changed
-    rows of stateful ones, so it serves every caller. ``available_now``
-    drains what is there and stops; otherwise the stream keeps running.
+    ``update`` mode equals append on the stateless parity plans.
+    ``available_now`` drains what is there and stops; otherwise the
+    stream keeps running.
     """
     writer = (
         frame.writeStream.outputMode("update")
@@ -177,76 +184,6 @@ def start_rejected_sink(
         batch.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
     return run_batches(keep, checkpoint_dir, _write, available_now)
-
-
-# --------------------------------------------------------------------------
-# Streaming analytics on the event stream (beyond the reference: the
-# watermarked aggregations the reference delegates to Kafka consumers).
-# --------------------------------------------------------------------------
-
-
-def event_time(events: DataFrame) -> DataFrame:
-    """Derive an event-time column from the ns block timestamp."""
-    return events.withColumn(
-        "event_ts",
-        F.timestamp_micros(
-            F.expr("emit_info.block_timestamp div 1000").cast("long")
-        ),
-    )
-
-
-def windowed_contract_counts(
-    events: DataFrame,
-    window_duration: str = "1 minute",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """Tumbling-window per-contract event counts with late-data handling."""
-    return (
-        event_time(events)
-        .withWatermark("event_ts", watermark)
-        .groupBy(
-            F.window("event_ts", window_duration).alias("w"),
-            F.col("emit_info.contract_account_id").alias(
-                "contract_account_id"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "contract_account_id",
-            "n_events",
-        )
-    )
-
-
-def dedup_receipts(
-    events: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming exact dedup on (receipt_id, event) within the watermark —
-    collapses at-least-once redelivery to effectively-once output."""
-    return (
-        event_time(events)
-        .withWatermark("event_ts", watermark)
-        .dropDuplicates(["receipt_id", "standard", "event"])
-    )
-
-
-def dedup_receipts_within_watermark(
-    events: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Bounded-state streaming dedup (``dropDuplicatesWithinWatermark``):
-    unlike plain ``dropDuplicates`` — whose key state only expires when
-    event-time columns are part of the dedup key — this guarantees every
-    dedup key is evicted once the watermark passes it, so state size is
-    O(keys per watermark window) regardless of run length. The right
-    variant for an unbounded 24/7 ingest at 100 TB: redelivery happens
-    within minutes, not days, so the watermark bounds both correctness
-    and memory."""
-    return (
-        event_time(events)
-        .withWatermark("event_ts", watermark)
-        .dropDuplicatesWithinWatermark(["receipt_id", "standard", "event"])
-    )
 
 
 def with_batch_observability(

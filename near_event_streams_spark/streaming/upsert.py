@@ -1,12 +1,11 @@
-"""Keyed merge-upsert sink: ``foreachBatch`` + a copy-on-write bucketed
-parquet state store.
+"""Keyed merge-upsert into a copy-on-write bucketed parquet state store.
 
 The reference's sinks are append-only topic sends (``src/events.rs:89-97``);
 real consumers routinely need the other shape — *latest state per key*
-(contract → last event, account → running balance). Structured Streaming's
-file sinks can't update in place, so the standard pattern is
-``foreachBatch`` + a merge against the current state. This module
-implements that merge with the two properties that matter at 100 TB:
+(contract → last event, account → running balance). Parquet files can't
+update in place, so each batch is merged against the current state. This
+module implements that merge with the two properties that matter at
+100 TB:
 
 * **bucket-pruned copy-on-write** — state lives in ``n_buckets`` hash
   buckets of the key; a micro-batch only reads and rewrites the buckets
@@ -15,11 +14,11 @@ implements that merge with the two properties that matter at 100 TB:
   version that last wrote it (the same manifest-of-files idea Delta/
   Iceberg commits use, reduced to its minimum). Merge cost is
   O(state in dirty buckets), not O(total state).
-* **replay-safe, crash-safe commits** — ``foreachBatch`` is
-  at-least-once: a crash between write and checkpoint commit replays the
-  batch. The merge is idempotent (keep max ``seq_col`` per key, ties
-  broken by a content hash), so a replay produces a byte-identical
-  state. The commit point is a single atomic ``os.replace`` of the
+* **replay-safe, crash-safe commits** — a batch may be merged again
+  (a ``foreachBatch`` redelivery after a crash between write and
+  checkpoint commit). The merge is idempotent (keep max ``seq_col`` per
+  key, ties broken by a content hash), so a replay produces a
+  byte-identical state. The commit point is a single atomic ``os.replace`` of the
   ``_LATEST`` pointer; an orphaned version directory from a crash is
   silently overwritten by the next commit (deterministic naming +
   overwrite mode), never read (readers only follow ``_LATEST``).
@@ -37,10 +36,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
-
-from near_event_streams_spark.streaming.job import run_batches
 
 _BUCKET = "_bucket"
 _LATEST = "_LATEST"
@@ -398,8 +394,8 @@ def merge_upsert(
 
 def vacuum(path: str, retain_versions: int = 2) -> int:
     """Delete bucket directories no longer referenced by the committed
-    manifest. Without this, a 24/7 ``foreachBatch`` stream (one version
-    per micro-batch) grows storage without bound even though only
+    manifest. Without this, a writer that merges every micro-batch (one
+    version per batch) grows storage without bound even though only
     manifest-referenced buckets are ever read.
 
     Versions newer than ``current - retain_versions`` are left intact so
@@ -459,35 +455,3 @@ def vacuum(path: str, retain_versions: int = 2) -> int:
                 removed += 1
     return removed
 
-
-def start_upsert_stream(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    key_cols: Sequence[str],
-    seq_col: str,
-    n_buckets: int = 16,
-    available_now: bool = True,
-    vacuum_retain: int | None = 4,
-    bucket_cols: Sequence[str] | None = None,
-) -> StreamingQuery:
-    """Run a stream into the keyed state store via ``foreachBatch``.
-
-    ``vacuum_retain`` prunes superseded bucket files after each commit
-    (keeping that many recent versions for in-flight readers); pass
-    ``None`` to disable and manage :func:`vacuum` externally.
-    ``bucket_cols`` must match the store's pinned layout when it was
-    created with prefix bucketing (r13 review: without the pass-through
-    a prefix-bucketed store could not be streamed into at all —
-    ``_check_meta`` rejected every micro-batch).
-    """
-    os.makedirs(path, exist_ok=True)
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        merge_upsert(
-            batch, path, key_cols, seq_col, n_buckets, bucket_cols
-        )
-        if vacuum_retain is not None:
-            vacuum(path, vacuum_retain)
-
-    return run_batches(stream_df, checkpoint_dir, _sink, available_now)

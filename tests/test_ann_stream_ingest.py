@@ -1,12 +1,11 @@
-"""End-to-end streaming ANN-index maintenance (r12 verdict #3): the
-production loop — a file-source micro-batch stream appending embedding
-batches to a persisted IVF-PQ index via ``foreachBatch``
-(`streaming/ann_ingest.py`), a scheduled compact firing MID-STREAM
-(``min_appended_frac`` crossed by a batch), a kill/restart across the
-checkpoint, and a crash injected INSIDE a compact's swap window that
-the restarted stream must heal mechanically (``ivfpq_recover`` at the
-top of the next batch) — with final probe results IDENTICAL to a
-never-crashed run over the same batches.
+"""ANN-index maintenance through the batch sink
+(``streaming/ann_ingest.py:ann_index_ingest_sink``, r12 verdict #3):
+embedding batches appended to a persisted IVF-PQ index, a scheduled
+compact firing inside a batch (``min_appended_frac`` crossed), and a
+crash injected INSIDE a compact's swap window between two windows of
+batches, which the next batch must heal mechanically
+(``ivfpq_recover`` at the top of the batch) — with final probe results
+IDENTICAL to a never-crashed run over the same batches.
 
 This is the reference's restart-resilience story
 (`/root/reference/src/configs.rs:101-127` sync modes — resume exactly
@@ -14,10 +13,7 @@ where a death left off) applied to derived index state.
 """
 
 import os
-import time
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from near_event_streams_spark.operators import similarity
@@ -25,24 +21,13 @@ from near_event_streams_spark.sources.tables import load_table
 from near_event_streams_spark.streaming import ann_ingest
 from tests.conftest import SF_DIR
 
-STREAM_SCHEMA = "vec_id bigint, embedding array<float>"
-# seed = first 300 vec_ids; four 50-row stream batches cover the rest
+# seed = first 300 vec_ids; four 50-row batches cover the rest
 SLICES = [(300, 350), (350, 400), (400, 450), (450, 500)]
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
     return load_table(spark, SF_DIR, "embeddings")
-
-
-def _write_batch_file(df, out_file: str, mtime: float) -> None:
-    """One micro-batch = one parquet file (pyarrow direct write: no
-    _SUCCESS sidecars, one file per batch so maxFilesPerTrigger=1 maps
-    files to batches 1:1); explicit ascending mtimes pin the file
-    source's processing order."""
-    pdf = df.toPandas()
-    pq.write_table(pa.Table.from_pandas(pdf), out_file)
-    os.utime(out_file, (mtime, mtime))
 
 
 def _batch_df(emb, lo: int, hi: int):
@@ -53,47 +38,38 @@ def _batch_df(emb, lo: int, hi: int):
     )
 
 
-def _start_stream(spark, staging: str, idx: str, lake: str, ckpt: str):
-    stream_df = (
-        spark.readStream.schema(STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
+def _run_window(emb, idx: str, lake: str, first_batch: int) -> None:
+    """Two consecutive batches through a freshly built sink, as a
+    restarted stream would deliver them. Each batch is materialized
+    first, like a micro-batch read from its source file, so the sink's
+    several passes over it do not re-run the filter and sort."""
+    # min_appended_frac=0.2 makes the sink's own scheduled compact FIRE:
+    # on the 300-row seed the appended fraction is 50/350 after batch 0
+    # (skip) and 100/400 = 0.25 after batch 1 (fire, yardstick resets to
+    # 400), then 50/450 (skip) and 100/500 = 0.2 (fire) across the
+    # second window — identical schedule in the clean and crashed runs
+    sink = ann_ingest.ann_index_ingest_sink(
+        idx, lake, min_appended_frac=0.2, compact_seed=42
     )
-    # min_appended_frac=0.2 makes the sink's own scheduled compact FIRE
-    # inside the stream: on the 300-row seed the appended fraction is
-    # 50/350 after batch 1 (skip) and 100/400 = 0.25 after batch 2
-    # (fire, yardstick resets to 400), then 50/450 (skip) and
-    # 100/500 = 0.2 (fire) across the second stream window — identical
-    # schedule in the clean and crashed runs
-    return ann_ingest.start_ann_index_ingest(
-        stream_df,
-        idx,
-        lake,
-        ckpt,
-        min_appended_frac=0.2,
-        compact_seed=42,
-    )
+    for batch_id in (first_batch, first_batch + 1):
+        sink(_batch_df(emb, *SLICES[batch_id]).localCheckpoint(), batch_id)
 
 
 def _drive_run(
     spark, emb, root, crash: str | None, swap_mode: str = "rename"
 ) -> str:
-    """Seed index on vec_id<300, stream batches 1-2, run the nightly
+    """Seed index on vec_id<300, sink batches 0-1, run the nightly
     out-of-band compact (crash-injected when ``crash`` is "between" —
     inside the swap window — or "before" — retrain finished, swap not
     yet started, so the work is DISCARDED and the schedule re-fires),
-    restart the stream for batches 3-4 from the same checkpoint;
-    return the index path. ``swap_mode`` exercises the same loop over
-    both swap protocols (r13 verdict #2)."""
-    staging = str(root / "staging")
+    then sink batches 2-3; return the index path. ``swap_mode``
+    exercises the same loop over both swap protocols (r13 verdict #2)."""
     idx = str(root / "idx")
     lake = str(root / "lake")
-    ckpt = str(root / "ckpt")
-    os.makedirs(staging)
 
     seed_corpus = emb.filter(emb.vec_id < 300)
     # retain_versions=1 = explicit opt-out of pointer mode's r16
-    # grace-window default (2): this e2e pins CRASH-HEAL convergence,
+    # grace-window default (2): this test pins CRASH-HEAL convergence,
     # and delete-immediately keeps the no-debris assertions crisp; the
     # persisted-horizon defaults have their own tests in
     # test_ivfpq_pointer.py
@@ -101,15 +77,9 @@ def _drive_run(
         seed_corpus, idx, lake, n_clusters=8, m=8, ks=256, seed=42,
         swap_mode=swap_mode, retain_versions=1,
     )
+    _run_window(emb, idx, lake, first_batch=0)
 
-    t0 = time.time() - 100
-    for i, (lo, hi) in enumerate(SLICES[:2]):
-        _write_batch_file(
-            _batch_df(emb, lo, hi), f"{staging}/batch{i}.parquet", t0 + i
-        )
-    _start_stream(spark, staging, idx, lake, ckpt).awaitTermination()
-
-    # the nightly maintenance compact between the two stream windows
+    # the nightly maintenance compact between the two windows
     corpus = spark.read.parquet(lake).select("vec_id", "embedding")
     if crash is not None:
         kw = (
@@ -122,13 +92,13 @@ def _drive_run(
         if swap_mode == "rename":
             if crash == "between":
                 # live renamed away, the completed retrain stranded at
-                # tmp — the restarted stream must PROMOTE it
+                # tmp — the next batch must PROMOTE it
                 assert not os.path.exists(idx + "/meta")
                 assert os.path.exists(idx + ".compact-tmp/meta")
                 assert os.path.exists(idx + ".compact-old/meta")
             else:
                 # live untouched, finished retrain stranded at tmp —
-                # the restarted stream must DISCARD it (and say so)
+                # the next batch must DISCARD it (and say so)
                 assert os.path.exists(idx + "/meta")
                 assert os.path.exists(idx + ".compact-tmp/meta")
         else:
@@ -141,16 +111,11 @@ def _drive_run(
         res = similarity.ivfpq_compact(spark, idx, corpus, seed=42)
         assert res["compacted"] is True
 
-    for i, (lo, hi) in enumerate(SLICES[2:], start=2):
-        _write_batch_file(
-            _batch_df(emb, lo, hi), f"{staging}/batch{i}.parquet", t0 + i
-        )
-    # kill/restart: a NEW query on the SAME checkpoint resumes with the
-    # un-processed files; its first foreachBatch call runs
-    # ivfpq_recover, which (in the crashed runs) promotes the stranded
-    # complete compact / discards the unswapped one / cleans strays
-    # before any append touches the index
-    _start_stream(spark, staging, idx, lake, ckpt).awaitTermination()
+    # the first batch after the crash runs ivfpq_recover, which (in the
+    # crashed runs) promotes the stranded complete compact / discards
+    # the unswapped one / cleans strays before any append touches the
+    # index
+    _run_window(emb, idx, lake, first_batch=2)
     return idx
 
 
@@ -169,8 +134,8 @@ def clean_runs(spark, tmp_path_factory, emb):
     """One never-crashed reference run per swap protocol (the crashed
     twins below must converge to it byte-identically). Both the
     'before' and 'between' crash seams converge to the same state:
-    the final in-sink scheduled compact (batch 4 crosses the 0.2
-    fraction) retrains deterministically from the identical 500-row
+    the final in-sink scheduled compact (batch 3, the fourth, crosses
+    the 0.2 fraction) retrains deterministically from the identical 500-row
     lake, erasing the nightly compact's presence-or-absence."""
     return {
         mode: _drive_run(
@@ -215,7 +180,7 @@ def test_stream_ingest_crash_recovery_end_to_end(
     # byte-identical index state: codes rows, centroids, codebooks
     c_codes, c_cents, c_books = _index_state(spark, clean_idx)
     x_codes, x_cents, x_books = _index_state(spark, crashed_idx)
-    assert len(c_codes) == 500  # seed 300 + 4 x 50 streamed
+    assert len(c_codes) == 500  # seed 300 + 4 x 50 appended
     assert x_codes == c_codes
     assert x_cents == c_cents
     assert x_books == c_books
@@ -283,8 +248,8 @@ def test_sink_opq_layout_append_and_scheduled_compact(spark, tmp_path, emb):
 
 def test_sink_lake_compaction_folds_closed_batches(spark, tmp_path, emb):
     """lake_compact_every folds the lake's CLOSED batch dirs into
-    size-targeted files (the 24/7 small-files countermeasure, same
-    machinery as the text-corpus ingest) without losing rows, and the
+    size-targeted files (the 24/7 small-files countermeasure,
+    ``sinks.parquet_sink``'s machinery) without losing rows, and the
     max-present batch — the only one an at-least-once replay can
     redeliver — stays an intact partition so redelivery is still a
     partition overwrite, not a duplicate."""

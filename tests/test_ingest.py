@@ -1,28 +1,47 @@
-"""Incremental-dedup ingest: cross-batch exact dedup against the
-persistent fingerprint registry, with restart/replay safety."""
+"""Incremental dedup decisions: cross-batch exact and near-dup dedup
+against a registry of already-accepted docs (``neardup_select``) and
+the persistent image registry, with replay safety."""
 
-import glob
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from near_event_streams_spark.streaming import ingest
+from near_event_streams_spark.operators import dedup as dd
+from near_event_streams_spark.operators import multimodal
+from near_event_streams_spark.streaming import ingest, upsert
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_static_incremental_dedup_across_calls(spark, tmp_path):
+def _registry(accepted, id_col="doc_id"):
+    """(reg_fp, reg_bands) of already-accepted docs, built the way
+    ``plans/llm_ops._neardup_registry_frames`` builds the gated query's.
+    The accepted rows are materialized first, as a stored registry would
+    be, so the probe does not re-run the decision that produced them."""
+    accepted = accepted.select(id_col, "text").localCheckpoint()
+    reg_fp = accepted.select(
+        ingest.fingerprint_col("text").alias("fingerprint")
+    )
+    reg_bands = dd.band_keys_from_sig(
+        dd.minhash_sig_array(accepted, id_col=id_col)
+    ).select("band", "bucket", F.col("sig").alias("reg_sig"))
+    return reg_fp, reg_bands
+
+
+def _ids(df, id_col="doc_id"):
+    return {r[id_col] for r in df.collect()}
+
+
+def test_static_incremental_dedup_across_calls(spark):
     """Batch 2 must drop docs whose (normalized) text batch 1 already
     accepted — including whitespace/case variants — and keep new ones."""
-    reg = str(tmp_path / "registry")
-
     b1 = _docs(spark, [(1, "alpha beta gamma"), (2, "delta epsilon")])
-    s1 = ingest.dedup_batch_against_registry(b1, reg)
-    got1 = {r["doc_id"] for r in s1.collect()}
-    assert got1 == {1, 2}
-    ingest.register_fingerprints(s1, reg, batch_id=0)
+    s1 = ingest.neardup_select(b1, None, None)
+    assert _ids(s1) == {1, 2}
 
     b2 = _docs(
         spark,
@@ -32,95 +51,13 @@ def test_static_incremental_dedup_across_calls(spark, tmp_path):
             (12, "zeta eta"),               # within-batch dup of 11
         ],
     )
-    s2 = ingest.dedup_batch_against_registry(b2, reg)
-    got2 = {r["doc_id"] for r in s2.collect()}
+    s2 = ingest.neardup_select(b2, *_registry(s1))
+    got2 = _ids(s2)
     assert got2 == {11}, got2
 
 
-def test_streaming_ingest_end_to_end_with_restart(spark, tmp_path):
-    """availableNow run, stop, drop overlapping docs, run again from the
-    same checkpoint: corpus holds each distinct text exactly once."""
-    src = tmp_path / "src"
-    src.mkdir()
-    corpus = str(tmp_path / "corpus")
-    reg = str(tmp_path / "registry")
-    ck = str(tmp_path / "ck")
-
-    schema = "doc_id long, text string"
-
-    def run_once():
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = ingest.start_incremental_dedup_ingest(stream, corpus, reg, ck)
-        q.awaitTermination()
-
-    _docs(
-        spark, [(1, "one two three"), (2, "four five six"), (3, "one two three")]
-    ).coalesce(1).write.mode("append").json(str(src))
-    run_once()
-
-    out1 = spark.read.parquet(corpus)
-    texts1 = sorted(r["text"] for r in out1.collect())
-    assert texts1 == ["four five six", "one two three"]
-
-    # second drop overlaps the first (doc 4 dups doc 2's text)
-    _docs(
-        spark, [(4, "four five six"), (5, "seven eight")]
-    ).coalesce(1).write.mode("append").json(str(src))
-    run_once()
-
-    out2 = spark.read.parquet(corpus)
-    texts2 = sorted(r["text"] for r in out2.collect())
-    assert texts2 == ["four five six", "one two three", "seven eight"]
-    ids = {r["doc_id"] for r in out2.collect()}
-    assert ids == {1, 2, 5}, ids
-    # batch partitions exist for both runs
-    parts = {os.path.basename(p) for p in glob.glob(f"{corpus}/batch_id=*")}
-    assert len(parts) >= 2
-
-
-def test_replayed_batch_is_idempotent(spark, tmp_path):
-    """Simulate the at-least-once window (crash after the corpus write +
-    registry commit, before the checkpoint records the batch): running
-    the same foreachBatch body again must leave corpus AND registry
-    unchanged."""
-    corpus = str(tmp_path / "corpus")
-    reg = str(tmp_path / "registry")
-    batch = _docs(spark, [(1, "aa bb"), (2, "cc dd"), (3, "aa bb")])
-
-    def body(b, bid):
-        surv = ingest.dedup_batch_against_registry(b, reg)
-        # mirror of the streaming sink's corpus write
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                surv.drop("fingerprint")
-                .withColumn("batch_id", F.lit(bid))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        ingest.register_fingerprints(surv, reg, bid)
-
-    body(batch, 0)
-    first = sorted(
-        tuple(r) for r in spark.read.parquet(corpus).drop("batch_id").collect()
-    )
-    body(batch, 0)  # replay
-    second = sorted(
-        tuple(r) for r in spark.read.parquet(corpus).drop("batch_id").collect()
-    )
-    assert first == second and len(first) == 2
-    from near_event_streams_spark.streaming import upsert
-
-    state = upsert.read_state(spark, reg)
-    assert state.count() == 2
-
-
 # ---------------------------------------------------------------------------
-# Incremental NEAR-dup ingest (exact + MinHash bands, one registry)
+# Incremental NEAR-dup decision (exact + MinHash bands)
 # ---------------------------------------------------------------------------
 
 BASE = (
@@ -134,13 +71,10 @@ OTHER = (
 )
 
 
-def test_neardup_static_catches_cross_batch_near_copies(spark, tmp_path):
-    reg = str(tmp_path / "reg")
-
+def test_neardup_static_catches_cross_batch_near_copies(spark):
     b1 = _docs(spark, [(1, BASE), (2, OTHER)])
-    a1 = ingest.neardup_batch_against_registry(b1, reg)
-    assert {r["doc_id"] for r in a1.collect()} == {1, 2}
-    ingest.register_batch_neardup(a1, reg, batch_id=0)
+    a1 = ingest.neardup_select(b1, None, None)
+    assert _ids(a1) == {1, 2}
 
     b2 = _docs(
         spark,
@@ -150,160 +84,53 @@ def test_neardup_static_catches_cross_batch_near_copies(spark, tmp_path):
             (12, "zeta eta theta iota kappa wholly new words here today"),
         ],
     )
-    a2 = ingest.neardup_batch_against_registry(b2, reg)
-    assert {r["doc_id"] for r in a2.collect()} == {12}
+    a2 = ingest.neardup_select(b2, *_registry(a1))
+    assert _ids(a2) == {12}
 
 
-def test_neardup_within_batch_greedy_drop(spark, tmp_path):
-    reg = str(tmp_path / "reg")
+def test_neardup_within_batch_greedy_drop(spark):
     b = _docs(spark, [(5, NEAR), (3, BASE), (7, OTHER)])
-    acc = ingest.neardup_batch_against_registry(b, reg)
+    acc = ingest.neardup_select(b, None, None)
     # 3 keeps (smallest), 5 dropped as near-dup of 3, 7 unrelated
-    assert {r["doc_id"] for r in acc.collect()} == {3, 7}
+    assert _ids(acc) == {3, 7}
 
 
-def test_neardup_short_docs_fall_back_to_exact(spark, tmp_path):
+def test_neardup_short_docs_fall_back_to_exact(spark):
     """Sub-bigram docs (one word) have no signature: near machinery must
     skip them (sig NULL), exact dedup still applies."""
-    reg = str(tmp_path / "reg")
     b1 = _docs(spark, [(1, "hello")])
-    a1 = ingest.neardup_batch_against_registry(b1, reg)
+    a1 = ingest.neardup_select(b1, None, None)
     rows = a1.collect()
     assert [r["doc_id"] for r in rows] == [1] and rows[0]["sig"] is None
-    ingest.register_batch_neardup(a1, reg, batch_id=0)
 
     b2 = _docs(spark, [(2, "  HELLO "), (3, "world")])
-    a2 = ingest.neardup_batch_against_registry(b2, reg)
-    assert {r["doc_id"] for r in a2.collect()} == {3}
+    a2 = ingest.neardup_select(b2, *_registry(a1))
+    assert _ids(a2) == {3}
 
 
-def test_neardup_replay_after_commit_accepts_nothing(spark, tmp_path):
-    """The post-commit crash window: re-running the same batch against
-    the already-committed registry must accept zero docs — accepted docs
-    hit their own fp rows, near-dropped docs hit the registered bands or
-    the still-present smaller batch doc."""
-    reg = str(tmp_path / "reg")
+def test_neardup_replay_after_commit_accepts_nothing(spark):
+    """Re-deciding a batch against a registry that already holds its
+    accepted set must accept zero docs — accepted docs hit their own fp
+    rows, near-dropped docs hit the registered bands or the
+    still-present smaller batch doc."""
     batch = _docs(
         spark,
         [(1, BASE), (2, NEAR), (3, OTHER), (4, BASE), (5, "tiny")],
     )
-    acc = ingest.neardup_batch_against_registry(batch, reg)
-    got = {r["doc_id"] for r in acc.collect()}
+    acc = ingest.neardup_select(batch, None, None)
+    got = _ids(acc)
     assert got == {1, 3, 5}, got  # 2 near-dup of 1, 4 exact dup of 1
-    ingest.register_batch_neardup(acc, reg, batch_id=0)
 
-    replay = ingest.neardup_batch_against_registry(batch, reg)
+    replay = ingest.neardup_select(batch, *_registry(acc))
     assert replay.count() == 0
 
-    # and the registry commit itself is idempotent
-    from near_event_streams_spark.streaming import upsert
 
-    v1 = upsert.current_version(reg)
-    n1 = upsert.read_state(spark, reg).count()
-    ingest.register_batch_neardup(replay, reg, batch_id=0)
-    assert upsert.current_version(reg) == v1
-    assert upsert.read_state(spark, reg).count() == n1
-
-
-def test_neardup_streaming_e2e_with_restart(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    corpus = str(tmp_path / "corpus")
-    reg = str(tmp_path / "reg")
-    ck = str(tmp_path / "ck")
-    schema = "doc_id long, text string"
-
-    def run_once():
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = ingest.start_incremental_neardup_ingest(stream, corpus, reg, ck)
-        q.awaitTermination()
-
-    _docs(spark, [(1, BASE), (2, OTHER)]).coalesce(1).write.mode(
-        "append"
-    ).json(str(src))
-    run_once()
-    assert {r["doc_id"] for r in spark.read.parquet(corpus).collect()} == {1, 2}
-
-    # run 2: a near-copy, an exact copy, and one genuinely new doc
-    _docs(
-        spark,
-        [(10, NEAR), (11, BASE), (12, "fresh unrelated words for run two")],
-    ).coalesce(1).write.mode("append").json(str(src))
-    run_once()
-    ids = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert ids == {1, 2, 12}, ids
-
-
-def test_ingest_vacuum_bounds_registry_versions(spark, tmp_path):
-    """24/7 loop creates one registry version per micro-batch; with
-    vacuum_retain every SUPERSEDED bucket directory at or below the
-    retention floor must be gone — old version dirs may survive only
-    for buckets some RETAINED manifest (current or inside the retain
-    window) still references there (r13 review: liveness is the union
-    of retained manifests, not the committed one alone — otherwise
-    read_state_at broke inside the documented horizon). Total on-disk
-    bucket dirs stay bounded by retained-manifest entries."""
-    import json
-
-    src = tmp_path / "src"
-    src.mkdir()
-    corpus = str(tmp_path / "corpus")
-    reg = str(tmp_path / "reg")
-    ck = str(tmp_path / "ck")
-    schema = "doc_id long, text string"
-
-    for i in range(5):
-        _docs(
-            spark, [(100 + i, f"unique document number {i} with words")]
-        ).coalesce(1).write.mode("append").json(str(src))
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = ingest.start_incremental_neardup_ingest(
-            stream, corpus, reg, ck, vacuum_retain=2
-        )
-        q.awaitTermination()
-
-    from near_event_streams_spark.streaming import upsert
-
-    cur = upsert.current_version(reg)
-    assert cur >= 5
-    floor = cur - 2
-    # liveness under the FIXED contract: union of every retained
-    # manifest's (bucket -> owner) refs
-    live: set[tuple[int, str]] = set()
-    n_manifest_entries = 0
-    for v_ref in range(floor + 1, cur + 1):
-        with open(os.path.join(reg, f"v{v_ref}", "manifest.json")) as f:
-            refs = {str(k): int(v) for k, v in json.load(f).items()}
-        n_manifest_entries += len(refs)
-        live |= {(owner, b) for b, owner in refs.items()}
-    n_bucket_dirs = 0
-    for entry in os.listdir(reg):
-        if not (entry.startswith("v") and entry[1:].isdigit()):
-            continue
-        v = int(entry[1:])
-        buckets = [
-            d.split("=", 1)[1]
-            for d in os.listdir(os.path.join(reg, entry))
-            if d.startswith("_bucket=")
-        ]
-        n_bucket_dirs += len(buckets)
-        if v <= floor:
-            dead = [b for b in buckets if (v, b) not in live]
-            assert not dead, (entry, dead)
-    # bound: every surviving dir is referenced by a retained manifest
-    assert n_bucket_dirs <= n_manifest_entries
-    # ingest output unaffected by vacuuming
-    ids = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert ids == {100, 101, 102, 103, 104}
-
-
-def test_neardup_replay_empty_on_random_corpora(spark, tmp_path):
-    """Property form of the post-commit replay proof: for ANY batch
-    (random vocab, exact dups, near-dups, sub-bigram docs), once the
-    accepted set is registered, replaying the identical batch must
-    accept ZERO docs — every accepted doc hits its own fp row, every
-    dropped doc re-resolves identically. This is the invariant the
-    at-least-once crash-window argument rests on."""
+def test_neardup_replay_empty_on_random_corpora(spark):
+    """Property form of the replay check: for ANY batch (random vocab,
+    exact dups, near-dups, sub-bigram docs), once the accepted set is
+    registered, re-deciding the identical batch must accept ZERO docs —
+    every accepted doc hits its own fp row, every dropped doc
+    re-resolves identically."""
     import random
 
     for seed in (11, 42, 77):
@@ -322,93 +149,18 @@ def test_neardup_replay_empty_on_random_corpora(spark, tmp_path):
         rows.append((200, "solo"))
         rows.append((201, "solo"))
 
-        reg = str(tmp_path / f"reg{seed}")
         batch = _docs(spark, rows)
-        acc = ingest.neardup_batch_against_registry(batch, reg)
+        acc = ingest.neardup_select(batch, None, None)
         n_acc = acc.count()
         assert 0 < n_acc <= len(rows)
-        ingest.register_batch_neardup(acc, reg, batch_id=0)
-        replay = ingest.neardup_batch_against_registry(batch, reg)
+        replay = ingest.neardup_select(batch, *_registry(acc))
         leaked = [tuple(r) for r in replay.select("doc_id").collect()]
         assert not leaked, f"seed={seed}: replay accepted {leaked}"
-
-
-def test_neardup_pruned_probe_matches_full_state_decision(spark, tmp_path):
-    """The bucket-pruned registry probe must reach the SAME accepted set
-    as neardup_select over the full registry state, across a multi-batch
-    sequence with exact dups, near-dups, and new docs."""
-    from near_event_streams_spark.streaming import upsert
-
-    reg = str(tmp_path / "reg")
-    batches = [
-        [(1, BASE), (2, OTHER)],
-        [(10, NEAR), (11, BASE), (12, "brand new words for batch two")],
-        [(20, OTHER), (21, "more fresh material arrives in batch three"),
-         (22, "more fresh material arrives in batch three")],
-    ]
-    for bid, rows in enumerate(batches):
-        batch = _docs(spark, rows)
-        pruned = ingest.neardup_batch_against_registry(batch, reg)
-        got = {r["doc_id"] for r in pruned.collect()}
-        state = upsert.read_state(spark, reg)
-        reg_fp = reg_bands = None
-        if state is not None:
-            reg_fp = state.filter(F.col("kind") == "fp").select(
-                F.col("ukey").alias("fingerprint")
-            )
-            reg_bands = state.filter(F.col("kind") == "band").select(
-                "band", "bucket", F.col("sig").alias("reg_sig")
-            )
-        full = ingest.neardup_select(batch, reg_fp, reg_bands)
-        want = {r["doc_id"] for r in full.collect()}
-        assert got == want, f"batch {bid}: pruned={got} full={want}"
-        ingest.register_batch_neardup(pruned, reg, batch_id=bid)
-
-
-def test_neardup_probe_actually_prunes(spark, tmp_path):
-    """With n_buckets large relative to the batch, a small batch's probe
-    must compute a strict subset of the store's buckets."""
-    from near_event_streams_spark.streaming import upsert
-
-    reg = str(tmp_path / "reg")
-    big = [(i, f"document number {i} carries its own unique words "
-               f"alpha{i} beta{i} gamma{i} delta{i}") for i in range(40)]
-    acc = ingest.neardup_batch_against_registry(_docs(spark, big), reg)
-    ingest.register_batch_neardup(acc, reg, batch_id=0, n_buckets=256)
-
-    meta = upsert.store_meta(reg)
-    assert meta["bucket_cols"] == ["kind", "band", "bucket"]
-    probe = _docs(spark, [(100, "one tiny probe document here")])
-    fp = probe.withColumn("fingerprint", ingest.fingerprint_col("text"))
-    from near_event_streams_spark.operators import dedup as dd
-
-    bands = dd.band_keys_from_sig(dd.minhash_sig_array(fp))
-    keys = fp.select(
-        F.lit("fp").alias("kind"), F.lit(-1).alias("band"),
-        F.xxhash64("fingerprint").alias("bucket"),
-    ).unionByName(
-        bands.select(F.lit("band").alias("kind"), "band", "bucket")
-    )
-    dirty = upsert.bucket_ids_for(
-        keys, meta["bucket_cols"], meta["n_buckets"]
-    )
-    import json as _json
-    with open(os.path.join(reg, f"v{upsert.current_version(reg)}",
-                           "manifest.json")) as f:
-        total = len(_json.load(f))
-    assert len(dirty) <= 5 < total, (len(dirty), total)
-    # and the pruned decision still drops an exact dup of a stored doc
-    dup = _docs(spark, [(200, big[7][1])])
-    out = ingest.neardup_batch_against_registry(dup, reg)
-    assert out.count() == 0
 
 
 def test_upsert_bucket_cols_meta_pinned(spark, tmp_path):
     """A store created with prefix bucketing must refuse a merge under
     different bucket_cols — same protection as the other layout params."""
-    import pytest
-    from near_event_streams_spark.streaming import upsert
-
     path = str(tmp_path / "store")
     df = spark.createDataFrame(
         [("a", 1, "x", 0)], "k string, b long, v string, seq long"
@@ -432,8 +184,6 @@ def test_band_keys_from_sig_matches_wide_lsh_banding(spark):
     IDENTICAL buckets as the wide h0..hk banding (batch LSH path) — the
     claim that lets signatures registered by one pipeline be probed by
     the other. Verified by deriving candidate pairs both ways."""
-    from near_event_streams_spark.operators import dedup as dd
-
     rows = [(i, f"shared words {'x' * (i % 3)} alpha beta gamma {i % 4}")
             for i in range(20)]
     docs = _docs(spark, rows)
@@ -455,61 +205,6 @@ def test_band_keys_from_sig_matches_wide_lsh_banding(spark):
         .collect()
     }
     assert wide_pairs == arr_pairs and arr_pairs, (wide_pairs, arr_pairs)
-
-
-def test_ingest_compaction_folds_closed_batches(spark, tmp_path):
-    """With compact_every, closed batch dirs fold into one merged dir;
-    the corpus contents and dedup behavior are unchanged, and the
-    small-files count PLATEAUS instead of growing one dir (and several
-    files) per micro-batch — the property a 24/7 ingest loop needs."""
-    src = tmp_path / "src"
-    src.mkdir()
-    corpus = str(tmp_path / "corpus")
-    reg = str(tmp_path / "reg")
-    ck = str(tmp_path / "ck")
-    schema = "doc_id long, text string"
-
-    def text_for(i, j):
-        # fully disjoint token sets per doc — a one-token-apart template
-        # would (correctly!) trip the near-dup suppression
-        return " ".join(f"tok{i}{j}{k}" for k in range(8))
-
-    def layout():
-        dirs = glob.glob(f"{corpus}/batch_id=*")
-        files = [
-            f
-            for d in dirs
-            for f in glob.glob(f"{d}/*.parquet")
-        ]
-        return len(dirs), len(files)
-
-    n_batches = 8
-    checkpoints = {}
-    for i in range(n_batches):
-        rows = [(10 * i + j, text_for(i, j)) for j in range(3)]
-        if i == 3:
-            rows.append((99, text_for(0, 0)))  # exact dup of doc 0
-        _docs(spark, rows).coalesce(1).write.mode("append").json(str(src))
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = ingest.start_incremental_neardup_ingest(
-            stream, corpus, reg, ck, compact_every=2
-        )
-        q.awaitTermination()
-        checkpoints[i] = layout()
-
-    out = spark.read.parquet(corpus)
-    ids = {r["doc_id"] for r in out.collect()}
-    assert ids == {
-        10 * i + j for i in range(n_batches) for j in range(3)
-    }, ids
-    # plateau: dir/file counts right after a compaction batch must not
-    # trend upward as batches accumulate (merged + the one open batch)
-    dirs4, files4 = checkpoints[3]
-    dirs8, files8 = checkpoints[7]
-    assert dirs8 <= max(dirs4, 3), checkpoints
-    assert files8 <= max(files4, 6), checkpoints
-    # and in absolute terms: far fewer dirs than micro-batches ran
-    assert dirs8 < n_batches / 2, checkpoints
 
 
 def _ppm(w, h, vals):
@@ -537,8 +232,6 @@ def test_image_neardup_static_cross_and_within_batch(spark, tmp_path):
     brightness-shifted near-copy of a registered image AND a
     within-batch near-copy, keep genuinely new content, and accept
     undecodable payloads unhashed."""
-    from near_event_streams_spark.operators import multimodal
-
     reg = str(tmp_path / "ireg")
     b1 = _media(
         spark,
@@ -562,75 +255,18 @@ def test_image_neardup_static_cross_and_within_batch(spark, tmp_path):
     a2 = ingest.image_neardup_batch_against_registry(h2, reg)
     got = {r["media_id"] for r in a2.collect()}
     assert got == {11}, got
-    # the sink-level contract: undecodable ids pass through unhashed
+    # undecodable payloads carry no bands, so the decision never sees them
     undec = {r["media_id"] for r in h2.filter("bands IS NULL").collect()}
     assert undec == {13}
 
 
-def test_image_ingest_streaming_e2e(spark, tmp_path):
-    """Two availableNow runs through start_incremental_image_ingest:
-    the second batch's near-copy of a first-batch image is suppressed
-    ACROSS the restart (registry, not stream state), new content and
-    undecodable payloads land in the corpus."""
-    import json as _json
-
-    src = tmp_path / "isrc"
-    src.mkdir()
-    corpus = str(tmp_path / "icorpus")
-    reg = str(tmp_path / "ireg2")
-    ckpt = str(tmp_path / "ickpt")
-
-    def write_batch(name, rows):
-        with open(src / name, "w") as f:
-            for mid, payload in rows:
-                f.write(
-                    _json.dumps(
-                        {"media_id": mid, "payload_b64": payload.hex()}
-                    )
-                    + "\n"
-                )
-
-    def stream():
-        raw = (
-            spark.readStream.schema("media_id long, payload_b64 string")
-            .option("maxFilesPerTrigger", "1")
-            .json(str(src))
-        )
-        return raw.select("media_id", F.unhex("payload_b64").alias("payload"))
-
-    write_batch("b1.jsonl", [(1, _ppm(6, 6, _img(3))), (2, _ppm(6, 6, _img(8)))])
-    q = ingest.start_incremental_image_ingest(
-        stream(), corpus, reg, ckpt
-    )
-    q.awaitTermination(120)
-
-    write_batch(
-        "b2.jsonl",
-        [
-            (10, _ppm(6, 6, _img(3, shift=25))),  # near-copy of 1
-            (11, _ppm(6, 6, _img(40))),           # new
-            (13, b"\x89PNGnot-decodable"),        # undecodable passthrough
-        ],
-    )
-    q = ingest.start_incremental_image_ingest(
-        stream(), corpus, reg, ckpt
-    )
-    q.awaitTermination(120)
-
-    got = {r["media_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got == {1, 2, 11, 13}, got
-
-
 def test_image_replayed_batch_is_idempotent(spark, tmp_path):
-    """The r10-advisory crash window, image twin of
-    test_replayed_batch_is_idempotent: crash AFTER the corpus write +
-    registry commit, BEFORE the checkpoint records the batch. The
-    replayed batch probes a registry that already holds its own band
+    """The r10-advisory replay window: a batch decided again after its
+    own registry commit. The registry already holds the batch's band
     keys; without ukey self-exclusion every accepted image matches
-    itself at Hamming 0 and the batch_id=0 partition overwrite would
-    DELETE the decoded images, keeping only the undecodable
-    passthrough rows. Drives the REAL production sink body."""
-    corpus = str(tmp_path / "icorpus_r")
+    itself at Hamming 0 and the replay rejects it. The replay must
+    recompute the identical accepted set, and committing it again must
+    leave the registry keys unchanged."""
     reg = str(tmp_path / "ireg_r")
     batch = _media(
         spark,
@@ -638,35 +274,109 @@ def test_image_replayed_batch_is_idempotent(spark, tmp_path):
             (1, _ppm(6, 6, _img(3))),
             (2, _ppm(6, 6, _img(8))),
             (3, _ppm(6, 6, _img(8, shift=20))),  # within-batch dup of 2
-            (4, b"\x89PNGnot-decodable"),        # undecodable passthrough
+            (4, b"\x89PNGnot-decodable"),        # undecodable: no bands
         ],
     )
-    ingest.image_ingest_sink_body(batch, 0, corpus, reg)
-    first = {r["media_id"] for r in spark.read.parquet(corpus).collect()}
-    assert first == {1, 2, 4}, first
-    ingest.image_ingest_sink_body(batch, 0, corpus, reg)  # replay
-    second = {r["media_id"] for r in spark.read.parquet(corpus).collect()}
+    hashed = multimodal.dhash_images(batch)
+    acc = ingest.image_neardup_batch_against_registry(hashed, reg)
+    first = _ids(acc, "media_id")
+    assert first == {1, 2}, first
+    ingest.register_batch_image_neardup(acc, reg, batch_id=0)
+    replay = ingest.image_neardup_batch_against_registry(hashed, reg)
+    second = _ids(replay, "media_id")
     assert second == first, (first, second)
-    # registry unchanged too: same keys, idempotent upsert
-    from near_event_streams_spark.streaming import upsert
-
+    ingest.register_batch_image_neardup(replay, reg, batch_id=0)
     state = upsert.read_state(spark, reg)
     assert {r["ukey"] for r in state.collect()} == {"1", "2"}
 
 
 def test_image_ingest_id_col_plumbing(spark, tmp_path):
     """r10 advisory: a non-default id column must flow through
-    dhash_images' fixed schema and back — register/decide/corpus all
+    dhash_images' fixed schema and back — decide and register both
     reference it by the caller's name."""
-    corpus = str(tmp_path / "icorpus_id")
     reg = str(tmp_path / "ireg_id")
     rows = [(100, _ppm(6, 6, _img(3))), (101, _ppm(6, 6, _img(3, shift=9)))]
     batch = spark.createDataFrame(rows, "img_id long, blob binary")
-    ingest.image_ingest_sink_body(
-        batch, 0, corpus, reg, id_col="img_id", payload_col="blob"
+    hashed = multimodal.dhash_images(
+        batch, id_col="img_id", payload_col="blob"
+    ).withColumnRenamed("media_id", "img_id")
+    acc = ingest.image_neardup_batch_against_registry(
+        hashed, reg, id_col="img_id"
     )
-    got = {r["img_id"] for r in spark.read.parquet(corpus).collect()}
+    got = _ids(acc, "img_id")
     assert got == {100}, got  # 101 is a within-batch near-dup of 100
+    ingest.register_batch_image_neardup(acc, reg, batch_id=0, id_col="img_id")
+    state = upsert.read_state(spark, reg)
+    assert {r["ukey"] for r in state.collect()} == {"100"}
+
+
+def test_neardup_pruned_probe_matches_full_state_decision(spark, tmp_path):
+    """The bucket-pruned registry probe must reach the SAME accepted set
+    as image_neardup_decide over the full registry state, across a
+    multi-batch sequence with near-copies, within-batch copies and new
+    images."""
+    reg = str(tmp_path / "ireg")
+    batches = [
+        [(1, _img(3)), (2, _img(8))],
+        [(10, _img(3, shift=25)), (11, _img(40)), (12, _img(40, shift=12))],
+        [(20, _img(8, shift=5)), (21, _img(55)), (22, _img(40, shift=3))],
+    ]
+    for bid, rows in enumerate(batches):
+        hashed = multimodal.dhash_images(
+            _media(spark, [(i, _ppm(6, 6, v)) for i, v in rows])
+        )
+        pruned = ingest.image_neardup_batch_against_registry(hashed, reg)
+        got = _ids(pruned, "media_id")
+        state = upsert.read_state(spark, reg)
+        reg_bands = None
+        if state is not None:
+            reg_bands = state.select(
+                "band",
+                "bucket",
+                F.col("sig").alias("reg_sig"),
+                F.col("ukey").alias("reg_ukey"),
+            )
+        full = ingest.image_neardup_decide(hashed, reg_bands)
+        want = _ids(full, "media_id")
+        assert got == want, f"batch {bid}: pruned={got} full={want}"
+        ingest.register_batch_image_neardup(pruned, reg, batch_id=bid)
+
+
+def test_neardup_probe_actually_prunes(spark, tmp_path):
+    """With n_buckets large relative to the batch, a small batch's probe
+    must compute a strict subset of the store's buckets."""
+    reg = str(tmp_path / "ireg")
+    stored = [(i, _ppm(6, 6, _img(i))) for i in range(40)]
+    ingest.register_batch_image_neardup(
+        multimodal.dhash_images(_media(spark, stored)),
+        reg,
+        batch_id=0,
+        n_buckets=256,
+    )
+
+    meta = upsert.store_meta(reg)
+    assert meta["bucket_cols"] == ["kind", "band", "bucket"]
+    probe = multimodal.dhash_images(
+        _media(spark, [(100, _ppm(6, 6, _img(41)))])
+    )
+    keys = probe.select(
+        F.posexplode("bands").alias("band", "band_val")
+    ).select(
+        F.lit("iband").alias("kind"),
+        "band",
+        F.col("band_val").cast("long").alias("bucket"),
+    )
+    dirty = upsert.bucket_ids_for(
+        keys, meta["bucket_cols"], meta["n_buckets"]
+    )
+    with open(os.path.join(reg, f"v{upsert.current_version(reg)}",
+                           "manifest.json")) as f:
+        total = len(json.load(f))
+    assert len(dirty) <= 8 < total, (len(dirty), total)
+    # and the pruned decision still drops an exact copy of a stored image
+    dup = multimodal.dhash_images(_media(spark, [(200, stored[7][1])]))
+    out = ingest.image_neardup_batch_against_registry(dup, reg)
+    assert out.count() == 0
 
 
 def test_image_decide_rejects_overwide_hamming(spark, tmp_path):
@@ -674,9 +384,6 @@ def test_image_decide_rejects_overwide_hamming(spark, tmp_path):
     exactness guarantee — it must error, not silently lose recall.
     r11 advisory: the error must be a ValueError, not a bare assert
     (asserts are stripped under python -O)."""
-    import pytest
-    from near_event_streams_spark.operators import multimodal
-
     hashed = multimodal.dhash_images(
         _media(spark, [(1, _ppm(6, 6, _img(3)))])
     )
@@ -692,8 +399,6 @@ def test_dhash_degenerate_payload_passes_through_undecoded(spark):
     """r10 advisory: a syntactically valid 'P3\\n0 0\\n255\\n' header
     (and a 1x1-truncation cousin) must yield decoded=False, not an
     uncaught unpack error that fails the whole Spark task."""
-    from near_event_streams_spark.operators import multimodal
-
     batch = _media(
         spark,
         [
@@ -708,41 +413,33 @@ def test_dhash_degenerate_payload_passes_through_undecoded(spark):
     assert rows[3]["decoded"] is True and len(rows[3]["bands"]) == 8
 
 
-def test_neardup_respects_custom_id_col(spark, tmp_path):
+def test_neardup_respects_custom_id_col(spark):
     """r13 review regression: _sigs_and_bands renamed doc_id->id_col
     BEFORE band_keys_from_sig (which hardcodes the doc_id shape), so
     EVERY near-dup entry point crashed with UNRESOLVED_COLUMN on the
-    first batch for any id_col other than 'doc_id'. Drive both forms
-    with id_col='event_id' and pin the same verdicts as the default."""
-    reg = str(tmp_path / "reg")
+    first batch for any id_col other than 'doc_id'. Drive the decision
+    with id_col='event_id', with and without a registry, and pin the
+    same verdicts as the default."""
     rows = [(5, NEAR), (3, BASE), (7, OTHER)]
     b = spark.createDataFrame(rows, "event_id long, text string")
-    acc = ingest.neardup_batch_against_registry(b, reg, id_col="event_id")
-    assert {r["event_id"] for r in acc.collect()} == {3, 7}
-    ingest.register_batch_neardup(acc, reg, batch_id=0, id_col="event_id")
+    acc = ingest.neardup_select(b, None, None, id_col="event_id")
+    assert _ids(acc, "event_id") == {3, 7}
     b2 = spark.createDataFrame(
         [(10, NEAR), (11, BASE)], "event_id long, text string"
     )
-    a2 = ingest.neardup_batch_against_registry(
-        b2, reg, id_col="event_id"
+    a2 = ingest.neardup_select(
+        b2, *_registry(acc, id_col="event_id"), id_col="event_id"
     )
     assert a2.count() == 0  # both near/exact dups of registered doc 3
-    # the pure (registry-less) form too
-    sel = ingest.neardup_select(b, None, None, id_col="event_id")
-    assert {r["event_id"] for r in sel.collect()} == {3, 7}
 
 
-def test_fully_identical_in_batch_rows_pass_once(spark, tmp_path):
+def test_fully_identical_in_batch_rows_pass_once(spark):
     """r13 review: two FULLY identical rows (same id AND same text —
     a producer retry inside one micro-batch) both matched the min-id
-    keep row via the semi-join and both reached the corpus. Exactly
-    one copy must survive, on the exact AND the near-dup path."""
-    reg_e = str(tmp_path / "rege")
+    keep row via the semi-join and both were accepted. Exactly one
+    copy must survive."""
     batch = _docs(spark, [(1, BASE), (1, BASE), (2, OTHER)])
-    surv = ingest.dedup_batch_against_registry(batch, reg_e)
-    assert sorted(r["doc_id"] for r in surv.collect()) == [1, 2]
-    reg_n = str(tmp_path / "regn")
-    acc = ingest.neardup_batch_against_registry(batch, reg_n)
+    acc = ingest.neardup_select(batch, None, None)
     assert sorted(r["doc_id"] for r in acc.collect()) == [1, 2]
 
 

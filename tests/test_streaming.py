@@ -1,6 +1,6 @@
 """Structured Streaming parity tests: file-source pipeline end-to-end,
-rejected side stream, watermark aggregation, streaming dedup, checkpoint
-restart (sync-from-interruption)."""
+rejected side stream, observed metrics, checkpoint restart
+(sync-from-interruption), replay-safe sinks and compaction."""
 
 import json
 import os
@@ -93,129 +93,6 @@ def test_whitelist_applies_in_stream(spark, fixture_messages_path, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 4  # 2 events from contract-a x 2 topics
     assert {r["key"] for r in got.collect()} == {"nft.contract-a.near"}
-
-
-def test_windowed_contract_counts_with_watermark(
-    spark, fixture_messages_path, tmp_path
-):
-    src, _, ckpt = _stream_dirs(tmp_path, fixture_messages_path)
-    msgs = stream_messages_json(spark, src)
-    from near_event_streams_spark.operators.extract import extract_events
-
-    collected = []
-
-    def sink(batch, batch_id):
-        collected.extend(batch.collect())
-
-    def transform(stream_df):
-        events, _ = extract_events(stream_df)
-        return job.windowed_contract_counts(events)
-
-    q = job.run_batches(transform(msgs), ckpt, sink)
-    q.awaitTermination(120)
-    counts = {
-        (r["contract_account_id"], r["n_events"]) for r in collected
-    }
-    assert ("nft.contract-a.near", 2) in counts or (
-        "nft.contract-a.near",
-        1,
-    ) in counts  # two blocks may fall in different windows
-    assert any(c[0] == "app.other.near" for c in counts)
-
-
-def test_streaming_dedup_receipts(spark, tmp_path):
-    """Duplicate delivery of the same block collapses to one event."""
-    block = {
-        "block": {"header": {"height": 1, "timestamp": 1_700_000_000_000_000_000}},
-        "shards": [
-            {
-                "shard_id": 0,
-                "receipt_execution_outcomes": [
-                    {
-                        "receipt": {"receipt_id": "dup", "receiver_id": "c.near"},
-                        "execution_outcome": {
-                            "outcome": {
-                                "logs": [
-                                    'EVENT_JSON:{"standard":"nep171",'
-                                    '"version":"1.0.0","event":"nft_mint",'
-                                    '"data":[{"owner_id":"o","token_ids":["1"]}]}'
-                                ]
-                            }
-                        },
-                    }
-                ],
-            }
-        ],
-    }
-    src = tmp_path / "dupblocks"
-    src.mkdir()
-    with open(src / "b.jsonl", "w") as f:
-        f.write(json.dumps(block) + "\n")
-        f.write(json.dumps(block) + "\n")  # redelivered
-
-    from near_event_streams_spark.operators.extract import extract_events
-
-    collected = []
-
-    def sink(batch, batch_id):
-        collected.extend(batch.collect())
-
-    def transform(stream_df):
-        events, _ = extract_events(stream_df)
-        return job.dedup_receipts(events)
-
-    msgs = stream_messages_json(spark, str(src))
-    q = job.run_batches(transform(msgs), str(tmp_path / "ck2"), sink)
-    q.awaitTermination(120)
-    assert len(collected) == 1
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark variant: same effectively-once
-    collapse, but with guaranteed state eviction past the watermark."""
-    block = {
-        "block": {"header": {"height": 1, "timestamp": 1_700_000_000_000_000_000}},
-        "shards": [
-            {
-                "shard_id": 0,
-                "receipt_execution_outcomes": [
-                    {
-                        "receipt": {"receipt_id": "dup", "receiver_id": "c.near"},
-                        "execution_outcome": {
-                            "outcome": {
-                                "logs": [
-                                    'EVENT_JSON:{"standard":"nep171",'
-                                    '"version":"1.0.0","event":"nft_mint",'
-                                    '"data":[{"owner_id":"o","token_ids":["1"]}]}'
-                                ]
-                            }
-                        },
-                    }
-                ],
-            }
-        ],
-    }
-    src = tmp_path / "wmblocks"
-    src.mkdir()
-    with open(src / "b.jsonl", "w") as f:
-        f.write(json.dumps(block) + "\n")
-        f.write(json.dumps(block) + "\n")  # redelivered
-
-    from near_event_streams_spark.operators.extract import extract_events
-
-    collected = []
-
-    def sink(batch, batch_id):
-        collected.extend(batch.collect())
-
-    def transform(stream_df):
-        events, _ = extract_events(stream_df)
-        return job.dedup_receipts_within_watermark(events)
-
-    msgs = stream_messages_json(spark, str(src))
-    q = job.run_batches(transform(msgs), str(tmp_path / "ckwm"), sink)
-    q.awaitTermination(120)
-    assert len(collected) == 1
 
 
 def test_observe_metrics_surface_in_listener(
@@ -446,19 +323,29 @@ def test_sink_exchange_per_target(
 
 
 def test_one_stream_runner():
-    """Every stream in the package starts through ``job.run_batches``:
-    ``writeStream`` appears exactly once in the package source."""
+    """The parity job is the package's only stream: ``writeStream``
+    appears exactly once, in ``job.run_batches``; every ``run_batches(``
+    call is in ``streaming/job.py``; every ``readStream`` is in
+    ``sources/streamer.py``."""
     import pathlib
 
     pkg = pathlib.Path(job.__file__).parents[1]
-    hits = [
-        (str(path.relative_to(pkg)), n)
-        for path in sorted(pkg.rglob("*.py"))
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if "writeStream" in line
-    ]
-    assert len(hits) == 1, hits
-    assert hits[0][0] == "streaming/job.py", hits
+
+    def hits(needle):
+        return [
+            (str(path.relative_to(pkg)), n)
+            for path in sorted(pkg.rglob("*.py"))
+            for n, line in enumerate(path.read_text().splitlines(), 1)
+            if needle in line
+        ]
+
+    writes = hits("writeStream")
+    assert len(writes) == 1, writes
+    assert writes[0][0] == "streaming/job.py", writes
+    runs = hits("run_batches(")
+    assert {f for f, _ in runs} == {"streaming/job.py"}, runs
+    reads = hits("readStream")
+    assert {f for f, _ in reads} == {"sources/streamer.py"}, reads
 
 
 def test_inplace_compaction_preserves_rows_and_replay_safety(

@@ -1,5 +1,5 @@
 """Merge-upsert state store tests: latest-per-key semantics, bucket-pruned
-copy-on-write commits, replay/crash safety, and the streaming surface."""
+copy-on-write commits, replay/crash safety and vacuum."""
 
 import json
 import os
@@ -32,6 +32,12 @@ def test_merge_keeps_latest_per_key(spark, tmp_path):
         ("b", 1, "b1"),
         ("c", 1, "c1"),
     }
+    # two rows for one key inside ONE batch: the higher seq wins too
+    upsert.merge_upsert(
+        _batch(spark, [("d", 1, "d1"), ("d", 3, "d3")]), path, ["k"], "seq"
+    )
+    assert ("d", 3, "d3") in _state_rows(spark, path)
+    assert ("d", 1, "d1") not in _state_rows(spark, path)
 
 
 def test_out_of_order_and_replay_are_noops(spark, tmp_path):
@@ -95,32 +101,6 @@ def test_orphan_version_from_crash_is_ignored_then_healed(spark, tmp_path):
     )
     assert v == 2  # the orphan slot was reclaimed
     assert _state_rows(spark, path) == before | {("b", 1, "b1")}
-
-
-def test_streaming_upsert_end_to_end_with_restart(spark, tmp_path):
-    """File-source stream -> upsert store via foreachBatch; a restarted
-    query from the same checkpoint merges only new files."""
-    src = tmp_path / "src"
-    src.mkdir()
-    path, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    with open(src / "f1.jsonl", "w") as f:
-        for k, seq, val in [("a", 1, "a1"), ("b", 1, "b1"), ("a", 2, "a2")]:
-            f.write(json.dumps({"k": k, "seq": seq, "val": val}) + "\n")
-    schema = "k string, seq long, val string"
-
-    def run():
-        stream = spark.readStream.schema(schema).json(str(src))
-        upsert.start_upsert_stream(
-            stream, path, ckpt, ["k"], "seq"
-        ).awaitTermination(120)
-
-    run()
-    assert _state_rows(spark, path) == {("a", 2, "a2"), ("b", 1, "b1")}
-
-    with open(src / "f2.jsonl", "w") as f:
-        f.write(json.dumps({"k": "b", "seq": 9, "val": "b9"}) + "\n")
-    run()
-    assert _state_rows(spark, path) == {("a", 2, "a2"), ("b", 9, "b9")}
 
 
 def test_read_state_prunes_to_manifest_buckets(spark, tmp_path):
@@ -196,6 +176,7 @@ def test_vacuum_reclaims_superseded_buckets(spark, tmp_path):
     removed = upsert.vacuum(store, retain_versions=1)
     after = bucket_dirs()
     assert removed > 0 and len(after) < len(before)
+    _assert_vacuum_bounded(store, retain_versions=1)
     # every manifest-referenced bucket survived; state reads correctly
     state = {
         (r["k"], r["v"]) for r in upsert.read_state(spark, store).collect()
@@ -262,6 +243,37 @@ def test_time_travel_horizon_is_vacuum(spark, tmp_path):
     assert got == {("a", 2, "a2"), ("b", 1, "b1")}
 
 
+def _assert_vacuum_bounded(path, retain_versions):
+    """After ``vacuum``: every bucket dir at or below the retention floor
+    is referenced by some retained manifest (current or inside the
+    window), and the surviving bucket dirs are bounded by the retained
+    manifests' entries."""
+    cur = upsert.current_version(path)
+    floor = cur - retain_versions
+    live: set[tuple[int, str]] = set()
+    n_manifest_entries = 0
+    for v_ref in range(max(floor, 0) + 1, cur + 1):
+        with open(os.path.join(path, f"v{v_ref}", "manifest.json")) as f:
+            refs = {str(k): int(v) for k, v in json.load(f).items()}
+        n_manifest_entries += len(refs)
+        live |= {(owner, b) for b, owner in refs.items()}
+    n_bucket_dirs = 0
+    for entry in os.listdir(path):
+        if not (entry.startswith("v") and entry[1:].isdigit()):
+            continue
+        v = int(entry[1:])
+        buckets = [
+            d.split("=", 1)[1]
+            for d in os.listdir(os.path.join(path, entry))
+            if d.startswith("_bucket=")
+        ]
+        n_bucket_dirs += len(buckets)
+        if v <= floor:
+            dead = [b for b in buckets if (v, b) not in live]
+            assert not dead, (entry, dead)
+    assert n_bucket_dirs <= n_manifest_entries
+
+
 def test_vacuum_keeps_buckets_of_retained_manifests(spark, tmp_path):
     """r13 review: vacuum computed liveness from the CURRENT manifest
     only, so a bucket referenced by a RETAINED version's manifest but
@@ -279,6 +291,7 @@ def test_vacuum_keeps_buckets_of_retained_manifests(spark, tmp_path):
         _batch(spark, [("a", 3, "a3"), ("b", 3, "b3")]), path, ["k"], "seq"
     )
     upsert.vacuum(path, retain_versions=2)
+    _assert_vacuum_bounded(path, retain_versions=2)
     v2 = upsert.read_state_at(spark, path, 2)
     assert v2 is not None, "retained-horizon version became unreadable"
     got = {(r["k"], r["seq"], r["val"]) for r in v2.collect()}
@@ -307,44 +320,6 @@ def test_corrupt_latest_pointer_raises_not_empty(spark, tmp_path):
         )
     empty = str(tmp_path / "none")
     assert upsert.current_version(empty) == 0
-
-
-def test_stream_into_prefix_bucketed_store(spark, tmp_path):
-    """r13 review: start_upsert_stream did not plumb bucket_cols, so a
-    store created with prefix bucketing rejected every micro-batch
-    (pinned-layout mismatch) and the stream failed permanently."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    upsert.merge_upsert(
-        spark.createDataFrame(
-            [("a", "x", 1, "v1")], "k1 string, k2 string, seq long, val string"
-        ),
-        path,
-        key_cols=["k1", "k2"],
-        seq_col="seq",
-        bucket_cols=["k1"],
-    )
-    src = tmp_path / "src"
-    src.mkdir()
-    with open(src / "f1.jsonl", "w") as f:
-        f.write(
-            json.dumps({"k1": "a", "k2": "y", "seq": 2, "val": "v2"}) + "\n"
-        )
-    schema = "k1 string, k2 string, seq long, val string"
-    stream = spark.readStream.schema(schema).json(str(src))
-    upsert.start_upsert_stream(
-        stream,
-        path,
-        str(tmp_path / "ckpt"),
-        ["k1", "k2"],
-        "seq",
-        bucket_cols=["k1"],
-    ).awaitTermination(120)
-    got = {
-        (r["k1"], r["k2"], r["val"])
-        for r in upsert.read_state(spark, path).collect()
-    }
-    assert got == {("a", "x", "v1"), ("a", "y", "v2")}
 
 
 def test_read_state_at_refuses_uncommitted_orphan_version(spark, tmp_path):
