@@ -12,8 +12,7 @@ Spark mapping:
   form) or Kafka (when the loaded ``nes.toml`` has a ``[kafka]`` table
   and ``--source kafka``) — and writes routed records to a parquet dir
   or Kafka. Parse and validation rejects go to ``{home}/rejected``
-  through a second query with its own checkpoint,
-  ``{checkpoint}-rejected``, on the routed query's trigger.
+  from the same query, micro-batch and checkpoint.
 * sync modes (``configs.rs:101-117``):
   - ``sync-from-interruption`` → reuse ``{home}/checkpoint`` (restart
     continues from the last committed micro-batch);
@@ -81,8 +80,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--timeout",
         type=float,
         default=None,
-        help="awaitTermination timeout in seconds, per query "
-        "(default: forever)",
+        help="awaitTermination timeout in seconds (default: forever)",
     )
     sync = run.add_subparsers(dest="sync_mode", required=True)
     sync.add_parser("sync-from-interruption")
@@ -149,6 +147,7 @@ def cmd_run(args: argparse.Namespace) -> int:
             F.col("block.header.height") >= args.height
         )
 
+    rejected_dir = os.path.join(args.home_dir, "rejected")
     if args.sink == "kafka":
         query = job.start_to_kafka(
             messages,
@@ -157,27 +156,23 @@ def cmd_run(args: argparse.Namespace) -> int:
             bootstrap_servers=config.kafka.get(
                 "bootstrap.servers", "localhost:9092"
             ),
+            rejected_dir=rejected_dir,
         )
     else:
         if not args.out_dir:
             print("--out-dir required for the parquet sink", file=sys.stderr)
             return 2
-        query = job.start_to_parquet(messages, config, args.out_dir, checkpoint)
-    rejects = job.start_rejected_sink(
-        messages,
-        config,
-        os.path.join(args.home_dir, "rejected"),
-        checkpoint + "-rejected",
-        available_now=args.sink == "parquet",
-    )
-
-    queries = [query, rejects]
+        query = job.start_to_parquet(
+            messages,
+            config,
+            args.out_dir,
+            checkpoint,
+            rejected_dir=rejected_dir,
+        )
     try:
-        for q in queries:
-            q.awaitTermination(args.timeout)
+        query.awaitTermination(args.timeout)
     finally:
-        for q in queries:
-            q.stop()
+        query.stop()
     return 0
 
 

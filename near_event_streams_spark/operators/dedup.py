@@ -61,20 +61,6 @@ def word_bigrams(words: Column) -> Column:
     )
 
 
-def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct word-bigram shingles per document. The words array is
-    materialized in its own projection first so the generator input
-    never re-evaluates the split."""
-    return (
-        docs.withColumn("_words", words_col(F.col(text_col)))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(word_bigrams(F.col("_words"))).alias("shingle"),
-        )
-        .distinct()
-    )
-
-
 def doc_shingle_ids(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -20,7 +20,7 @@ Pipeline (each step cites the reference behavior it mirrors):
    ``from_json`` types the payload as a superset NEP-171 item array, from
    which the mint and transfer variants are projected
    (``src/event_types.rs:77-91``)
-4. split into OK stream and rejected stream:
+4. tag each line with its ``reject_reason`` (null for a valid event):
    - unparseable envelope → rejected, reason ``parse_error``
      (``src/events.rs:336-344`` warn-and-drop)
    - regex-invalid ``standard``/``event`` → rejected, reason
@@ -176,23 +176,25 @@ _FIELD_PATTERN = sql_string(EVENT_FIELD_PATTERN)
 _INVALID = (
     f"(NOT (standard RLIKE {_FIELD_PATTERN} AND event RLIKE {_FIELD_PATTERN}))"
 )
+_REJECT_REASON = (
+    f"CASE WHEN {_PARSE_FAILED} THEN 'parse_error' "
+    f"WHEN {_INVALID} THEN 'validation_error' END"
+)
+
+
+def tag_rejects(parsed: DataFrame) -> DataFrame:
+    """Add ``reject_reason``: ``parse_error`` (the reference's
+    drop-and-warn, ``src/events.rs:336-344``), ``validation_error``
+    (``:322-334``) or null for a valid event. We keep the rejects so
+    sinks can count or persist them."""
+    return parsed.selectExpr("*", f"{_REJECT_REASON} AS reject_reason")
 
 
 def split_valid(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split parsed rows into (valid events, rejected rows with reason).
-
-    Mirrors the reference's two drop-and-warn paths: parse failure
-    (``src/events.rs:336-344``) and validation failure
-    (``src/events.rs:322-334``). The reference logs and drops; we keep the
-    rejects as a side stream so operators/sinks can count or persist them.
-    """
-    rejected = parsed.filter(f"{_PARSE_FAILED} OR {_INVALID}").selectExpr(
-        "*",
-        f"CASE WHEN {_PARSE_FAILED} THEN 'parse_error' "
-        "ELSE 'validation_error' END AS reject_reason",
-    )
-    ok = parsed.filter(f"(NOT {_PARSE_FAILED}) AND (NOT {_INVALID})")
-    return ok, rejected
+    """Split parsed rows into (valid events, rejected rows with reason)."""
+    tagged = tag_rejects(parsed)
+    ok = tagged.filter("reject_reason IS NULL").drop("reject_reason")
+    return ok, tagged.filter("reject_reason IS NOT NULL")
 
 
 def with_emit_info(events: DataFrame) -> DataFrame:
@@ -209,7 +211,7 @@ def extract_events(
 ) -> tuple[DataFrame, DataFrame]:
     """Full extraction: StreamerMessage frame → (events, rejected).
 
-    The composed plan is: explode×3 → prefix filter → parse → validate-split
+    The composed plan is: explode×3 → prefix filter → parse → tag and split
     → emit_info. All narrow; one stage under whole-stage codegen.
     """
     logs = explode_to_logs(messages)

@@ -50,18 +50,17 @@ def _contract_in(names: Sequence[str]) -> str:
     return f"emit_info.contract_account_id IN ({listed})"
 
 
-def apply_whitelist(events: DataFrame, whitelist: Sequence[str]) -> DataFrame:
-    """Empty whitelist ⇒ all pass (src/events.rs:276-284)."""
-    if not whitelist:
-        return events
-    return events.filter(_contract_in(whitelist))
-
-
-def apply_blacklist(events: DataFrame, blacklist: Sequence[str]) -> DataFrame:
-    """Empty blacklist ⇒ none dropped (src/events.rs:285-293)."""
-    if not blacklist:
-        return events
-    return events.filter(f"NOT ({_contract_in(blacklist)})")
+def contract_filter(
+    whitelist: Sequence[str], blacklist: Sequence[str]
+) -> str | None:
+    """SQL predicate for the events the whitelist and blacklist keep, or
+    None when both lists are empty (src/events.rs:276-293)."""
+    keep = []
+    if whitelist:
+        keep.append(_contract_in(whitelist))
+    if blacklist:
+        keep.append(f"NOT ({_contract_in(blacklist)})")
+    return " AND ".join(keep) or None
 
 
 # Kafka message key (src/event_types.rs:26-35).
@@ -77,6 +76,19 @@ def _specific_topic(prefix: str) -> str:
     return f"format_string('%s.%s.%s', {sql_string(prefix)}, standard, event)"
 
 
+# ``from_json`` returns a JSON string payload as its text without the
+# quotes, while serde's ``Generic(Value)`` keeps them
+# (src/event_types.rs:81). A payload text that does not start with ``{`` or
+# ``[`` is re-read as a VARIANT to tell a string from a number or a
+# boolean. Objects and arrays keep their raw text (a VARIANT's ``to_json``
+# would sort their keys), and so does a string whose text starts with
+# ``{`` or ``[``.
+_SCALAR = "variant_get(try_parse_json(event_json), '$.data')"
+_GENERIC = (
+    "CASE WHEN data_json IS NULL OR left(data_json, 1) IN ('{', '[') "
+    f"THEN data_json WHEN schema_of_variant({_SCALAR}) = 'STRING' "
+    f"THEN to_json({_SCALAR}) ELSE data_json END"
+)
 # Compact JSON of the full event, preserving the reference field order
 # (standard, version, event, data, emit_info) and the untagged ``data``
 # union (typed variant if matched, else raw JSON passthrough). ``data`` and
@@ -86,7 +98,7 @@ _DATA = (
     "coalesce("
     "CASE WHEN data_mint IS NOT NULL THEN to_json(data_mint) END, "
     "CASE WHEN data_transfer IS NOT NULL THEN to_json(data_transfer) END, "
-    "data_json)"
+    f"{_GENERIC})"
 )
 _ENVELOPE_JSON = "to_json(struct(standard, version, event))"
 _VALUE = (
@@ -99,29 +111,25 @@ _VALUE = (
 )
 
 
-def routed_records(
-    events: DataFrame, topic_prefix: str, all_topic: str
-) -> DataFrame:
-    """Fan events out to (topic, key, value, block_height) records.
-
-    One record per (event, destination topic): the all-events topic
-    (src/events.rs:158-166) and the specific ``{prefix}.{standard}.{event}``
-    topic (:168-176). Key and value are computed once per event, below the
-    explode, so the fan-out only copies them.
-    """
-    per_event = events.selectExpr(
+def event_columns(topic_prefix: str, all_topic: str) -> list[str]:
+    """SQL of an event's routed columns, computed once per event below the
+    fan-out: its destination ``topics`` — the all-events topic
+    (src/events.rs:158-166) and ``{prefix}.{standard}.{event}`` (:168-176)
+    — its ``key`` and its ``value``."""
+    return [
         f"array({sql_string(all_topic)}, {_specific_topic(topic_prefix)}) "
         "AS topics",
         f"{_KEY} AS key",
         f"{_VALUE} AS value",
-        "emit_info.block_height AS block_height",
-    )
-    return per_event.selectExpr(
-        "explode(topics) AS topic", "key", "value", "block_height"
-    )
+    ]
 
 
-def ordered_for_sink(records: DataFrame, partitions: int | None = None) -> DataFrame:
+# One record per (event, destination topic): the explode only copies the
+# event's key and value.
+FAN_OUT = ("explode(topics) AS topic", "key", "value", "block_height")
+
+
+def ordered_for_sink(records: DataFrame) -> DataFrame:
     """Per-key ordering discipline before a Kafka sink.
 
     ``repartition(key)`` co-locates each key's records in one partition;
@@ -132,7 +140,7 @@ def ordered_for_sink(records: DataFrame, partitions: int | None = None) -> DataF
     concurrent). Only the Kafka sink needs this exchange; the parquet sink
     sorts within partitions without one (``streaming/job.py``).
     """
-    parts = records.repartition(partitions, "key") if partitions else records.repartition("key")
+    parts = records.repartition("key")
     return parts.sortWithinPartitions("key", "block_height")
 
 

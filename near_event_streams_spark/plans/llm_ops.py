@@ -1977,16 +1977,6 @@ FROM ranked WHERE rank <= 5
 )
 
 
-def ann_opq_topk_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-OPQ approximate top-k result list (detail view; cosines are
-    exact because the shortlist is re-scored on full vectors)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.opq_topk(
-        queries, emb, k=5, n_clusters=16, nprobe=12, m=8, ks=256, refine=4
-    ).orderBy("query_id", "rank")
-
-
 def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-OPQ ANN (``similarity.opq_topk``), oracle-gated: recall@5 vs
     the in-engine brute-force baseline must reach 0.8 — the same gate as

@@ -26,10 +26,6 @@ def read_messages_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(STREAMER_MESSAGE_SCHEMA).json(path)
 
 
-def read_messages_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(STREAMER_MESSAGE_SCHEMA).parquet(path)
-
-
 def stream_messages_json(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:

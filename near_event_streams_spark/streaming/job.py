@@ -1,19 +1,18 @@
 """The reference's streaming job, re-expressed as Structured Streaming.
 
 Maps the reference's run loop (``src/main.rs:111-141`` listen_blocks →
-``handle_message`` → ``store_events``) onto:
+``handle_message`` → ``store_events``) onto one query per run:
 
     file/Kafka StreamerMessage stream (sources/streamer.py)
-      → extract_events (explode×3, filter, parse, validate, emit_info)
-      → whitelist/blacklist
-      → routed_records (2-topic fan-out: one projection, one explode)
-      → run_batches: foreachBatch per-target layout + sink write
+      → per event line: a valid event's routed columns or a reject row
+        (explode×3, filter, parse, tag rejects, emit_info, white/blacklist)
+      → run_batches: foreachBatch writes the routed records and the rejects
 
 Semantics parity:
 
 * restart from checkpoint (the reference's sync modes map to
-  checkpoint/startingOffsets — ``src/configs.rs:101-127``). The routed
-  stream starts through ``run_batches``, whose ``foreachBatch`` redelivers a
+  checkpoint/startingOffsets — ``src/configs.rs:101-127``). The stream
+  starts through ``run_batches``, whose ``foreachBatch`` redelivers a
   batch that crashed between its write and its commit. The Kafka sink is
   therefore at-least-once, like the reference's fire-and-await sends
   (``src/events.rs:89-97``); the parquet sink overwrites its own
@@ -28,11 +27,12 @@ Semantics parity:
   only a layout, so ``start_to_parquet`` sorts each batch within its
   partitions by (key, block_height), with no exchange: no task takes a
   hot key's whole share.
-* rejected records (parse/validation failures) go to a side sink instead
-  of only a warn log — a strict superset of the reference's behavior
-  (``src/events.rs:325-344``). ``start_rejected_sink`` runs through the
-  same ``run_batches`` with the same ``batch_id=N`` overwrite, so both
-  outputs are replay-safe in the same way.
+* rejected records (parse/validation failures) go to ``rejected_dir``
+  instead of only a warn log — a strict superset of the reference's
+  one-pass loop (``src/events.rs:313-344``). They come from the routed
+  records' micro-batch, persisted and read once per output, and overwrite
+  ``rejected_dir/batch_id=N``: one offset log for both outputs, so a
+  replayed batch rewrites both.
 * the reference's ``concurrency`` bound maps to the sources'
   ``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger`` pacing
   (``src/configs.rs:79-81``, ``sources/streamer.py``).
@@ -53,31 +53,62 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from near_event_streams_spark.config import NesConfig
-from near_event_streams_spark.operators.extract import extract_events
-from near_event_streams_spark.operators.routing import (
-    apply_blacklist,
-    apply_whitelist,
-    ordered_for_sink,
-    routed_records,
+from near_event_streams_spark.operators.extract import (
+    explode_to_logs,
+    parse_events,
+    tag_rejects,
+    with_emit_info,
 )
+from near_event_streams_spark.operators.routing import (
+    FAN_OUT,
+    contract_filter,
+    event_columns,
+    ordered_for_sink,
+)
+
+_REJECTED_COLUMNS = (
+    "block_height", "shard_id", "receipt_id", "contract_account_id", "log",
+    "reject_reason",
+)
+
+
+def _event_lines(messages: DataFrame, config: NesConfig) -> DataFrame:
+    """The stream plan: one row per event line, holding either a valid
+    event's routed columns (``reject_reason`` null) or its reject row.
+
+    The whitelist and blacklist drop valid events only."""
+    logs = explode_to_logs(messages)
+    lines = with_emit_info(tag_rejects(parse_events(logs)))
+    keep = contract_filter(
+        config.whitelist_contract_ids, config.blacklist_contract_ids
+    )
+    if keep:
+        lines = lines.filter(f"reject_reason IS NOT NULL OR ({keep})")
+    return lines.selectExpr(
+        *event_columns(config.topic_prefix, config.near_events_all_topic),
+        *_REJECTED_COLUMNS,
+    )
+
+
+def _routed(lines: DataFrame) -> DataFrame:
+    return lines.filter("reject_reason IS NULL").selectExpr(*FAN_OUT)
+
+
+def _rejected(lines: DataFrame) -> DataFrame:
+    rejects = lines.filter("reject_reason IS NOT NULL")
+    return rejects.selectExpr(*_REJECTED_COLUMNS)
 
 
 def build_routed_stream(
     messages: DataFrame, config: NesConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """(routed (topic,key,value,block_height) frame, rejected frame).
+    """(routed (topic,key,value,block_height) frame, rejected frame): the
+    two views of the stream plan the starters run.
 
     Works identically on static and streaming inputs — every op is narrow.
     """
-    events, rejected = extract_events(messages)
-    events = apply_whitelist(events, config.whitelist_contract_ids)
-    events = apply_blacklist(events, config.blacklist_contract_ids)
-    routed = routed_records(
-        events,
-        topic_prefix=config.topic_prefix,
-        all_topic=config.near_events_all_topic,
-    )
-    return routed, rejected
+    lines = _event_lines(messages, config)
+    return _routed(lines), _rejected(lines)
 
 
 def run_batches(
@@ -102,12 +133,42 @@ def run_batches(
     return writer.start()
 
 
+def _start(
+    messages: DataFrame,
+    config: NesConfig,
+    checkpoint_dir: str,
+    write_routed: Callable[[DataFrame, int], None],
+    rejected_dir: str | None,
+    available_now: bool,
+) -> StreamingQuery:
+    """One query per run. With a ``rejected_dir`` the batch is persisted,
+    so the source is read once for both outputs."""
+
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        if rejected_dir is None:
+            write_routed(_routed(batch), batch_id)
+            return
+        batch.persist()
+        try:
+            write_routed(_routed(batch), batch_id)
+            _rejected(batch).write.mode("overwrite").parquet(
+                f"{rejected_dir}/batch_id={batch_id}"
+            )
+        finally:
+            batch.unpersist()
+
+    return run_batches(
+        _event_lines(messages, config), checkpoint_dir, _sink, available_now
+    )
+
+
 def start_to_parquet(
     messages: DataFrame,
     config: NesConfig,
     out_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
+    rejected_dir: str | None = None,
 ) -> StreamingQuery:
     """Run the pipeline into an effectively-once parquet sink.
 
@@ -119,18 +180,20 @@ def start_to_parquet(
     needs this sink-side idempotence on top of the checkpointed source
     offsets. One partition dir per micro-batch: readers prune on their own
     columns, so the batch_id layer costs only directory fan-out (compact
-    with ``sinks.parquet_sink`` if batches are tiny).
+    with ``sinks.parquet_sink`` if batches are tiny). Rejects go to
+    ``rejected_dir`` when one is given, never under ``out_dir``.
     """
-    routed, _ = build_routed_stream(messages, config)
 
-    def _write(batch: DataFrame, batch_id: int) -> None:
+    def _write(routed: DataFrame, batch_id: int) -> None:
         (
-            batch.sortWithinPartitions("key", "block_height")
+            routed.sortWithinPartitions("key", "block_height")
             .write.mode("overwrite")
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    return run_batches(routed, checkpoint_dir, _write, available_now)
+    return _start(
+        messages, config, checkpoint_dir, _write, rejected_dir, available_now
+    )
 
 
 def start_to_kafka(
@@ -138,17 +201,18 @@ def start_to_kafka(
     config: NesConfig,
     checkpoint_dir: str,
     bootstrap_servers: str,
+    rejected_dir: str | None = None,
 ) -> StreamingQuery:
     """Run the pipeline into Kafka with dynamic topic routing.
 
-    One sink, ``topic`` column per record — the fan-out is already done
-    upstream. Requires the spark-sql-kafka package on the cluster.
+    One sink, ``topic`` column per record. Rejects, when ``rejected_dir``
+    is given, go to parquet on the same continuous trigger. Requires the
+    spark-sql-kafka package on the cluster.
     """
-    routed, _ = build_routed_stream(messages, config)
 
-    def _write(batch: DataFrame, batch_id: int) -> None:
+    def _write(routed: DataFrame, batch_id: int) -> None:
         (
-            ordered_for_sink(batch)
+            ordered_for_sink(routed)
             .select("topic", "key", "value")
             .write.format("kafka")
             .option("kafka.bootstrap.servers", bootstrap_servers)
@@ -157,33 +221,9 @@ def start_to_kafka(
             .save()
         )
 
-    return run_batches(routed, checkpoint_dir, _write, available_now=False)
-
-
-def start_rejected_sink(
-    messages: DataFrame,
-    config: NesConfig,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Side stream of rejected rows (reason + raw log) — the warn-and-drop
-    path made durable, with the same replay-safe ``out_dir/batch_id=N``
-    overwrite as :func:`start_to_parquet`."""
-    _, rejected = extract_events(messages)
-    keep = rejected.select(
-        "block_height",
-        "shard_id",
-        "receipt_id",
-        "contract_account_id",
-        "log",
-        "reject_reason",
+    return _start(
+        messages, config, checkpoint_dir, _write, rejected_dir, False
     )
-
-    def _write(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return run_batches(keep, checkpoint_dir, _write, available_now)
 
 
 def with_batch_observability(

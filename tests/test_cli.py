@@ -7,6 +7,9 @@ in bench/verify flows.
 """
 
 import shutil
+import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 from near_event_streams_spark.cli import main
 
@@ -27,27 +30,67 @@ def test_init_writes_and_refuses_overwrite(tmp_path):
     assert main(["--home-dir", str(home), "init"]) == 1  # refuses
 
 
+class _QueryLog(StreamingQueryListener):
+    """Ids of the streaming queries started and terminated."""
+
+    def __init__(self):
+        self.started, self.terminated = [], []
+
+    def onQueryStarted(self, event):  # noqa: N802
+        self.started.append(str(event.id))
+
+    def onQueryProgress(self, event):  # noqa: N802
+        pass
+
+    def onQueryIdle(self, event):  # noqa: N802
+        pass
+
+    def onQueryTerminated(self, event):  # noqa: N802
+        self.terminated.append(str(event.id))
+
+    def settled(self, timeout=30.0):
+        """Listener events are asynchronous: wait until every started
+        query's termination has arrived, then return the started ids."""
+        deadline = time.time() + timeout
+        while time.time() < deadline:
+            if self.started and len(self.terminated) >= len(self.started):
+                break
+            time.sleep(0.1)
+        return self.started
+
+
 def test_run_file_to_parquet(spark, tmp_path, fixture_messages_path):
     home, src = _prep(tmp_path, fixture_messages_path)
     out = tmp_path / "out"
-    rc = main(
-        [
-            "--home-dir", str(home),
-            "run",
-            "--source-dir", str(src),
-            "--out-dir", str(out),
-            "--timeout", "120",
-            "sync-from-interruption",
-        ]
-    )
+    queries = _QueryLog()
+    spark.streams.addListener(queries)
+    try:
+        rc = main(
+            [
+                "--home-dir", str(home),
+                "run",
+                "--source-dir", str(src),
+                "--out-dir", str(out),
+                "--timeout", "120",
+                "sync-from-interruption",
+            ]
+        )
+        started = queries.settled()
+    finally:
+        spark.streams.removeListener(queries)
     assert rc == 0
+    # one query writes both outputs, on one checkpoint
+    assert len(started) == 1, started
+    checkpoints = sorted(
+        p.name for p in home.iterdir() if p.name.startswith("checkpoint")
+    )
+    assert checkpoints == ["checkpoint"], checkpoints
     got = spark.read.parquet(str(out))
     # 4 valid events x 2 topics (same fixture as test_streaming)
     assert got.count() == 8
     rejected = spark.read.parquet(str(home / "rejected"))
     reasons = sorted(r["reject_reason"] for r in rejected.collect())
     assert reasons == ["parse_error", "validation_error"]
-    assert (home / "checkpoint-rejected").is_dir()
 
 
 def test_run_sync_from_block_filters_height(
@@ -77,17 +120,21 @@ def test_run_sync_from_block_filters_height(
 def test_kafka_sink_argument_binding(
     tmp_path, fixture_messages_path, monkeypatch
 ):
-    """The Kafka sink must receive (checkpoint_dir, bootstrap_servers) in
-    that keyword binding — a positional swap would point the producer at
-    the checkpoint path (untestable live: no broker in the container)."""
+    """The Kafka sink must receive (checkpoint_dir, bootstrap_servers,
+    rejected_dir) in that keyword binding — a positional swap would point
+    the producer at the checkpoint path (untestable live: no broker in the
+    container)."""
     from near_event_streams_spark.streaming import job
 
     home, src = _prep(tmp_path, fixture_messages_path)
     seen = {}
 
-    def fake_start_to_kafka(messages, config, checkpoint_dir, bootstrap_servers):
+    def fake_start_to_kafka(
+        messages, config, checkpoint_dir, bootstrap_servers, rejected_dir
+    ):
         seen["checkpoint_dir"] = checkpoint_dir
         seen["bootstrap_servers"] = bootstrap_servers
+        seen["rejected_dir"] = rejected_dir
 
         class _Q:
             def awaitTermination(self, timeout=None):
@@ -113,6 +160,7 @@ def test_kafka_sink_argument_binding(
     assert seen["checkpoint_dir"] == str(home / "checkpoint")
     # home's nes.toml has no bootstrap.servers -> default applies
     assert seen["bootstrap_servers"] == "localhost:9092"
+    assert seen["rejected_dir"] == str(home / "rejected")
 
 
 def test_run_requires_source_dir(tmp_path):

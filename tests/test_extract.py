@@ -158,6 +158,12 @@ _UNION_CASES = [
     ("[1,2]", "[1,2]"),
     ("12.500", "12.5"),
     ("true", "true"),
+    # JSON strings keep their quotes and escapes (serde_json's output)
+    ('"abc"', '"abc"'),
+    (r'"a\"b"', r'"a\"b"'),
+    ('""', '""'),
+    ('"12"', '"12"'),
+    (r'"é\n\t\/"', r'"é\n\t/"'),
     # flat mint / flat transfer → typed one-element arrays
     (
         '{"owner_id":"a.near","token_ids":["1"]}',

@@ -9,10 +9,8 @@ from pyspark.sql import functions as F
 from near_event_streams_spark.config import NesConfig
 from near_event_streams_spark.operators.extract import extract_events
 from near_event_streams_spark.operators.routing import (
-    apply_blacklist,
-    apply_whitelist,
+    contract_filter,
     ordered_for_sink,
-    routed_records,
     serialize_event,
 )
 from near_event_streams_spark.sources.streamer import (
@@ -27,15 +25,23 @@ def _events(spark, fixture_messages_path):
     return ok
 
 
+def _routed(spark, fixture_messages_path, config=NesConfig()):
+    messages = read_messages_json(spark, fixture_messages_path)
+    routed, _ = build_routed_stream(messages, config)
+    return routed
+
+
 def test_whitelist_empty_keeps_all(spark, fixture_messages_path):
     ev = _events(spark, fixture_messages_path)
-    assert apply_whitelist(ev, []).count() == ev.count()
+    assert contract_filter([], []) is None
+    assert _routed(spark, fixture_messages_path).count() == 2 * ev.count()
 
 
 def test_whitelist_filters(spark, fixture_messages_path):
     ev = _events(spark, fixture_messages_path)
     # a quote and a backslash must stay literal in the SQL IN list
-    kept = apply_whitelist(ev, ["nft.contract-a.near", "o'dd\\.near"])
+    names = ["nft.contract-a.near", "o'dd\\.near"]
+    kept = ev.filter(contract_filter(names, []))
     assert {
         r["emit_info"]["contract_account_id"] for r in kept.collect()
     } == {"nft.contract-a.near"}
@@ -43,7 +49,8 @@ def test_whitelist_filters(spark, fixture_messages_path):
 
 def test_blacklist_filters(spark, fixture_messages_path):
     ev = _events(spark, fixture_messages_path)
-    kept = apply_blacklist(ev, ["nft.contract-a.near", "o'dd\\.near"])
+    names = ["nft.contract-a.near", "o'dd\\.near"]
+    kept = ev.filter(contract_filter([], names))
     assert "nft.contract-a.near" not in {
         r["emit_info"]["contract_account_id"] for r in kept.collect()
     }
@@ -52,7 +59,7 @@ def test_blacklist_filters(spark, fixture_messages_path):
 
 def test_fanout_two_topics_per_event(spark, fixture_messages_path):
     ev = _events(spark, fixture_messages_path)
-    recs = routed_records(ev, "near_events", "near_events_all")
+    recs = _routed(spark, fixture_messages_path)
     n = ev.count()
     assert recs.count() == 2 * n
     topics = {r["topic"] for r in recs.collect()}
@@ -96,8 +103,7 @@ def test_routed_stream_builds_in_few_round_trips(
 
 
 def test_key_is_contract_account(spark, fixture_messages_path):
-    ev = _events(spark, fixture_messages_path)
-    recs = routed_records(ev, "near_events", "near_events_all")
+    recs = _routed(spark, fixture_messages_path)
     keys = {r["key"] for r in recs.collect()}
     assert keys == {
         "nft.contract-a.near",
@@ -135,10 +141,7 @@ def test_generic_data_passthrough_in_value(spark, fixture_messages_path):
 
 
 def test_ordered_for_sink_per_key_order(spark, fixture_messages_path):
-    ev = _events(spark, fixture_messages_path)
-    recs = ordered_for_sink(
-        routed_records(ev, "near_events", "near_events_all"), partitions=4
-    )
+    recs = ordered_for_sink(_routed(spark, fixture_messages_path))
     # within each partition, rows for the same key are contiguous & height-ordered
     def check(it):
         last = {}

@@ -77,10 +77,13 @@ def test_stream_restart_is_incremental(spark, fixture_messages_path, tmp_path):
 
 def test_rejected_side_stream(spark, fixture_messages_path, tmp_path):
     src, out, ckpt = _stream_dirs(tmp_path, fixture_messages_path)
+    rejected_dir = str(tmp_path / "rejected")
     msgs = stream_messages_json(spark, src)
-    q = job.start_rejected_sink(msgs, NesConfig(), out, ckpt)
+    q = job.start_to_parquet(
+        msgs, NesConfig(), out, ckpt, rejected_dir=rejected_dir
+    )
     q.awaitTermination(120)
-    got = spark.read.parquet(out)
+    got = spark.read.parquet(rejected_dir)
     reasons = sorted(r["reject_reason"] for r in got.collect())
     assert reasons == ["parse_error", "validation_error"]
 
@@ -89,10 +92,15 @@ def test_whitelist_applies_in_stream(spark, fixture_messages_path, tmp_path):
     src, out, ckpt = _stream_dirs(tmp_path, fixture_messages_path)
     msgs = stream_messages_json(spark, src)
     cfg = NesConfig(whitelist_contract_ids=["nft.contract-a.near"])
-    job.start_to_parquet(msgs, cfg, out, ckpt).awaitTermination(120)
+    rejected_dir = str(tmp_path / "rejected")
+    job.start_to_parquet(
+        msgs, cfg, out, ckpt, rejected_dir=rejected_dir
+    ).awaitTermination(120)
     got = spark.read.parquet(out)
     assert got.count() == 4  # 2 events from contract-a x 2 topics
     assert {r["key"] for r in got.collect()} == {"nft.contract-a.near"}
+    # the lists filter valid events only: every reject is still written
+    assert spark.read.parquet(rejected_dir).count() == 2
 
 
 def test_observe_metrics_surface_in_listener(
@@ -185,29 +193,20 @@ def test_stats_listener_reports_throughput(
 
 
 @pytest.mark.parametrize(
-    "start, cols, n_rows",
+    "with_rejects",
     [
-        pytest.param(
-            job.start_to_parquet,
-            ["topic", "key", "value", "block_height"],
-            16,  # 2 files x 4 valid events x 2 topics
-            id="start_to_parquet",
-        ),
-        pytest.param(
-            job.start_rejected_sink,
-            ["block_height", "receipt_id", "log", "reject_reason"],
-            4,  # 2 files x (1 parse + 1 validation reject)
-            id="start_rejected_sink",
-        ),
+        pytest.param(False, id="start_to_parquet"),
+        pytest.param(True, id="start_to_parquet_rejected_dir"),
     ],
 )
 def test_idempotent_sink_replay_safe(
-    spark, fixture_messages_path, tmp_path, start, cols, n_rows
+    spark, fixture_messages_path, tmp_path, with_rejects
 ):
     """A crash after a micro-batch's write and before its commit (the
     at-least-once failure mode) replays that batch on restart; the
     per-batch partition overwrite must make the replay rewrite, not
-    duplicate, its rows — effectively exactly-once end to end."""
+    duplicate, its rows — effectively exactly-once end to end. With a
+    ``rejected_dir`` both outputs of the one query replay together."""
     import os as _os
     import shutil as _shutil
     from collections import Counter
@@ -220,23 +219,42 @@ def test_idempotent_sink_replay_safe(
         # deterministic batch order: file-source batches sort by mtime
         _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    rejected_dir = str(tmp_path / "rejected")
+    outputs = {
+        # 2 files x 4 valid events x 2 topics
+        out: (["topic", "key", "value", "block_height"], 16),
+    }
+    if with_rejects:
+        # 2 files x (1 parse + 1 validation reject)
+        outputs[rejected_dir] = (
+            ["block_height", "receipt_id", "log", "reject_reason"],
+            4,
+        )
 
     def run():
-        start(
+        job.start_to_parquet(
             stream_messages_json(spark, str(src), max_files_per_trigger=1),
             NesConfig(),
             out,
             ckpt,
+            rejected_dir=rejected_dir if with_rejects else None,
         ).awaitTermination(180)
 
     def rows():
-        return Counter(
-            tuple(r) for r in spark.read.parquet(out).select(*cols).collect()
-        )
+        return {
+            path: Counter(
+                tuple(r)
+                for r in spark.read.parquet(path).select(*cols).collect()
+            )
+            for path, (cols, _) in outputs.items()
+        }
 
     run()
     first = rows()
-    assert sum(first.values()) == n_rows
+    for path, (_, n_rows) in outputs.items():
+        assert sum(first[path].values()) == n_rows, path
+    # without a rejected_dir the query writes nothing but the routed rows
+    assert _os.path.exists(rejected_dir) == with_rejects
 
     # crash between batch 1's write and its commit: its offsets are
     # logged, its output is written, its commit marker (and checksum) lost
@@ -257,7 +275,8 @@ def test_sink_exchange_per_target(
     """Per-key order is a Kafka-producer contract: only the Kafka sink
     shuffles by key. The parquet sink sorts each batch within its
     partitions, with no exchange, so every file it writes is in
-    (key, block_height) order."""
+    (key, block_height) order. With a ``rejected_dir`` both writes of a
+    batch read the persisted batch, not the source files."""
     import glob
     import time
 
@@ -278,7 +297,7 @@ def test_sink_exchange_per_target(
     parquet, save = DataFrameWriter.parquet, DataFrameWriter.save
 
     def parquet_recorded(self, path, *args, **kwargs):
-        plans["parquet"].append(plan(self))
+        plans["parquet"].append((path, plan(self)))
         return parquet(self, path, *args, **kwargs)
 
     def save_recorded(self, *args, **kwargs):
@@ -296,7 +315,7 @@ def test_sink_exchange_per_target(
         str(tmp_path / "ckpt"),
     ).awaitTermination(180)
     assert len(plans["parquet"]) == 2
-    for p in plans["parquet"]:
+    for _, p in plans["parquet"]:
         assert "Exchange" not in p, p
     files = glob.glob(str(out / "batch_id=*" / "*.parquet"))
     assert files
@@ -304,6 +323,27 @@ def test_sink_exchange_per_target(
         rows = pq.read_table(f, columns=["key", "block_height"]).to_pylist()
         keys = [(r["key"], r["block_height"]) for r in rows]
         assert keys == sorted(keys), f
+
+    # With rejects: per batch, the routed write and then the rejects write.
+    # Both read the persisted batch: the part of each plan above the cached
+    # relation holds no scan of the source (foreachBatch hands a batch over
+    # as an RDD scan, so a re-read shows as ExistingRDD, not FileScan).
+    plans["parquet"].clear()
+    rejected_dir = str(tmp_path / "rejected")
+    job.start_to_parquet(
+        stream_messages_json(spark, str(src), max_files_per_trigger=1),
+        NesConfig(),
+        str(tmp_path / "out-both"),
+        str(tmp_path / "ckpt-both"),
+        rejected_dir=rejected_dir,
+    ).awaitTermination(180)
+    targets = [path.split("/batch_id=")[0] for path, _ in plans["parquet"]]
+    assert targets == [str(tmp_path / "out-both"), rejected_dir] * 2, targets
+    for _, p in plans["parquet"]:
+        own = p.split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in own, p
+        assert "FileScan" not in own and "ExistingRDD" not in own, p
+        assert "Exchange" not in p, p
 
     q = job.start_to_kafka(
         stream_messages_json(spark, str(src)),
