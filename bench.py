@@ -1,12 +1,15 @@
 #!/usr/bin/env python
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total-sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+Usage: ``python bench.py`` (it takes no arguments).
 
-Each query is materialized via count() on a cached-nothing plan (no
-collect of full results — we time the engine, not the driver pickle).
+Each query runs once cold and three times steady, materialized via
+count() on a cached-nothing plan (no collect of full results — we time
+the engine, not the driver pickle). One stderr line per query gives the
+steady median, the steady min–max, the cold time and the row count. The
+last stdout line is ONE JSON line (:func:`result_line`):
+  {"metric": "...", "value": <non-heavy sum>, "unit": "sec", "sf": <sf>,
+   "heavy": {name: sec}, "value_all": <sum>, "queries": {name: sec, ...}}
 """
 
 from __future__ import annotations
@@ -112,572 +115,36 @@ HEADLINE = [
     ("multimodal_neardup_images", llm_ops.QUERIES["multimodal_neardup_images"]),
 ]
 
-
-def _loadavg1() -> float | None:
-    """1-minute load average, None where /proc is absent."""
-    try:
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
-    except (OSError, ValueError, IndexError):
-        return None
+# Heavy tier: reported in ``heavy`` outside the headline sum, so one
+# noisy ~20 s query (at sf0.1) cannot read as a round-over-round plan
+# regression; ``value_all`` includes it.
+HEAVY = {"graph_triangle_census"}
 
 
-def _read_bands() -> dict[str, list[float]]:
-    """Per-query idle-box steady bands ([lo, hi] seconds at sf0.1) from
-    the committed BENCH_BANDS.json — the contention yardstick. Missing
-    file or malformed content disables the guard, never the bench."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_BANDS.json"
+def result_line(timings: dict[str, float], heavy: set[str], sf) -> str:
+    """The bench's JSON result line. ``value`` sums the steady medians
+    of the non-heavy queries. The line must stay under the 2,000-byte
+    stdout tail that consumers parse, which
+    ``tests/test_cli.py::test_bench_result_line_fits_stdout_tail`` gates."""
+    total = sum(v for k, v in timings.items() if k not in heavy)
+    return json.dumps(
+        {
+            "metric": "headline_query_wall_time_total",
+            "value": round(total, 2),
+            "unit": "sec",
+            "sf": sf,
+            "heavy": {n: round(timings[n], 2) for n in sorted(heavy)},
+            "value_all": round(sum(timings.values()), 2),
+            "queries": {k: round(v, 2) for k, v in timings.items()},
+        },
+        separators=(",", ":"),
     )
-    try:
-        with open(path) as f:
-            data = json.load(f)
-        return {
-            k: v
-            for k, v in data.get("bands", {}).items()
-            if isinstance(v, list) and len(v) == 2
-        }
-    except (OSError, ValueError):
-        return {}
-
-
-def solo(name: str) -> None:
-    """Measure ONE headline query in this (fresh) process — the
-    contention guard's out-of-band re-run target. A same-JVM re-run
-    inherits the suite's heap/GC/page-cache state and "confirms"
-    harness inflation as real (r10: graph_triangle_census 25.5 s
-    in-suite vs its 16.4-16.8 s solo band); a fresh SparkSession is
-    the only state-free yardstick. Prints one JSON line."""
-    fns = dict(HEADLINE)
-    fn = fns[name]
-    spark = get_spark(app_name="nes-bench-solo")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
-    runs = []
-    for _ in range(4):
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).count()
-        runs.append(time.perf_counter() - t0)
-    steady = sorted(runs[1:])
-    print(
-        json.dumps(
-            {
-                "name": name,
-                "median": round(steady[1], 3),
-                "steady": [round(r, 3) for r in steady],
-                "cold": round(runs[0], 3),
-            }
-        )
-    )
-    spark.stop()
-
-
-def _solo_subprocess(name: str) -> dict | None:
-    """Run ``bench.py --solo name`` in a subprocess; parsed JSON dict
-    (name/median/steady/cold) or None."""
-    import subprocess
-
-    cmd = [sys.executable, os.path.abspath(__file__), "--solo", name]
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_DIR)
-    try:
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=900, env=env
-        )
-    except (OSError, subprocess.TimeoutExpired):
-        return None
-    # one malformed JSON-ish stdout line must not abort the scan —
-    # keep trying earlier lines (r11 advisory)
-    for line in reversed(proc.stdout.strip().splitlines()):
-        line = line.strip()
-        if not line.startswith("{"):
-            continue
-        try:
-            d = json.loads(line)
-            # validate EVERY key a caller indexes (median for the
-            # guard, steady/cold for regen_bands — r12 advisory: a
-            # line missing steady/cold used to pass here and then
-            # KeyError-abort the whole bands regeneration)
-            float(d["median"])
-            float(d["cold"])
-            if not (
-                isinstance(d["steady"], list)
-                and len(d["steady"]) == 3
-                and all(isinstance(x, (int, float)) for x in d["steady"])
-            ):
-                continue
-            return d
-        except (ValueError, KeyError, TypeError):
-            continue
-    return None
-
-
-def _fresh_process_rerun(name: str) -> float | None:
-    """Run ``bench.py --solo name`` in a subprocess; median or None."""
-    d = _solo_subprocess(name)
-    return float(d["median"]) if d else None
-
-
-#: bounded re-solo budget for the MILD over-band tier (ceiling..1.3x)
-MILD_RESOLO_CAP = 5
-#: in-band CONTROL queries re-soloed to measure the box-speed factor
-#: whenever anything is over-band (r15 verdict #1)
-N_CONTROLS = 3
-#: residual tolerance after dividing out the box factor: a solo within
-#: 10% of its ceiling once box-normalized is NOT code_elevated (the
-#: bands are 3-solo minima and the factor is a median over few samples)
-BOX_NORM_TOLERANCE = 1.1
-#: a measured box factor at or below this means the controls just
-#: proved the box runs at band speed — a within-tolerance elevation is
-#: then plain measurement noise against a quietest-ever band
-#: (``band_noise``), NOT box state (r16 verdict #2: ``box_elevated``
-#: at factor 1.0 claimed a box effect the controls contradicted)
-BAND_NOISE_FACTOR_MAX = 1.05
-#: controls whose solo/band-midpoint ratios disagree by more than this
-#: (max/min) make the scalar median a rough instrument — surface it
-#: (r16 verdict #3: the r16 driver controls spread 1.055..2.236)
-CONTROL_SPREAD_WEAK = 1.5
-
-
-def _box_factor(ratios: list[float]) -> float:
-    """Per-run box-speed factor: the MEDIAN of solo/band-midpoint
-    ratios over the given solos. The committed bands are element-wise
-    MINIMA across sweeps — the quietest box ever observed — so on a
-    slower box-day every solo reads over-ceiling in lockstep (r15: q1
-    +3%, multimodal +2%, triangle +9%, controls +22%/+34%, uniform);
-    the median captures that shared factor while a genuinely-regressed
-    outlier cannot move it. The guard feeds this CONTROLS-ONLY when it
-    has >= 2 control ratios: controls are in-band first-pass queries —
-    by construction not regressed — so a regression that elevates MORE
-    queries than there are controls cannot normalize itself away by
-    dominating a pooled median (r16 review); the pooled fallback is
-    used (and labeled) only when controls are unavailable. Floored at
-    1.0: a faster-than-band box must not re-inflate verdicts."""
-    if not ratios:
-        return 1.0
-    s = sorted(ratios)
-    n = len(s)
-    med = s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-    return max(1.0, med)
-
-
-def _contention_guard(
-    timings: dict[str, float],
-    bands: dict[str, list[float]],
-    heavy: set[str],
-    rerun=_fresh_process_rerun,
-) -> dict:
-    """Band-compliance adjudication over the suite's first-pass
-    medians (r14 verdict #3; r15 verdict #1 — box-normalized). Two
-    tiers of re-solo, one audit trail:
-
-    * serious (> 1.3x ceiling): unbounded fresh-process re-solos,
-      heavy tier included — unchanged since r15;
-    * mild (ceiling .. 1.3x): bounded re-solos — worst excess first,
-      at most ``MILD_RESOLO_CAP`` non-heavy; each over-band HEAVY
-      query gets exactly ONE re-solo of its own (tier
-      ``mild-heavy``), outside the cap — r15 had excluded the heavy
-      tier from mild adjudication entirely, so its over-ceiling first
-      pass shipped with no in-artifact verdict (r15 advice).
-
-    The r15 verdicts conflated a slower box-day with a genuine query
-    regression: the bands are quietest-ever minima, so on a busy box
-    EVERY solo reads over-ceiling and ``solo_in_band: false`` actively
-    misled (the judge hand-adjudicated box-vs-code two rounds
-    running). The guard now measures the box itself: whenever anything
-    is over-band it also re-solos up to ``N_CONTROLS`` in-band banded
-    queries (largest ceilings first — ratio least noise-dominated),
-    computes the per-run box-speed factor (:func:`_box_factor` —
-    CONTROLS-ONLY when >= 2 controls are available, since controls are
-    by construction un-regressed; pooled with the adjudicated solos
-    only as a labeled fallback), and classifies every adjudicated
-    query three ways:
-
-    * ``in_band`` — the solo is at or under its ceiling;
-    * ``box_elevated`` — over the ceiling, but back within it (x
-      ``BOX_NORM_TOLERANCE``) once a MEASURED box factor
-      (> ``BAND_NOISE_FACTOR_MAX``) is divided out: the box is slow
-      today, the code did not change;
-    * ``band_noise`` — within tolerance of the ceiling while the
-      controls measured the box AT band speed (factor <=
-      ``BAND_NOISE_FACTOR_MAX``): plain dispersion against a
-      quietest-ever 3-solo-minimum band, attributable to neither box
-      nor code (r16 verdict #2 — the old ``box_elevated`` label here
-      claimed a box effect the controls had just disproven);
-    * ``code_elevated`` — over the ceiling even box-normalized: a
-      real candidate regression (re-band only with provenance via
-      ``--band-for`` if it persists with unchanged code+plan).
-
-    When >= 2 control ratios exist the guard also records their
-    max/min ``control_spread`` and warns above ``CONTROL_SPREAD_WEAK``
-    — heterogeneous control ratios mean per-query contention
-    sensitivity differs and the scalar median factor is a rough
-    instrument (r16 verdict #3).
-
-    Every re-solo records first-pass + solo + the band + the
-    normalized solo + verdict under ``band_adjudication``; MUTATES
-    ``timings`` to the better of the two measurements (the committed
-    methodology; control solos never mutate — they are a measuring
-    instrument, not a re-measurement). Returns ``{"reruns",
-    "contended", "band_adjudication", "controls", "box_factor",
-    "box_factor_source", "control_spread", "total_delta",
-    "heavy_delta"}``. ``rerun`` is injectable for the test harness."""
-    reruns: dict[str, float] = {}
-    contended: list[str] = []
-    band_adjudication: dict[str, dict] = {}
-    controls: dict[str, dict] = {}
-    mild: list[tuple[float, str]] = []
-    mild_heavy: list[str] = []
-    deltas = {"total": 0.0, "heavy": 0.0}
-
-    def _mid(band: list[float]) -> float:
-        return (band[0] + band[1]) / 2 or 1e-9
-
-    def _adjudicate(name: str, label: str) -> None:
-        med = timings[name]
-        band = bands[name]
-        rr = rerun(name)
-        if rr is None:
-            print(
-                f"# contention-guard {name}: first-pass {med:.3f}s vs "
-                f"band [{band[0]:.3f},{band[1]:.3f}] — fresh-process "
-                "re-run FAILED, keeping first-pass value",
-                file=sys.stderr,
-            )
-            return
-        reruns[name] = round(rr, 3)
-        if rr < med:
-            if rr < med / 1.3:
-                contended.append(name)
-            deltas["heavy" if name in heavy else "total"] += rr - med
-            timings[name] = round(rr, 3)
-        band_adjudication[name] = {
-            "first_pass": round(med, 3),
-            "solo": round(rr, 3),
-            "band": band,
-            "solo_in_band": rr <= band[1],
-            "tier": label,
-        }
-
-    for name, med in list(timings.items()):
-        band = bands.get(name)
-        if not band or med <= band[1]:
-            continue
-        if med <= 1.3 * band[1]:
-            if name in heavy:
-                mild_heavy.append(name)
-            else:
-                mild.append((med / band[1], name))
-            continue
-        _adjudicate(name, "serious")
-    for _, name in sorted(mild, reverse=True)[:MILD_RESOLO_CAP]:
-        _adjudicate(name, "mild")
-    for name in mild_heavy:
-        _adjudicate(name, "mild-heavy")
-    if len(mild) > MILD_RESOLO_CAP:
-        skipped = [n for _, n in sorted(mild, reverse=True)[MILD_RESOLO_CAP:]]
-        print(
-            f"# contention-guard: {len(skipped)} mild over-band queries "
-            f"beyond the {MILD_RESOLO_CAP}-re-solo cap left "
-            f"unadjudicated: {', '.join(skipped)}",
-            file=sys.stderr,
-        )
-
-    # ---- box-speed controls + three-way verdicts ---------------------
-    if band_adjudication:
-        in_band = sorted(
-            (
-                name
-                for name in timings
-                if name in bands
-                and name not in band_adjudication
-                and name not in heavy
-                and timings[name] <= bands[name][1]
-            ),
-            key=lambda n: -bands[n][1],
-        )
-        for name in in_band[:N_CONTROLS]:
-            rr = rerun(name)
-            if rr is None:
-                print(
-                    f"# contention-guard control {name}: solo FAILED",
-                    file=sys.stderr,
-                )
-                continue
-            controls[name] = {
-                "solo": round(rr, 3),
-                "band": bands[name],
-                "ratio": round(rr / _mid(bands[name]), 3),
-            }
-    control_ratios = [c["ratio"] for c in controls.values()]
-    adj_ratios = [
-        e["solo"] / _mid(e["band"]) for e in band_adjudication.values()
-    ]
-    # controls-only when we have enough of them: a regression touching
-    # more queries than N_CONTROLS would dominate a pooled median and
-    # classify itself box_elevated (r16 review). The pooled fallback
-    # (rare: nearly everything over-band, or control solos failed) is
-    # weaker — a UNIFORM elevation is then undecidable between box and
-    # global regression — so the artifact labels which source was used.
-    if len(control_ratios) >= 2:
-        ratios, factor_source = control_ratios, "controls"
-    elif control_ratios or adj_ratios:
-        ratios, factor_source = control_ratios + adj_ratios, "pooled"
-    else:
-        ratios, factor_source = [], "none"
-    box_factor = round(_box_factor(ratios), 3) if band_adjudication else 1.0
-    if band_adjudication and factor_source == "pooled":
-        print(
-            "# contention-guard: box factor from POOLED ratios "
-            "(insufficient in-band controls) — a uniform elevation "
-            "here is undecidable between box state and a global "
-            "regression; treat box_elevated verdicts as weak",
-            file=sys.stderr,
-        )
-    # control-ratio spread (max/min): how uniformly this box's
-    # contention hits different queries. Above CONTROL_SPREAD_WEAK the
-    # scalar median factor is a rough instrument — say so in the
-    # artifact, same honesty principle as box_factor_source (r16 #3).
-    control_spread = (
-        round(max(control_ratios) / max(min(control_ratios), 1e-9), 3)
-        if len(control_ratios) >= 2
-        else None
-    )
-    if control_spread is not None and control_spread > CONTROL_SPREAD_WEAK:
-        print(
-            f"# contention-guard: control-ratio spread {control_spread}x "
-            f"(ratios {sorted(control_ratios)}) exceeds "
-            f"{CONTROL_SPREAD_WEAK}x — per-query sensitivity to this "
-            "box's contention is heterogeneous, the median factor is a "
-            "rough instrument; treat box_elevated verdicts as weak",
-            file=sys.stderr,
-        )
-    for name, e in band_adjudication.items():
-        normalized = e["solo"] / box_factor
-        e["solo_box_normalized"] = round(normalized, 3)
-        if e["solo"] <= e["band"][1]:
-            e["verdict"] = "in_band"
-        elif normalized <= e["band"][1] * BOX_NORM_TOLERANCE:
-            # only claim "the box is slow" when a real factor was
-            # measured; at factor ~1.0 the controls just proved the
-            # box is AT band speed, so a within-tolerance elevation is
-            # noise against a 3-solo-minimum band, not box state
-            e["verdict"] = (
-                "box_elevated"
-                if box_factor > BAND_NOISE_FACTOR_MAX
-                else "band_noise"
-            )
-        else:
-            e["verdict"] = "code_elevated"
-        extra = (
-            " — re-run value reported" if name in contended else ""
-        )
-        print(
-            f"# contention-guard[{e['tier']}] {name}: first-pass "
-            f"{e['first_pass']:.3f}s vs band "
-            f"[{e['band'][0]:.3f},{e['band'][1]:.3f}] → solo "
-            f"{e['solo']:.3f}s, box-normalized "
-            f"{e['solo_box_normalized']:.3f}s at factor {box_factor} "
-            f"→ {e['verdict']}{extra}",
-            file=sys.stderr,
-        )
-    if band_adjudication:
-        print(
-            f"# contention-guard: box-speed factor {box_factor} "
-            f"({factor_source}) from {len(ratios)} solo/band-midpoint "
-            f"ratios ({len(controls)} in-band controls: "
-            f"{', '.join(controls) or 'none'})",
-            file=sys.stderr,
-        )
-    return {
-        "reruns": reruns,
-        "contended": contended,
-        "band_adjudication": band_adjudication,
-        "controls": controls,
-        "box_factor": box_factor,
-        "box_factor_source": factor_source if band_adjudication else "none",
-        "control_spread": control_spread,
-        "total_delta": deltas["total"],
-        "heavy_delta": deltas["heavy"],
-    }
-
-
-def _band_from_sweeps(sweeps: list[dict]) -> list[float]:
-    """Fold N solo sweeps of one query into its committed band: each
-    sweep contributes its steady [min, max]; the band is the
-    ELEMENT-WISE MIN across sweeps — the quietest box state observed,
-    which is what "idle-box band" means (any sweep may be inflated by
-    co-tenant load; none can be deflated below idle)."""
-    los = [min(float(x) for x in d["steady"]) for d in sweeps]
-    his = [max(float(x) for x in d["steady"]) for d in sweeps]
-    return [round(min(los), 3), round(min(his), 3)]
-
-
-def _bands_path() -> str:
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_BANDS.json"
-    )
-
-
-def _write_bands(bands, prev, load0, t_start, notes) -> None:
-    payload = {
-        "_comment": (
-            "Idle-box steady-run bands [lo, hi] seconds at sf0.1, "
-            "measured via the SAME mechanism the contention guard uses "
-            "(bench.py --solo per query: fresh process, cold "
-            "SparkSession, 1 discarded cold run + 3 steady). Band = "
-            "ELEMENT-WISE MIN of per-sweep steady [min, max] across N "
-            "sweeps (default 2) — the quietest observed box state; "
-            "r12 advisory: the tool now reproduces the committed "
-            "min-across-sweeps methodology instead of silently "
-            "replacing it with a single sweep. No suite JVM is "
-            "co-resident during measurement. Regenerate all with "
-            "`python bench.py --bands [N_SWEEPS]`, or one query from "
-            "more sweeps with `python bench.py --band-for NAME N`. "
-            "prev_bands = the displaced bands, kept for comparison; "
-            "band_notes records per-query regeneration provenance."
-        ),
-        "sf": 0.1,
-        "loadavg": [load0, _loadavg1()],
-        "wall_total_sec": round(time.perf_counter() - t_start, 1),
-        "bands": bands,
-        "prev_bands": prev,
-        "band_notes": notes,
-    }
-    with open(_bands_path(), "w") as f:
-        json.dump(payload, f, indent=1)
-    print(f"wrote {_bands_path()}")
-
-
-def _read_band_notes() -> dict:
-    try:
-        with open(_bands_path()) as f:
-            return dict(json.load(f).get("band_notes", {}))
-    except (OSError, ValueError):
-        return {}
-
-
-def regen_bands(n_sweeps: int = 2) -> None:
-    """Regenerate BENCH_BANDS.json through the SAME fresh-process
-    `--solo` path the contention guard re-runs through (r11 verdict
-    #5): a warm-suite measurement disagrees with a cold-JVM solo for
-    sub-second queries, so bands and guard re-runs must share one
-    mechanism. ``n_sweeps`` full passes run over the headline set and
-    each query's band is the element-wise min of its per-sweep steady
-    [min, max] (see :func:`_band_from_sweeps` — the committed-artifact
-    methodology, r12 advisory). A query whose solos ALL fail keeps its
-    previous band. The displaced bands are kept under `prev_bands`.
-    One caveat carried in _comment: the calling process stays alive
-    while each solo child runs, but holds no SparkSession here (unlike
-    the in-suite guard, where the suite JVM idles co-resident)."""
-    prev = _read_bands()
-    sweeps: dict[str, list[dict]] = {name: [] for name, _ in HEADLINE}
-    t_start = time.perf_counter()
-    load0 = _loadavg1()
-    for s in range(n_sweeps):
-        for name, _ in HEADLINE:
-            d = _solo_subprocess(name)
-            if d is None:
-                print(
-                    f"# bands sweep {s + 1}/{n_sweeps} {name}: solo FAILED",
-                    file=sys.stderr,
-                )
-                continue
-            sweeps[name].append(d)
-            print(
-                f"# bands sweep {s + 1}/{n_sweeps} {name}: "
-                f"steady {sorted(d['steady'])} (cold {d['cold']})",
-                file=sys.stderr,
-            )
-    out: dict[str, list[float]] = {}
-    for name, _ in HEADLINE:
-        if not sweeps[name]:
-            print(
-                f"# bands {name}: every solo FAILED, keeping prev",
-                file=sys.stderr,
-            )
-            if name in prev:
-                out[name] = prev[name]
-            continue
-        out[name] = _band_from_sweeps(sweeps[name])
-        drift = ""
-        if name in prev:
-            lo, hi = prev[name]
-            if out[name][0] > 1.3 * hi or out[name][1] < lo / 1.3:
-                drift = "  <-- moved vs prev band"
-        print(
-            f"# bands {name}: {out[name]} from {len(sweeps[name])} "
-            f"sweeps (prev {prev.get(name)}){drift}",
-            file=sys.stderr,
-        )
-    prev_notes = _read_band_notes()
-    notes = {
-        name: f"min across {len(ds)} sweeps"
-        for name, ds in sweeps.items()
-        if ds
-    }
-    # a query whose solos ALL failed keeps its prev band — keep its
-    # prev provenance note with it (r13 review: dropping the note left
-    # e.g. a 5-solo band in the artifact with its methodology erased)
-    for name in out:
-        if name not in notes and name in prev_notes:
-            notes[name] = f"kept from prev regen: {prev_notes[name]}"
-    _write_bands(out, prev, load0, t_start, notes)
-
-
-def band_for(name: str, n_solos: int) -> None:
-    """Re-measure ONE query's band from ``n_solos`` fresh-process solo
-    sweeps and merge it into the committed BENCH_BANDS.json (same
-    element-wise-min fold as :func:`regen_bands`) — the tool for
-    noisy heavy queries whose band needs more datapoints than the
-    all-query regeneration affords (r12 verdict #2:
-    graph_triangle_census from >=5 same-day solos)."""
-    assert name in dict(HEADLINE), name
-    t_start = time.perf_counter()
-    load0 = _loadavg1()
-    sweeps: list[dict] = []
-    for s in range(n_solos):
-        d = _solo_subprocess(name)
-        if d is None:
-            print(f"# band-for {name} solo {s + 1}: FAILED", file=sys.stderr)
-            continue
-        sweeps.append(d)
-        print(
-            f"# band-for {name} solo {s + 1}/{n_solos}: "
-            f"steady {sorted(d['steady'])} (cold {d['cold']})",
-            file=sys.stderr,
-        )
-    if not sweeps:
-        raise SystemExit(f"band-for {name}: every solo failed")
-    bands = _read_bands()
-    prev_entry = bands.get(name)
-    bands[name] = _band_from_sweeps(sweeps)
-    notes = _read_band_notes()
-    notes[name] = (
-        f"min across {len(sweeps)} dedicated solos (--band-for); "
-        f"displaced {prev_entry}"
-    )
-    # prev_bands keeps whatever the file already carried (the full-set
-    # history), with this query's displaced entry folded in
-    try:
-        with open(_bands_path()) as f:
-            prev = dict(json.load(f).get("prev_bands", {}))
-    except (OSError, ValueError):
-        prev = {}
-    if prev_entry is not None:
-        prev[name] = prev_entry
-    print(
-        f"# band-for {name}: {bands[name]} from {len(sweeps)} solos "
-        f"(displaced {prev_entry})",
-        file=sys.stderr,
-    )
-    _write_bands(bands, prev, load0, t_start, notes)
 
 
 def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="nes-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    load_start = _loadavg1()
 
     # warm the JVM + file listing once, outside timed region
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
@@ -685,236 +152,38 @@ def main() -> None:
     # Each query runs 4×: one discarded cold run (pays one-time
     # whole-stage-codegen JIT — a fixed cost irrelevant at cluster scale
     # where a compiled plan processes TBs), then 3 steady runs. Reported
-    # time is the MEDIAN of the steady runs; per-query [min, max]
-    # dispersion is recorded so round-over-round comparisons can be
-    # judged against this sandbox's run-to-run noise (single-box
-    # wall-times here swing >2× with cache/load) instead of being read
-    # as plan regressions.
+    # time is the MEDIAN of the steady runs.
     timings: dict[str, float] = {}
-    dispersion: dict[str, list[float]] = {}
-    total = 0.0
-    heavy_total = 0.0
-    cold_total = 0.0
-    # Heavy tier (single run ~20s at sf0.1 with honest fresh-process
-    # dispersion of +/-7s on THIS box): reported on its OWN line
-    # outside the headline sum, so the 36-query total stays comparable
-    # round-over-round instead of inheriting one query's box-state
-    # noise (r12 verdict #2 option b). Heavy queries now also run the
-    # full 1 cold + 3 steady cadence and report the TRUE median — the
-    # old 2-steady larger-value rule biased the reported number up.
-    heavy = {"graph_triangle_census"}
     for name, fn in HEADLINE:
         runs = []
         for _ in range(4):
             t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            n = df.count()
+            n = fn(spark, SF_DIR).count()
             runs.append(time.perf_counter() - t0)
         steady = sorted(runs[1:])
-        dt = steady[len(steady) // 2]
-        timings[name] = round(dt, 3)
-        dispersion[name] = [round(steady[0], 3), round(steady[-1], 3)]
-        if name in heavy:
-            heavy_total += dt
-        else:
-            total += dt
-        cold_total += runs[0]
+        timings[name] = round(steady[1], 3)
         print(
-            f"# {name}: {dt:.3f}s median ({steady[0]:.3f}-{steady[-1]:.3f}s "
-            f"steady) / {runs[0]:.3f}s cold ({n} rows)"
-            f"{'  [heavy tier — outside headline sum]' if name in heavy else ''}",
+            f"# {name}: {timings[name]:.3f}s median "
+            f"({steady[0]:.3f}-{steady[-1]:.3f}s steady) / "
+            f"{runs[0]:.3f}s cold ({n} rows)"
+            f"{'  [heavy tier — outside headline sum]' if name in HEAVY else ''}",
             file=sys.stderr,
         )
 
-    # ---- contention guard -------------------------------------------
-    # Single-box wall-times here swing with whatever else the machine
-    # runs (rounds 7-9 each shipped medians 1.4-3.2× above their idle
-    # bands on untouched code). Any query whose median lands >1.3×
-    # above its committed idle-box band ceiling (BENCH_BANDS.json) is
-    # re-measured in a FRESH PROCESS (bench.py --solo <name>: cold
-    # SparkSession, 1 discarded cold + 3 steady runs) — an in-JVM
-    # re-run inherits the suite's heap/GC/page-cache state and
-    # "confirms" harness inflation as real (the r10 triangle-census
-    # finding). The reported value is the better of the two
-    # measurements; the query is flagged "contended" when the fresh
-    # process confirms the first pass was suite/box state, not plan.
-    # Methodology caveat (r11 advisory): the suite's own SparkSession
-    # stays alive (idle) while the solo child runs, so the re-run still
-    # shares the box with one multi-GB JVM at rest — the bands in
-    # BENCH_BANDS.json are measured WITHOUT that co-resident JVM
-    # (bench.py --bands holds no session), which is the quieter of the
-    # two states; the asymmetry can only make the guard conservative.
-    # r15 (r14 verdict #3): the guard is now BAND-AWARE end to end.
-    # The r14 driver run had three queries above their band ceilings
-    # that the 1.3x heuristic did not re-run, so the judge had to
-    # hand-solo them to adjudicate box contention vs regression. Two
-    # tiers, one audit trail:
-    #   * serious (> 1.3x ceiling): unbounded re-solos, heavy included
-    #     (the pre-r15 guard, unchanged);
-    #   * mild (ceiling .. 1.3x): bounded re-solos — worst excess
-    #     first, at most MILD_RESOLO_CAP non-heavy; each over-band
-    #     heavy query gets exactly ONE re-solo of its own (r16 — r15
-    #     excluded it and its over-ceiling first pass shipped with no
-    #     in-artifact verdict).
-    # r16 (r15 verdict #1): verdicts are BOX-NORMALIZED. The bands are
-    # quietest-ever minima, so a busy box elevates every solo in
-    # lockstep and the r15 solo_in_band:false verdicts misread box
-    # state as regression. Whenever anything is over-band the guard
-    # also re-solos up to N_CONTROLS in-band queries, derives the
-    # box-speed factor (median solo/band-midpoint), and classifies
-    # each adjudication in_band / box_elevated / code_elevated. Every
-    # re-solo records BOTH numbers plus the band, the normalized solo
-    # and the verdict under BENCH_DETAIL's band_adjudication.
-    sf_num = float(sf) if sf.replace(".", "").isdigit() else None
-    bands = _read_bands() if sf_num == 0.1 else {}  # bands measured at sf0.1
-    guard = _contention_guard(timings, bands, heavy)
-    reruns = guard["reruns"]
-    contended = guard["contended"]
-    band_adjudication = guard["band_adjudication"]
-    total = round(total + guard["total_delta"], 3)
-    heavy_total = round(heavy_total + guard["heavy_delta"], 3)
-
-    # Full per-query detail (dispersion bands, steady-run counts — 3
-    # for every query incl. the heavy tier since r13 — cold totals)
-    # goes to a side file committed with the
-    # round. The FINAL stdout line must stay under the driver's
-    # 2,000-byte tail capture (it parses only the last JSON line of
-    # stdout; rounds 7-8 outgrew it → "parsed": null), so it carries
-    # just metric/value/unit/sf + 2-decimal per-query medians.
-    load_end = _loadavg1()
-    detail = {
-        "metric": "headline_query_wall_time_total",
-        "value": round(total, 3),
-        "unit": "sec",
-        # value = the 36-query headline sum; the heavy tier is its own
-        # line so one ~20s query's box-state noise (honest fresh-process
-        # dispersion 15.6-28.9s recorded r12) cannot masquerade as a
-        # round-over-round plan regression. value_all = old-definition
-        # total for continuity with BENCH_r12 and earlier.
-        "heavy_queries": {n: timings[n] for n in sorted(heavy)},
-        "heavy_total": heavy_total,
-        "value_all": round(total + heavy_total, 3),
-        "queries": timings,
-        "dispersion": dispersion,
-        # contention-guard audit trail: 1-min loadavg at start/end, the
-        # out-of-band re-run medians for band-exceeding queries, and
-        # which of those the re-run adjudicated as box contention
-        "loadavg": [load_start, load_end],
-        "guard_reruns": reruns,
-        "contended": contended,
-        # r15: per-query band-compliance adjudication — every banded
-        # query whose in-suite median exceeded its committed ceiling,
-        # with first-pass + fresh-process solo + the band + verdict.
-        # r16: verdicts are BOX-NORMALIZED (in_band / box_elevated /
-        # code_elevated) against the box-speed factor measured from
-        # the in-band control solos below.
-        "band_adjudication": band_adjudication,
-        "box_factor": guard["box_factor"],
-        "box_factor_source": guard["box_factor_source"],
-        # r17: max/min of the control solo/band-midpoint ratios —
-        # above CONTROL_SPREAD_WEAK the median factor is a rough
-        # instrument and box_elevated verdicts read weak (r16 #3)
-        "control_spread": guard["control_spread"],
-        "guard_controls": guard["controls"],
-        "steady_runs": {name: 3 for name, _ in HEADLINE},
-        "cold_total": round(cold_total, 3),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-    }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1)
-    print(f"# full detail written to {detail_path}", file=sys.stderr)
-
-    compact = json.dumps(
-        {
-            "metric": "headline_query_wall_time_total",
-            "value": round(total, 2),
-            "unit": "sec",
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "load1": load_start,
-            "n_contended": len(contended),
-            "n_over_band": len(band_adjudication),
-            "box_factor": guard["box_factor"],
-            "n_code_elevated": sum(
-                1
-                for e in band_adjudication.values()
-                if e.get("verdict") == "code_elevated"
-            ),
-            "heavy": {n: round(timings[n], 2) for n in sorted(heavy)},
-            "value_all": round(total + heavy_total, 2),
-            "queries": {k: round(v, 2) for k, v in timings.items()},
-        },
-        separators=(",", ":"),
-    )
-    # Hard guard: the driver tails 2,000 bytes of stdout. If the
-    # compact line ever outgrows ~1,900 bytes (headroom for a trailing
-    # newline and any stray stdout), drop per-query medians rather than
-    # go dark again — the detail file always has everything.
-    if len(compact) > 1900:
-        compact = json.dumps(
-            {
-                "metric": "headline_query_wall_time_total",
-                "value": round(total, 2),
-                "unit": "sec",
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "load1": load_start,
-                "n_contended": len(contended),
-                "n_over_band": len(band_adjudication),
-                "box_factor": guard["box_factor"],
-                "n_code_elevated": sum(
-                    1
-                    for e in band_adjudication.values()
-                    if e.get("verdict") == "code_elevated"
-                ),
-                "heavy": {n: round(timings[n], 2) for n in sorted(heavy)},
-                "value_all": round(total + heavy_total, 2),
-                "queries": {
-                    k: round(v, 2)
-                    for k, v in sorted(
-                        timings.items(), key=lambda kv: -kv[1]
-                    )[:20]
-                },
-                "queries_truncated_see": "BENCH_DETAIL.json",
-            },
-            separators=(",", ":"),
+    print(
+        result_line(
+            timings, HEAVY, float(sf) if sf.replace(".", "").isdigit() else sf
         )
-    print(compact)
+    )
     spark.stop()
 
 
 if __name__ == "__main__":
-    # malformed/unknown flag invocations must ERROR, not fall through
-    # to the ~40-min full suite (r13 review: `--band-for NAME` with the
-    # solo count missing silently ran main() and overwrote the bench
-    # detail artifact; r13 advisory: ANY mistyped flag — `--band`,
-    # `--solos`, `--ivfpq` — fell through the same way). Only a bare
-    # invocation runs the suite.
-    _argv = sys.argv[1:]
-    _USAGE = (
-        "usage: bench.py | bench.py --solo NAME | "
-        "bench.py --bands [N_SWEEPS] | bench.py --band-for NAME N_SOLOS"
-    )
-
-    def _int_arg(s: str, flag: str) -> int:
-        # a non-integer count must ERROR with the usage line, not a
-        # bare int() traceback (r14 advisory) — same strict-arg
-        # contract as the unrecognized-flag branch below
-        try:
-            return int(s)
-        except ValueError:
-            raise SystemExit(
-                f"{flag}: expected an integer count, got {s!r}\n{_USAGE}"
-            )
-
-    if _argv[:1] == ["--solo"] and len(_argv) == 2:
-        solo(_argv[1])
-    elif _argv[:1] == ["--band-for"] and len(_argv) == 3:
-        band_for(_argv[1], _int_arg(_argv[2], "--band-for"))
-    elif _argv[:1] == ["--bands"] and len(_argv) <= 2:
-        regen_bands(_int_arg(_argv[1], "--bands") if len(_argv) == 2 else 2)
-    elif _argv:
-        raise SystemExit(f"unrecognized arguments: {' '.join(_argv)}\n{_USAGE}")
-    else:
-        main()
+    # Only a bare invocation runs the suite: a stray argument must not
+    # fall through to a full run of every query.
+    if sys.argv[1:]:
+        raise SystemExit(
+            f"unrecognized arguments: {' '.join(sys.argv[1:])}\n"
+            "usage: bench.py"
+        )
+    main()

@@ -78,16 +78,15 @@ def _specific_topic(prefix: str) -> str:
 
 # ``from_json`` returns a JSON string payload as its text without the
 # quotes, while serde's ``Generic(Value)`` keeps them
-# (src/event_types.rs:81). A payload text that does not start with ``{`` or
-# ``[`` is re-read as a VARIANT to tell a string from a number or a
-# boolean. Objects and arrays keep their raw text (a VARIANT's ``to_json``
-# would sort their keys), and so does a string whose text starts with
-# ``{`` or ``[``.
-_SCALAR = "variant_get(try_parse_json(event_json), '$.data')"
+# (src/event_types.rs:81). Only the raw ``event_json`` can tell a string
+# from an object, array, number or boolean, so every payload's type is
+# read from it as a VARIANT and a ``STRING`` is re-quoted. Every other
+# type keeps its ``data_json`` text (a VARIANT's ``to_json`` would sort an
+# object's keys).
+_DATA_VARIANT = "variant_get(try_parse_json(event_json), '$.data')"
 _GENERIC = (
-    "CASE WHEN data_json IS NULL OR left(data_json, 1) IN ('{', '[') "
-    f"THEN data_json WHEN schema_of_variant({_SCALAR}) = 'STRING' "
-    f"THEN to_json({_SCALAR}) ELSE data_json END"
+    f"CASE WHEN schema_of_variant({_DATA_VARIANT}) = 'STRING' "
+    f"THEN to_json({_DATA_VARIANT}) ELSE data_json END"
 )
 # Compact JSON of the full event, preserving the reference field order
 # (standard, version, event, data, emit_info) and the untagged ``data``

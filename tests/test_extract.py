@@ -164,6 +164,10 @@ _UNION_CASES = [
     ('""', '""'),
     ('"12"', '"12"'),
     (r'"é\n\t\/"', r'"é\n\t/"'),
+    # a string whose text looks like an object or array stays a string
+    ('"{x"', '"{x"'),
+    ('"[1"', '"[1"'),
+    (r'"{\"a\":1}"', r'"{\"a\":1}"'),
     # flat mint / flat transfer → typed one-element arrays
     (
         '{"owner_id":"a.near","token_ids":["1"]}',
