@@ -6,12 +6,13 @@ events from NEAR blockchain blocks and routes them to Kafka), built
 Spark-first:
 
 * **Parity layer** (``operators.extract``, ``operators.routing``,
-  ``operators.flatten``, ``operators.enrich``, ``streaming``): the
-  reference's dataflow — explode blocks → shards → outcomes → logs, filter
-  ``EVENT_JSON:`` lines, parse + validate, stamp provenance, whitelist /
-  blacklist, NEP-171 flatten, token-metadata enrichment, 2-topic
-  fan-out — as declarative DataFrame plans runnable in batch or
-  Structured Streaming.
+  ``streaming.job``): the reference's dataflow — explode blocks → shards →
+  outcomes → logs, filter ``EVENT_JSON:`` lines, parse + validate, stamp
+  provenance, whitelist / blacklist, 2-topic fan-out — as one declarative
+  plan that ``cli run`` starts as a Structured Streaming query. The
+  reference's NEP-171 flatten, NFT-metadata enrichment (the
+  ``…_metadata`` topic) and topic creation are not ported; their
+  ``nes.toml`` keys are accepted and ignored.
 * **Analytics layer** (``plans.analytics``): the relational query surface
   the reference delegates to downstream Kafka consumers, expressed over
   Spark SQL built-ins with a DuckDB oracle harness.

@@ -38,12 +38,8 @@ import sys
 SAMPLE_TOML = """\
 near_events_all_topic = "near_events_all"
 topic_prefix = "near_events"
-force_create_new_topic = false
-new_topic_partitions = 1
-new_topic_replication = 3
 whitelist_contract_ids = []
 blacklist_contract_ids = []
-enrich_metadata = false
 stats_enabled = true
 
 [kafka]

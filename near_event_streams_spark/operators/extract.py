@@ -17,9 +17,10 @@ Pipeline (each step cites the reference behavior it mirrors):
    (inline of a one-element array). A Filter on generator output cannot be
    pushed below it, so step 4 reads the parsed fields instead of Catalyst
    inlining, and re-running, the parse in the Filter. One more
-   ``from_json`` types the payload as a superset NEP-171 item array, from
-   which the mint and transfer variants are projected
-   (``src/event_types.rs:77-91``)
+   ``from_json`` types an object or array payload as a superset NEP-171
+   item array, from which the mint and transfer variants are projected
+   (``src/event_types.rs:77-91``). Both parses refuse single quotes and
+   NaN/Infinity, as serde does
 4. tag each line with its ``reject_reason`` (null for a valid event):
    - unparseable envelope → rejected, reason ``parse_error``
      (``src/events.rs:336-344`` warn-and-drop)
@@ -126,6 +127,22 @@ _IS_TRANSFER = (
 )
 _ENVELOPE = sql_string(EVENT_ENVELOPE_SCHEMA.simpleString())
 _ITEMS = sql_string(ArrayType(NEP171_ITEM_SCHEMA).simpleString())
+# serde_json's grammar: ``from_json`` defaults accept single-quoted
+# strings and NaN/Infinity, which serde rejects.
+_STRICT = "map('allowSingleQuotes', 'false', 'allowNonNumericNumbers', 'false')"
+# The payload as a VARIANT, read from the raw event JSON: only it tells a
+# JSON string from the object, array or number its text may spell
+# (``data_json`` holds a string's text without its quotes).
+DATA_VARIANT = "variant_get(try_parse_json(event_json), '$.data')"
+# serde types only an object or array payload as NEP-171; a string stays
+# ``Generic(String)`` even when its text is NEP-171 JSON. Such a text holds
+# ``"``, which a JSON string escapes with a backslash, so a line without
+# one skips the VARIANT parse. A line ``try_parse_json`` rejects (a
+# duplicate key) is typed as ``from_json`` reads it.
+_NOT_STRING = (
+    "(instr(event_json, '\\\\') = 0 "
+    f"OR schema_of_variant({DATA_VARIANT}) IS DISTINCT FROM 'STRING')"
+)
 
 
 def parse_events(logs: DataFrame, log_col: str = "log") -> DataFrame:
@@ -150,10 +167,14 @@ def parse_events(logs: DataFrame, log_col: str = "log") -> DataFrame:
         # Generate, so the envelope is parsed here once per line.
         .selectExpr(
             "*",
-            f"inline(array(from_json(event_json, {_ENVELOPE}))) "
+            f"inline(array(from_json(event_json, {_ENVELOPE}, {_STRICT}))) "
             "AS (standard, version, event, data_json)",
         )
-        .selectExpr("*", f"from_json(data_json, {_ITEMS}) AS _items")
+        .selectExpr(
+            "*",
+            f"CASE WHEN {_NOT_STRING} "
+            f"THEN from_json(data_json, {_ITEMS}, {_STRICT}) END AS _items",
+        )
         .selectExpr(
             "*",
             f"CASE WHEN {_IS_MINT} THEN {_typed(NEP171_MINT_SCHEMA)} END "

@@ -26,9 +26,9 @@ Kafka-producer contract. Before the Kafka sink it maps to
 and each Spark partition holds complete key groups. The parquet sink needs
 no such exchange (see ``streaming/job.py``).
 
-The projections and filters are SQL text for ``selectExpr``/``filter``/
-``F.expr``, so building them costs a few py4j round trips instead of
-several per ``Column`` call (see ``operators/extract.py``).
+The projections and filters are SQL text for ``selectExpr``/``filter``,
+so building them costs a few py4j round trips instead of several per
+``Column`` call (see ``operators/extract.py``).
 
 Scale note: whitelist/blacklist are config-sized (10s-1000s of entries) →
 one SQL ``IN`` list of quoted literals, which Catalyst turns into an
@@ -39,10 +39,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from near_event_streams_spark.operators.extract import sql_string
+from near_event_streams_spark.operators.extract import DATA_VARIANT, sql_string
 
 
 def _contract_in(names: Sequence[str]) -> str:
@@ -83,10 +82,9 @@ def _specific_topic(prefix: str) -> str:
 # read from it as a VARIANT and a ``STRING`` is re-quoted. Every other
 # type keeps its ``data_json`` text (a VARIANT's ``to_json`` would sort an
 # object's keys).
-_DATA_VARIANT = "variant_get(try_parse_json(event_json), '$.data')"
 _GENERIC = (
-    f"CASE WHEN schema_of_variant({_DATA_VARIANT}) = 'STRING' "
-    f"THEN to_json({_DATA_VARIANT}) ELSE data_json END"
+    f"CASE WHEN schema_of_variant({DATA_VARIANT}) = 'STRING' "
+    f"THEN to_json({DATA_VARIANT}) ELSE data_json END"
 )
 # Compact JSON of the full event, preserving the reference field order
 # (standard, version, event, data, emit_info) and the untagged ``data``
@@ -141,10 +139,3 @@ def ordered_for_sink(records: DataFrame) -> DataFrame:
     """
     parts = records.repartition("key")
     return parts.sortWithinPartitions("key", "block_height")
-
-
-def serialize_event() -> Column:
-    """Compact JSON of the full event, preserving the reference field order
-    (standard, version, event, data, emit_info) and the untagged ``data``
-    union (typed variant if matched, else raw JSON passthrough)."""
-    return F.expr(_VALUE)

@@ -4222,9 +4222,8 @@ def layout_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     column. The quadrant spans here are exactly those per-file stats.
     Plan shape: corpus bounds are one broadcast scalar aggregate; the
     key is a narrow bit-interleave inside codegen (no windows, no
-    range shuffle — the write-time layout pass lives in
-    ``sinks.parquet_sink.write_zordered``); the audit is one hash agg on
-    the bounded 64-value quadrant key.
+    range shuffle); the audit is one hash agg on the bounded 64-value
+    quadrant key.
     """
     from near_event_streams_spark.sinks.parquet_sink import zorder_key
 

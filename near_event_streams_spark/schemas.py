@@ -1,9 +1,9 @@
 """Explicit StructType schemas for the parity layer.
 
 The reference declares its data model as compile-time Rust structs
-(reference: ``src/event_types.rs:13-23,67-119``, ``src/token.rs:12-20,51-65``);
-we mirror that with explicit StructTypes — schema inference is never used on
-a production path (SURVEY §1.3).
+(reference: ``src/event_types.rs:13-23,67-119``); we mirror the parts the
+streaming job reads with explicit StructTypes — schema inference is never
+used on a production path (SURVEY §1.3).
 
 Untagged unions (``EventData``, ``Nep171Data`` — ``src/event_types.rs:77-91``)
 have no Spark equivalent; we model them as a *superset struct*: typed NEP-171
@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -127,51 +126,6 @@ EVENT_ENVELOPE_SCHEMA = StructType(
         StructField("version", StringType()),
         StructField("event", StringType()),
         StructField("data", StringType()),
-    ]
-)
-
-EMIT_INFO_SCHEMA = StructType(
-    [
-        StructField("receipt_id", StringType()),
-        StructField("block_timestamp", LongType()),  # nanoseconds
-        StructField("block_height", LongType()),
-        StructField("shard_id", LongType()),
-        StructField("contract_account_id", StringType()),
-    ]
-)
-
-# --------------------------------------------------------------------------
-# Enrichment dimension: Token / TokenMetadata
-# (reference: src/token.rs:12-20, 51-65).
-# --------------------------------------------------------------------------
-
-TOKEN_METADATA_SCHEMA = StructType(
-    [
-        StructField("title", StringType()),
-        StructField("description", StringType()),
-        StructField("media", StringType()),
-        StructField("media_hash", StringType()),
-        StructField("copies", LongType()),
-        StructField("issued_at", StringType()),
-        StructField("expires_at", StringType()),
-        StructField("starts_at", StringType()),
-        StructField("updated_at", StringType()),
-        StructField("extra", StringType()),
-        StructField("reference", StringType()),
-        StructField("reference_hash", StringType()),
-        StructField("collection_id", StringType()),
-    ]
-)
-
-TOKEN_SCHEMA = StructType(
-    [
-        StructField("_id", StringType()),  # "{contract_account_id}:{token_id}"
-        StructField("token_id", StringType()),
-        StructField("owner_id", StringType()),
-        StructField("metadata", TOKEN_METADATA_SCHEMA),
-        StructField("metadata_extra", StringType()),  # JSON text
-        StructField("approved_account_ids", MapType(StringType(), LongType())),
-        StructField("contract_account_id", StringType()),
     ]
 )
 

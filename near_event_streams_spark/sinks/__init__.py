@@ -1,5 +1,1 @@
-"""Sinks: batch writers + Kafka topic admin (reference op 14 parity)."""
-
-from near_event_streams_spark.sinks.kafka_admin import ensure_topics
-
-__all__ = ["ensure_topics"]
+"""Sinks: parquet compaction and layout helpers (``parquet_sink``)."""

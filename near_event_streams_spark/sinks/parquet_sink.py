@@ -1,74 +1,17 @@
-"""Partitioned parquet sink — the data-layout half of the 100 TB story.
+"""Parquet helpers for the streaming job's ``batch_id=N`` output.
 
-The reference's only sink is Kafka; durable event tables are what its
-downstream consumers build. This writer encodes the layout rules a
-100 TB event table needs:
-
-* **Hive partitioning on low-cardinality time/route keys** (e.g.
-  ``event_date``, ``event_type``) so every time/route-bounded query
-  partition-prunes at the file listing, before any I/O.
-* **One shuffle to co-locate partition values** (``repartition`` on the
-  partition columns) so each task writes whole partition directories —
-  without it every task writes a sliver of every partition and a day's
-  ingest produces millions of KB-sized files.
-* **``sortWithinPartitions`` on the query keys** (e.g. contract, user)
-  giving run-length/dictionary-friendly pages and per-file min/max
-  statistics tight enough for row-group skipping.
-* **``maxRecordsPerFile``** bounds file size so a skewed partition value
-  still splits into parallel-scannable files.
+``streaming/job.py:start_to_parquet`` writes one directory per
+micro-batch, which keeps a replayed batch idempotent but leaves many
+small files on a long-running stream. ``compact_batch_dirs_inplace``
+merges the closed batch directories into size-targeted files in place.
+``zorder_key`` is the Morton layout key that the analytics layer's
+``layout_zorder_locality`` audit computes.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str],
-    sort_within: Sequence[str] = (),
-    max_records_per_file: int = 5_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Write a partition-pruned, scan-friendly parquet table."""
-    shaped = df.repartition(*[df[c] for c in partition_by])
-    if sort_within:
-        shaped = shaped.sortWithinPartitions(*sort_within)
-    (
-        shaped.write.mode(mode)
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: Sequence[str],
-    num_buckets: int = 32,
-    sort_by: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucketed (hash-clustered) table — the co-located-join layout.
-
-    Two fact tables bucketed on their join key with the same bucket count
-    sort-merge-join with ZERO shuffle exchange (asserted in
-    tests/test_plan_quality.py): at 100 TB that's the difference between
-    re-shuffling both tables per join and reading pre-clustered buckets.
-    Bucketing requires the table catalog (``saveAsTable``) because bucket
-    metadata lives in the metastore, not in the parquet files.
-    """
-    writer = df.write.mode(mode).format("parquet").bucketBy(
-        num_buckets, *bucket_by
-    )
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
 
 
 def _hadoop_fs(spark, path: str):
@@ -217,51 +160,6 @@ def compact_batch_dirs_inplace(
     return (len(targets), n_files)
 
 
-def compact_batches(
-    spark,
-    batch_dir: str,
-    out_path: str,
-    partition_by: Sequence[str],
-    sort_within: Sequence[str] = (),
-    max_records_per_file: int = 5_000_000,
-    exclude_open: bool = False,
-) -> int:
-    """Compact a ``batch_id=N``-layout table (the idempotent streaming
-    sink's output) into a query-partitioned table.
-
-    Streaming leaves one directory per micro-batch — correct for replay
-    safety, wrong for readers once batches number in the thousands.
-    Periodic compaction rewrites batches into the analytical layout
-    (partition pruning + sorted pages). Returns rows compacted.
-
-    Concurrency: with the default ``exclude_open=False`` this reads
-    EVERY batch dir, including the highest-id one — only safe once the
-    writing stream has stopped (the post-run ETL shape the tests
-    drive). To run WHILE the stream ingests, pass ``exclude_open=True``
-    so the open max batch (the only one a crashed job can redeliver or
-    be mid-write on) is left out, matching
-    :func:`compact_batch_dirs_inplace`'s closed-batches-only rule (r13
-    review: the old docstring claimed concurrent use was safe
-    unconditionally — a mid-write batch dir would contribute partial,
-    uncommitted task files).
-    """
-    df = spark.read.option("basePath", batch_dir).parquet(batch_dir)
-    if exclude_open:
-        mx = df.agg(F.max("batch_id")).first()[0]
-        if mx is not None:
-            df = df.filter(F.col("batch_id") < mx)
-    df = df.drop("batch_id")
-    n = df.count()
-    write_partitioned(
-        df,
-        out_path,
-        partition_by=partition_by,
-        sort_within=sort_within,
-        max_records_per_file=max_records_per_file,
-    )
-    return n
-
-
 def zorder_key(
     x: Column, y: Column, x_rng: tuple, y_rng: tuple, bits: int = 16
 ) -> Column:
@@ -312,43 +210,3 @@ def zorder_key(
             )
         )
     return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered by the Z-order of two columns:
-    range-repartition on the Z-key (contiguous key ranges per output
-    task → per-file min/max stats cover small (x, y) rectangles), sort
-    within partitions, one file per task.
-
-    At 100 TB this is the standard multi-dimensional layout pass: one
-    range shuffle at write time buys file-level pruning for predicates
-    on EITHER clustered column forever after.
-    """
-    bounds = df.agg(
-        F.min(x_col).alias("x_lo"),
-        F.max(x_col).alias("x_hi"),
-        F.min(y_col).alias("y_lo"),
-        F.max(y_col).alias("y_hi"),
-    ).collect()[0]
-    key = zorder_key(
-        F.col(x_col),
-        F.col(y_col),
-        (bounds["x_lo"], bounds["x_hi"]),
-        (bounds["y_lo"], bounds["y_hi"]),
-        bits=bits,
-    )
-    (
-        df.withColumn("_zkey", key)
-        .repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -40,8 +40,6 @@ Semantics parity:
 This parity job is the package's only stream: every query starts through
 ``run_batches`` over a source from ``sources/streamer.py``
 (``tests/test_streaming.py::test_one_stream_runner`` gates both).
-``with_batch_observability`` attaches per-batch ``observe()`` metrics to
-the event stream.
 """
 
 from __future__ import annotations
@@ -49,7 +47,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from near_event_streams_spark.config import NesConfig
@@ -223,23 +220,4 @@ def start_to_kafka(
 
     return _start(
         messages, config, checkpoint_dir, _write, rejected_dir, False
-    )
-
-
-def with_batch_observability(
-    events: DataFrame, name: str = "nes_metrics"
-) -> DataFrame:
-    """Attach ``observe()`` metrics to the event stream: per-micro-batch
-    row/contract/height aggregates computed inside the running plan (no
-    second pass over the data) and surfaced through
-    ``StreamingQueryListener.onQueryProgress`` as ``observedMetrics[name]``
-    — the Spark-native form of the reference's per-batch stats logging
-    (``src/stats.rs:24-58``)."""
-    return events.observe(
-        name,
-        F.count(F.lit(1)).alias("n_events"),
-        F.approx_count_distinct("emit_info.contract_account_id").alias(
-            "n_contracts"
-        ),
-        F.max("emit_info.block_height").alias("max_height"),
     )

@@ -4,8 +4,6 @@ r13 review fixes, each pinned:
 * the in-place fold SKIPS dirs already at/above the target size (the
   previous cycle's merged output re-merged every cycle = quadratic
   lifetime write amplification on a 24/7 stream);
-* `compact_batches(exclude_open=True)` honors the closed-batches-only
-  contract for use while a stream is writing;
 * the Z-order scale survives column spans past the old LONG-product
   overflow point (~2^47 at bits=16 — nanosecond epochs, snowflake ids).
 """
@@ -17,7 +15,6 @@ from pyspark.sql import functions as F
 from near_event_streams_spark.sinks.parquet_sink import (
     _hadoop_fs,
     compact_batch_dirs_inplace,
-    compact_batches,
     zorder_key,
 )
 
@@ -72,23 +69,6 @@ def test_inplace_fold_skips_already_compacted_dirs(spark, tmp_path):
     assert compact_batch_dirs_inplace(
         spark, out, target_file_bytes=target
     ) == (0, 0)
-
-
-def test_compact_batches_exclude_open_leaves_max_batch(spark, tmp_path):
-    src = str(tmp_path / "batches")
-    _write_batches(spark, src, {0: 4, 1: 4, 2: 4})
-    closed_out = str(tmp_path / "closed")
-    n = compact_batches(
-        spark,
-        src,
-        closed_out,
-        partition_by=["pad"],
-        exclude_open=True,
-    )
-    assert n == 8  # batches 0 and 1 only
-    # default keeps the historical everything-in behavior
-    all_out = str(tmp_path / "all")
-    assert compact_batches(spark, src, all_out, partition_by=["pad"]) == 12
 
 
 def test_zorder_key_survives_wide_spans(spark):

@@ -180,39 +180,6 @@ def test_topk_uses_take_ordered_not_global_sort(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Both sides bucketed on the join key with equal bucket counts ⇒
-    sort-merge join reads pre-clustered buckets: NO shuffle exchange."""
-    from near_event_streams_spark.sinks.parquet_sink import write_bucketed
-    from near_event_streams_spark.sources.tables import load_table
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '{tmp_path}/wh'"
-    )
-    try:
-        orders = load_table(spark, SF_DIR, "orders")
-        cust = load_table(spark, SF_DIR, "customer")
-        write_bucketed(orders, "bucketdb.orders_b", ["o_custkey"], 8)
-        write_bucketed(
-            cust.withColumnRenamed("c_custkey", "o_custkey"),
-            "bucketdb.customer_b",
-            ["o_custkey"],
-            8,
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bucketdb.orders_b").join(
-            spark.table("bucketdb.customer_b"), "o_custkey"
-        )
-        plan = plan_text(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert count_exchanges(plan) == 0, plan
-        # and it actually runs
-        assert joined.count() == load_table(spark, SF_DIR, "orders").count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP DATABASE IF EXISTS bucketdb CASCADE")
-
-
 def test_runtime_bloom_filter_injection(spark):
     """A selective filter on one join side should inject a runtime bloom
     filter (might_contain) into the big side's scan — at 100 TB this

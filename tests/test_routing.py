@@ -11,7 +11,6 @@ from near_event_streams_spark.operators.extract import extract_events
 from near_event_streams_spark.operators.routing import (
     contract_filter,
     ordered_for_sink,
-    serialize_event,
 )
 from near_event_streams_spark.sources.streamer import (
     read_messages_json,
@@ -113,11 +112,10 @@ def test_key_is_contract_account(spark, fixture_messages_path):
 
 
 def test_serialized_value_round_trips(spark, fixture_messages_path):
-    ev = _events(spark, fixture_messages_path)
-    row = ev.filter(
-        (F.col("event") == "nft_mint")
-        & (F.col("emit_info.block_height") == 100)
-    ).select(serialize_event().alias("value")).collect()[0]
+    row = _routed(spark, fixture_messages_path).filter(
+        (F.col("topic") == "near_events.nep171.nft_mint")
+        & (F.col("block_height") == 100)
+    ).collect()[0]
     payload = json.loads(row["value"])
     assert payload["standard"] == "nep171"
     assert payload["event"] == "nft_mint"
@@ -130,10 +128,9 @@ def test_serialized_value_round_trips(spark, fixture_messages_path):
 
 
 def test_generic_data_passthrough_in_value(spark, fixture_messages_path):
-    ev = _events(spark, fixture_messages_path)
     row = (
-        ev.filter(F.col("standard") == "custom")
-        .select(serialize_event().alias("value"))
+        _routed(spark, fixture_messages_path)
+        .filter(F.col("topic") == "near_events.custom.thing_happened")
         .collect()[0]
     )
     payload = json.loads(row["value"])

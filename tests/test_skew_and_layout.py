@@ -1,12 +1,9 @@
-"""Salting operators preserve semantics; partitioned sink produces a
-prunable layout."""
-
-import os
+"""Salting operators preserve semantics; skew profiling and snapshot
+diffs."""
 
 from pyspark.sql import functions as F
 
 from near_event_streams_spark.operators import skew
-from near_event_streams_spark.sinks.parquet_sink import write_partitioned
 from near_event_streams_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -83,93 +80,6 @@ def test_salted_join_query_plan_fans_out_salt(spark):
     # pin the two pieces that survive optimization: the small side's
     # explode replication and the big side's seeded random salt
     assert "explode(" in plan and "rand(7)" in plan, plan[:1500]
-
-
-def test_write_partitioned_layout_and_roundtrip(spark, tmp_path):
-    orders = load_table(spark, SF_DIR, "orders").withColumn(
-        "order_year", F.year("o_orderdate")
-    )
-    out = str(tmp_path / "orders_tbl")
-    write_partitioned(
-        orders,
-        out,
-        partition_by=["order_year"],
-        sort_within=["o_custkey"],
-        max_records_per_file=100_000,
-    )
-    # hive-style partition dirs exist
-    years = {
-        d for d in os.listdir(out) if d.startswith("order_year=")
-    }
-    assert len(years) >= 3, years
-    back = spark.read.parquet(out)
-    assert back.count() == orders.count()
-    # partition pruning: a year-filtered scan must read only that dir
-    one_year = back.filter(F.col("order_year") == 1996)
-    plan = one_year._jdf.queryExecution().executedPlan().toString()
-    assert "order_year" in plan
-    assert one_year.count() == orders.filter(F.year("o_orderdate") == 1996).count()
-
-
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    """Z-clustered files must cover small rectangles in (custkey,
-    orderkey) space: the pruning-relevant metric — average per-file span
-    as a fraction of the full range — must be small on BOTH columns,
-    where a single-column sort leaves the other column's spans at ~100%."""
-    import glob
-
-    from near_event_streams_spark.sinks.parquet_sink import write_zordered
-    from near_event_streams_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    orders = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-
-    def file_span_fracs(path):
-        import duckdb
-
-        spans = []
-        full_x = full_y = None
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            x0, x1, y0, y1 = duckdb.sql(
-                f"SELECT MIN(o_custkey), MAX(o_custkey), "
-                f"MIN(o_orderkey), MAX(o_orderkey) FROM '{f}'"
-            ).fetchone()
-            spans.append((x1 - x0, y1 - y0))
-        allx = [s[0] for s in spans]
-        ally = [s[1] for s in spans]
-        x0, x1, y0, y1 = duckdb.sql(
-            f"SELECT MIN(o_custkey), MAX(o_custkey), MIN(o_orderkey), "
-            f"MAX(o_orderkey) FROM '{path}/part-*.parquet'"
-        ).fetchone()
-        return (
-            sum(allx) / len(allx) / (x1 - x0),
-            sum(ally) / len(ally) / (y1 - y0),
-            len(spans),
-        )
-
-    zpath = str(tmp_path / "zorder")
-    write_zordered(orders, zpath, "o_custkey", "o_orderkey", n_files=8)
-    zx, zy, nz = file_span_fracs(zpath)
-    assert nz >= 4, "expected multiple z-clustered files"
-
-    # baseline: single-column sort — same file count
-    spath = str(tmp_path / "singlesort")
-    (
-        orders.repartitionByRange(8, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-    sx, sy, _ = file_span_fracs(spath)
-
-    # single-column sort: tight on x, blind on y
-    assert sx < 0.3 and sy > 0.8, (sx, sy)
-    # z-order: BOTH dimensions prunable per file
-    assert zx < 0.6 and zy < 0.6, (zx, zy)
-    # and the content round-trips
-    assert spark.read.parquet(zpath).count() == orders.count()
 
 
 def test_key_skew_profile_ranks_planted_hot_key(spark):
