@@ -17,12 +17,15 @@ Spark mapping:
   - ``sync-from-interruption`` → reuse ``{home}/checkpoint`` (restart
     continues from the last committed micro-batch);
   - ``sync-from-latest``      → Kafka ``startingOffsets=latest``; for a
-    file source, a fresh checkpoint processing only files newer than
-    start (``latestFirst`` pacing);
+    file source it only switches to ``{home}/checkpoint-latest``: the
+    first run replays the whole directory, and a later run resumes that
+    checkpoint rather than starting at the newest file;
   - ``sync-from-block --height H`` → height filter on the stream (works
     for both sources; Kafka could additionally seek by timestamp).
-* ``--concurrency`` → ``maxFilesPerTrigger``/``maxOffsetsPerTrigger``
-  pacing (the reference's block-handler concurrency, ``configs.rs:79-81``).
+* ``--concurrency N`` → micro-batch size: ``maxFilesPerTrigger=N`` on the
+  file source, ``maxOffsetsPerTrigger=1000*N`` on Kafka. It does not bound
+  in-flight blocks the way the reference's block-handler concurrency
+  does (``configs.rs:79-81``).
 * ``--stream-while-syncing`` is accepted for surface parity; there is no
   embedded node to sync, so it only logs.
 * ``init`` writes a commented ``nes.toml`` (mirrors ``nes.toml.sample``)
@@ -71,7 +74,14 @@ def build_parser() -> argparse.ArgumentParser:
     )
     run.add_argument("--out-dir", help="parquet sink output dir")
     run.add_argument("--stream-while-syncing", action="store_true")
-    run.add_argument("--concurrency", type=int, default=1)
+    run.add_argument(
+        "--concurrency",
+        type=int,
+        default=1,
+        metavar="N",
+        help="micro-batch size: N files per batch on the file source, "
+        "1000*N offsets on Kafka (not an in-flight block bound)",
+    )
     run.add_argument(
         "--timeout",
         type=float,

@@ -462,9 +462,8 @@ def group_stats_arrow(
     the zero-copy grouped-map API (no pandas materialization, columns
     stay Arrow buffers end-to-end).
 
-    Exists to exercise the grouped Arrow path the way
-    ``similarity.normalize_embeddings_arrow`` exercises ``mapInArrow``:
-    a builtin ``groupBy().agg`` computes the same numbers with partial
+    Exists to exercise the grouped Arrow path: a builtin
+    ``groupBy().agg`` computes the same numbers with partial
     aggregation and is the right plan when the metric IS expressible —
     this is the escape hatch for per-group logic that isn't, shown on a
     metric an oracle can still check.
@@ -643,60 +642,6 @@ def cap_per_group(
     return df.withColumn(
         "group_rank", F.row_number().over(w)
     ).withColumn("kept", F.col("group_rank") <= cap)
-
-
-def cap_per_group_twophase(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    cap: int,
-    id_col: str = "doc_id",
-    n_salts: int = 16,
-) -> DataFrame:
-    """Hot-domain-safe variant of :func:`cap_per_group`: two-phase
-    per-group top-``cap``.
-
-    Phase 1 ranks within ``(group, salt)`` — ``n_salts`` tasks share
-    each hot group, so no single task ever sees more than ~1/n_salts of
-    it — and anything outside its salt-bucket's top ``cap`` is
-    eliminated (it provably cannot be in the group's global top
-    ``cap``). Phase 2 ranks the ≤ ``cap·n_salts`` survivors per group
-    exactly. The ``kept`` flag is exact for EVERY row; ``group_rank`` is
-    exact for kept rows and NULL for dropped ones (computing exact ranks
-    for the tail is precisely the full-sort this operator exists to
-    avoid).
-    """
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
-    w1 = Window.partitionBy(group_col, "_salt").orderBy(
-        F.desc(order_col), F.asc(id_col)
-    )
-    staged = (
-        df.withColumn("_salt", salt)
-        .withColumn("_r1", F.row_number().over(w1))
-    )
-    survivors = staged.filter(F.col("_r1") <= cap)
-    w2 = Window.partitionBy(group_col).orderBy(
-        F.desc(order_col), F.asc(id_col)
-    )
-    ranked = survivors.withColumn(
-        "_r2", F.row_number().over(w2).cast("long")
-    )
-    kept = ranked.filter(F.col("_r2") <= cap).select(
-        *df.columns, F.col("_r2").alias("group_rank")
-    )
-    dropped = (
-        staged.join(
-            kept.select(F.col(id_col).alias("_kid")),
-            on=F.col(id_col) == F.col("_kid"),
-            how="left_anti",
-        )
-        .select(*df.columns)
-        .withColumn("group_rank", F.lit(None).cast("long"))
-    )
-    return (
-        kept.withColumn("kept", F.lit(True))
-        .unionByName(dropped.withColumn("kept", F.lit(False)))
-    )
 
 
 def weighted_sample(

@@ -1024,65 +1024,6 @@ def simhash_signatures(docs: DataFrame, bits: int = 32) -> DataFrame:
     return agg.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def simhash_near_pairs(
-    signatures: DataFrame, max_hamming: int = 1, bits: int = 32, bands: int = 2
-) -> DataFrame:
-    """Candidate pairs share at least one of ``bands`` signature slices
-    (pigeonhole: hamming ≤ bands-1 implies a shared slice when
-    max_hamming < bands); verified by exact popcount Hamming distance."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"simhash_near_pairs: max_hamming={max_hamming} needs "
-            f"bands > max_hamming (got {bands}) — the pigeonhole "
-            "candidate generation silently misses true pairs whose "
-            "differing bits spread one per slice (r13 review; same "
-            "contract as the image dHash banding)"
-        )
-    if bits % bands != 0:
-        raise ValueError(
-            f"simhash_near_pairs: bits={bits} not divisible by "
-            f"bands={bands} — trailing signature bits would never "
-            "influence any slice"
-        )
-    width = bits // bands
-    mask = (1 << width) - 1
-    slices = None
-    for b in range(bands):
-        s = signatures.select(
-            "doc_id",
-            "simhash",
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("slice"),
-        )
-        slices = s if slices is None else slices.unionByName(s)
-    slices = slices.persist()
-    a = slices.select(
-        F.col("doc_id").alias("a_doc_id"),
-        F.col("simhash").alias("a_sig"),
-        "band",
-        "slice",
-    )
-    b_ = slices.select(
-        F.col("doc_id").alias("b_doc_id"),
-        F.col("simhash").alias("b_sig"),
-        "band",
-        "slice",
-    )
-    ham = F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig")))
-    # self-join on the slice key (hot-bucket-safe, see lsh_candidate_pairs);
-    # hamming filter BEFORE distinct so the dedup shuffle only carries
-    # surviving pairs
-    return (
-        a.join(b_, ["band", "slice"])
-        .filter(F.col("a_doc_id") < F.col("b_doc_id"))
-        .select("a_doc_id", "b_doc_id", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 def duplicated_ngram_stats(
     docs: DataFrame,
     n: int = 8,

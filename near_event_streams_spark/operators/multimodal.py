@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -33,16 +32,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("magic_hex", StringType()),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -89,39 +78,6 @@ def as_media_table(
         payload.alias("payload"),
         media_type.alias("media_type"),
         F.octet_length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        magic.alias("magic_hex"),
-    )
-
-
-def read_media_dir(
-    spark, path: str, glob: str = "*", min_partitions: int | None = None
-) -> DataFrame:
-    """Ingest raw media files via Spark's ``binaryFile`` source into the
-    MEDIA_SCHEMA shape (the production entry point ``as_media_table``
-    stands in for when media already lives in a table column).
-
-    Scale: ``binaryFile`` splits the listing across the cluster but each
-    file is one row — repartition after load when files are few and
-    large so decode parallelism isn't bound by file count.
-    """
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    if min_partitions:
-        df = df.repartition(min_partitions)
-    magic = F.lower(F.hex(F.substring(F.col("content"), 1, 4)))
-    media_type = F.lit("application/octet-stream")
-    for sig, mtype in _MAGIC.items():
-        media_type = F.when(magic.startswith(sig), F.lit(mtype)).otherwise(
-            media_type
-        )
-    return df.select(
-        F.xxhash64(F.col("path")).alias("media_id"),
-        F.col("content").alias("payload"),
-        media_type.alias("media_type"),
-        F.length(F.col("content")).cast("long").alias("n_bytes"),
         magic.alias("magic_hex"),
     )
 
@@ -222,41 +178,6 @@ def decode_image(payload: bytes) -> tuple[int, int, float]:
     raise ValueError("no dependency-free decoder for this format")
 
 
-def pil_decode_samples(payload: bytes) -> tuple[int, int, list[int]]:
-    """Optional real-codec decode via PIL/Pillow (JPEG/PNG/WebP — the
-    formats an actual 100 TB multimodal corpus holds): ``(width,
-    height, samples)`` with RGB samples in the same row-major
-    (y, x, channel) order as :func:`decode_ppm_samples`, so it plugs
-    into the SAME ``decoder=`` seam of :func:`resize_nearest` /
-    :func:`extract_features` with the plan, partitioning, schema and
-    batch shape unchanged. Raises ``ValueError`` when Pillow is not
-    importable (this container) or the payload doesn't decode —
-    callers fall through to the dependency-free path.
-    """
-    try:
-        import io  # noqa: PLC0415 — executor-side import
-
-        from PIL import Image  # noqa: PLC0415 — optional dependency
-    except ImportError as exc:
-        raise ValueError("Pillow not installed") from exc
-    try:
-        with Image.open(io.BytesIO(payload)) as img:
-            rgb = img.convert("RGB")
-            w, h = rgb.size
-            return w, h, [s for px in rgb.getdata() for s in px]
-    except Exception as exc:  # Pillow raises codec-specific errors
-        raise ValueError(f"PIL decode failed: {exc}") from exc
-
-
-def pil_decode(payload: bytes) -> tuple[int, int, float]:
-    """:func:`pil_decode_samples` summarized to the
-    ``(width, height, mean_pixel)`` contract of :func:`decode_image` —
-    the drop-in ``decoder=`` for :func:`extract_features`."""
-    w, h, samples = pil_decode_samples(payload)
-    mean = round(sum(samples) / len(samples), 6) if samples else 0.0
-    return w, h, mean
-
-
 def byte_stat_features(payload: bytes) -> tuple[int, int, int]:
     """Deterministic byte statistics for undecodable payloads:
     ``(pseudo_width, pseudo_height, checksum)`` with a polynomial rolling
@@ -270,34 +191,18 @@ def byte_stat_features(payload: bytes) -> tuple[int, int, int]:
     return (n % 64) + 1, (n % 48) + 1, checksum
 
 
-# Back-compat alias (pre-round-3 name for the fallback path).
-fake_decode_features = byte_stat_features
-
-
-def extract_features(
-    media: DataFrame, batch_log=None, decoder=None
-) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
-    Per payload: try ``decoder`` when given (a top-level callable
-    ``bytes -> (width, height, mean_pixel)``, e.g. :func:`pil_decode`
-    for JPEG/PNG corpora — it ships to executors via the closure, so
-    it must be importable there), then the dependency-free raster
-    decode (BMP/PPM → true dimensions + mean pixel, ``decoded=True``);
-    otherwise fall back to deterministic byte statistics
-    (``decoded=False``, ``mean_pixel=NULL``). Every path keeps the
-    plan, partitioning, schema and batch shape identical — the decoder
-    is the only moving part.
+    Per payload: the dependency-free raster decode (BMP/PPM → true
+    dimensions + mean pixel, ``decoded=True``); otherwise fall back to
+    deterministic byte statistics (``decoded=False``,
+    ``mean_pixel=NULL``). Both paths share the plan, partitioning,
+    schema and batch shape.
     """
     import pandas as pd  # noqa: PLC0415 — executor-side import
 
     def _one(p: bytes) -> tuple[int, int, int | None, bool, float | None]:
-        if decoder is not None:
-            try:
-                w, h, mean = decoder(p)
-                return w, h, None, True, mean
-            except ValueError:
-                pass
         try:
             w, h, mean = decode_image(p)
         except ValueError:
@@ -307,8 +212,6 @@ def extract_features(
 
     def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            if batch_log is not None:
-                batch_log(len(pdf))
             feats = [_one(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
@@ -396,34 +299,21 @@ def decode_ppm_samples(payload: bytes) -> tuple[int, int, list[int]]:
     return width, height, samples
 
 
-def resize_nearest(
-    media: DataFrame, out_w: int, out_h: int, decoder=None
-) -> DataFrame:
+def resize_nearest(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """REAL nearest-neighbor raster resize over the binary column —
     the thumbnail/normalization step of a multimodal pipeline, as an
-    Arrow-batched ``mapInPandas``. ``decoder`` (a top-level callable
-    ``bytes -> (width, height, rgb_samples)``, e.g.
-    :func:`pil_decode_samples` for JPEG/PNG corpora) is tried before
-    the dependency-free PPM pixel access; either way the plan/schema
-    stay identical. For each output pixel ``(y, x)`` the source pixel
+    Arrow-batched ``mapInPandas`` over the dependency-free PPM pixel
+    access. For each output pixel ``(y, x)`` the source pixel
     is ``(y·src_h//out_h, x·src_w//out_w)``; emits the resized
     raster's mean and a base-131 rolling checksum of the sampled bytes
-    so an oracle can replay the exact pixel selection. Payloads no
-    available decoder accepts pass through with ``decoded=False``.
+    so an oracle can replay the exact pixel selection. Payloads that
+    do not decode as PPM pass through with ``decoded=False``.
     """
     import pandas as pd  # noqa: PLC0415 — executor-side import
 
-    def _decode(p: bytes) -> tuple[int, int, list[int]]:
-        if decoder is not None:
-            try:
-                return decoder(p)
-            except ValueError:
-                pass
-        return decode_ppm_samples(p)
-
     def _one(p) -> tuple:
         try:
-            w, h, vals = _decode(bytes(p))
+            w, h, vals = decode_ppm_samples(bytes(p))
         except ValueError:
             return None, None, False, None, None
         sampled: list[int] = []
@@ -527,7 +417,6 @@ def dhash_images(
     media: DataFrame,
     grid_w: int = 8,
     grid_h: int = 8,
-    decoder=None,
     id_col: str = "media_id",
     payload_col: str = "payload",
 ) -> DataFrame:
@@ -541,16 +430,13 @@ def dhash_images(
     brightness-tweaked duplicate images change.
 
     Runs as one Arrow-batched ``mapInPandas`` pass (same plumbing as
-    :func:`extract_features`). ``decoder`` is the pluggable full-sample
-    seam (``bytes -> (w, h, rgb_samples)``, e.g.
-    :func:`pil_decode_samples` for JPEG/PNG corpora); the
-    dependency-free PPM pixel access is the fallback. Luma uses the
-    integer Rec.601 approximation ``(299·R + 587·G + 114·B) // 1000`` so
-    the hash is engine-replayable with no float in sight. Payloads no
-    decoder accepts — OR that decode but can't be grid-sampled (e.g. a
-    custom decoder returning degenerate dimensions) — pass through with
-    ``decoded=False`` and NULL bands: one malformed payload must never
-    fail the task and wedge a 24/7 ingest stream (r10 advisory).
+    :func:`extract_features`) over the dependency-free PPM pixel
+    access. Luma uses the integer Rec.601 approximation
+    ``(299·R + 587·G + 114·B) // 1000`` so the hash is engine-replayable
+    with no float in sight. Payloads that do not decode as PPM pass
+    through with ``decoded=False`` and NULL bands: one malformed payload
+    must never fail the task and wedge a 24/7 ingest stream (r10
+    advisory).
 
     ``id_col``/``payload_col`` name the input columns; the output id
     column is always NAMED ``media_id`` but keeps the INPUT column's
@@ -563,17 +449,9 @@ def dhash_images(
     """
     import pandas as pd  # noqa: PLC0415 — executor-side import
 
-    def _decode(p: bytes) -> tuple[int, int, list[int]]:
-        if decoder is not None:
-            try:
-                return decoder(p)
-            except ValueError:
-                pass
-        return decode_ppm_samples(p)
-
     def _one(p) -> tuple:
         try:
-            w, h, vals = _decode(bytes(p))
+            w, h, vals = decode_ppm_samples(bytes(p))
             bands: list[int] = []
             for gy in range(grid_h):
                 sy = gy * h // grid_h
@@ -588,7 +466,7 @@ def dhash_images(
                     if row[gx + 1] > row[gx]:
                         byte |= 1 << gx
                 bands.append(byte)
-        except (ValueError, IndexError):
+        except ValueError:
             return None, None, False, None
         return w, h, True, bands
 

@@ -90,7 +90,8 @@ _GENERIC = (
 # (standard, version, event, data, emit_info) and the untagged ``data``
 # union (typed variant if matched, else raw JSON passthrough). ``data`` and
 # ``emit_info`` are spliced into the envelope JSON: drop its closing brace,
-# append the extra members, re-close.
+# append the extra members, re-close. ``_DATA`` is never null on a routed
+# row: extraction rejects a null ``data_json``.
 _DATA = (
     "coalesce("
     "CASE WHEN data_mint IS NOT NULL THEN to_json(data_mint) END, "
@@ -100,8 +101,7 @@ _DATA = (
 _ENVELOPE_JSON = "to_json(struct(standard, version, event))"
 _VALUE = (
     f"concat(substring({_ENVELOPE_JSON}, 1, length({_ENVELOPE_JSON}) - 1), "
-    f"CASE WHEN {_DATA} IS NOT NULL THEN concat(',\"data\":', {_DATA}) "
-    "ELSE '' END, "
+    f"',\"data\":', {_DATA}, "
     "CASE WHEN emit_info IS NOT NULL "
     "THEN concat(',\"emit_info\":', to_json(emit_info)) ELSE '' END, "
     "'}')"

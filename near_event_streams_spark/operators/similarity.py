@@ -232,58 +232,6 @@ def lsh_topk(
     )
 
 
-def normalize_embeddings_arrow(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Unit-normalize embeddings via ``mapInArrow`` — zero-copy Arrow
-    RecordBatches in and out, no pandas materialization (the lowest-
-    overhead Python hook Spark has). Pre-normalizing the corpus turns
-    every later cosine into a plain dot product: worth one narrow pass
-    when the corpus is scored repeatedly (ANN indexing, near-dup sweeps).
-
-    Emits ``(vec_id, unit, norm)``; zero vectors pass through unchanged
-    with norm 0 rather than dividing by it.
-    """
-    import pyarrow as pa
-
-    src = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
-    )
-
-    def batches(it):
-        for batch in it:
-            ids = batch.column("vec_id")
-            vecs = batch.column("_v")
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            offsets = vecs.offsets.to_numpy(zero_copy_only=False)
-            norms = np.array(
-                [
-                    float(np.sqrt((flat[s:e] ** 2).sum()))
-                    for s, e in zip(offsets[:-1], offsets[1:])
-                ]
-            )
-            units = [
-                (flat[s:e] / n if n > 0 else flat[s:e]).astype("float64")
-                for (s, e), n in zip(
-                    zip(offsets[:-1], offsets[1:]), norms
-                )
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(list(units), type=pa.list_(pa.float64())),
-                    pa.array(norms, type=pa.float64()),
-                ],
-                names=["vec_id", "unit", "norm"],
-            )
-
-    return src.mapInArrow(
-        batches, "vec_id long, unit array<double>, norm double"
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF-Flat: KMeans coarse quantizer + nprobe centroid probing
 # ---------------------------------------------------------------------------

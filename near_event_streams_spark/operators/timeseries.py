@@ -33,9 +33,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-US_PER_MINUTE = 60 * 1_000_000
-
-
 def bucket_start(ts_us_col: Column, bucket_us: int) -> Column:
     """Tumbling-bucket start in epoch-µs: pure integer arithmetic so any
     engine agrees exactly (no timestamp truncation semantics involved).

@@ -463,15 +463,6 @@ FROM odd_dups
 )
 
 
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash candidate pair list at Hamming≤1 (detail view)."""
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = dedup.simhash_signatures(docs)
-    return dedup.simhash_near_pairs(sigs, max_hamming=1).orderBy(
-        "a_doc_id", "b_doc_id"
-    )
-
-
 def dedup_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash, oracle-gated by its defining locality property: near-dup
     documents (exact Jaccard ≥ 0.8, recomputed in-engine) must receive
@@ -980,16 +971,6 @@ def _ann_recall_invariant(
             )
         ).alias("recall_ok"),
     )
-
-
-def ann_ivf_topk_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat approximate top-k result list (detail view; recall also
-    measured against ann_cosine_topk in tests/test_llm_ops.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(
-        queries, emb, k=5, n_clusters=16, nprobe=8
-    ).orderBy("query_id", "rank")
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1993,15 +1974,6 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries, emb, k=5, n_clusters=16, nprobe=12, m=8, ks=256, refine=4
     )
     return _ann_recall_invariant(exact, approx, min_recall=0.8)
-
-
-def ann_lsh_topk_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-k result list (detail view)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.lsh_topk(queries, emb, dim=64, k=5).orderBy(
-        "query_id", "rank"
-    )
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,9 +8,11 @@ published by a thin relay. Both map onto the same explicit envelope schema
 
 Sync-mode parity (``src/configs.rs:101-127``):
   from-interruption → restart from ``checkpointLocation``
-  from-latest       → ``startingOffsets="latest"``
-  from-block-height → ``startingOffsets`` per-partition JSON /
-                      ``startingTimestamp`` on the relay topic
+  from-latest       → ``startingOffsets="latest"`` on Kafka; on files, a
+                      separate checkpoint only (see ``cli.py``)
+  from-block-height → a ``block.header.height >= H`` filter that
+                      ``cli.cmd_run`` puts on either source; no offset
+                      seek
 """
 
 from __future__ import annotations

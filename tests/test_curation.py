@@ -232,31 +232,6 @@ def test_nb_distill_separates_planted_classes(spark):
     assert all(r["agree"] for r in out if r["label"])
 
 
-def test_cap_twophase_matches_single_phase(spark):
-    """Two-phase caps must agree with the exact single-phase operator:
-    identical kept sets, identical ranks on kept rows, and the dropped
-    tail carries NULL rank by design."""
-    from near_event_streams_spark.operators.curation import (
-        cap_per_group,
-        cap_per_group_twophase,
-    )
-    from near_event_streams_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    one = cap_per_group(docs, "source", "n_chars", cap=30).collect()
-    two = cap_per_group_twophase(
-        docs, "source", "n_chars", cap=30, n_salts=4
-    ).collect()
-    kept1 = {r["doc_id"]: r["group_rank"] for r in one if r["kept"]}
-    kept2 = {r["doc_id"]: r["group_rank"] for r in two if r["kept"]}
-    assert kept1 == kept2
-    assert {r["doc_id"] for r in two} == {r["doc_id"] for r in one}
-    assert all(r["group_rank"] is None for r in two if not r["kept"])
-
-
 def test_weighted_sample_deterministic_and_weight_sensitive(spark):
     """A-ES weighted sampling: identical sample across runs and
     partitionings; rows with 100x the weight must be strongly

@@ -393,9 +393,7 @@ def test_ppjoin_rational_threshold_does_not_over_prune(spark):
 
 def test_banding_parameter_guards(spark):
     """r13 review: non-divisible banding silently ignored trailing
-    hash slots (recall below the designed S-curve); simhash with
-    max_hamming >= bands silently missed true pairs whose differing
-    bits spread one per slice."""
+    hash slots (recall below the designed S-curve)."""
     import pytest
 
     df = spark.createDataFrame(
@@ -415,11 +413,6 @@ def test_banding_parameter_guards(spark):
     wide = dedup.minhash_signatures(ids, 16)
     with pytest.raises(ValueError, match="divisible"):
         dedup.lsh_candidate_pairs(wide, 16, 5)
-    sh = dedup.simhash_signatures(df)
-    with pytest.raises(ValueError, match="bands"):
-        dedup.simhash_near_pairs(sh, max_hamming=2, bands=2)
-    with pytest.raises(ValueError, match="divisible"):
-        dedup.simhash_near_pairs(sh, max_hamming=1, bands=3, bits=32)
 
 
 def test_remove_spans_null_text_is_empty_doc(spark):

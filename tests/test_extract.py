@@ -4,6 +4,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from near_event_streams_spark.config import NesConfig
 from near_event_streams_spark.operators.extract import (
     extract_events,
     parse_events,
@@ -11,6 +12,7 @@ from near_event_streams_spark.operators.extract import (
 )
 from near_event_streams_spark.operators.routing import event_columns
 from near_event_streams_spark.sources.streamer import read_messages_json
+from near_event_streams_spark.streaming.job import build_routed_stream
 
 
 def _extract(spark, fixture_messages_path):
@@ -146,6 +148,20 @@ def test_event_line_parsed_once(spark, fixture_messages_path):
         plan = "\n".join(body for _, body in nodes)
         assert "get_json_object" not in plan
         assert plan.count("from_json(StructField(standard,") == 1, plan
+
+
+def test_routed_value_variant_parses_bounded(spark, fixture_messages_path):
+    """The routed plan's generated code holds at most 5 VARIANT parse
+    sites: a null test around ``routing._DATA`` (never null on a routed
+    row) evaluates the generic payload's parse a second time."""
+    spark.catalog.clearCache()
+    routed, _ = build_routed_stream(
+        read_messages_json(spark, fixture_messages_path), NesConfig()
+    )
+    code = spark._jvm.PythonSQLUtils.explainString(
+        routed._jdf.queryExecution(), "codegen"
+    )
+    assert code.count("VariantExpressionEvalUtils.parseJson") <= 5
 
 
 # Payloads that take each route through serde's untagged-union order

@@ -3,14 +3,13 @@ checks (recall vs exact baseline, determinism) for the hash-based ones."""
 
 import pytest
 
+from near_event_streams_spark.operators import similarity
 from near_event_streams_spark.plans.llm_ops import (
     ORACLE_SQL,
     QUERIES,
-    ann_ivf_topk_detail,
-    ann_lsh_topk_detail,
     dedup_minhash_lsh_pairs,
-    dedup_simhash_pairs,
 )
+from near_event_streams_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 from tests.oracle import compare, duck_connection
 
@@ -47,12 +46,11 @@ def test_minhash_lsh_finds_exact_jaccard_pairs(spark):
         assert recall >= 0.9, f"LSH recall {recall} too low"
 
 
-def test_simhash_deterministic_and_bounded(spark):
-    a = dedup_simhash_pairs(spark, SF_DIR).collect()
-    b = dedup_simhash_pairs(spark, SF_DIR).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    for r in a:
-        assert r["hamming"] <= 1
+def _ann_inputs(spark):
+    """(queries, corpus): the first 10 embeddings against all of them,
+    the inputs of the registry's ANN queries."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    return emb.filter(emb.vec_id < 10), emb
 
 
 def test_ann_lsh_recall_against_brute_force(spark):
@@ -60,38 +58,13 @@ def test_ann_lsh_recall_against_brute_force(spark):
         (r["query_id"], r["cand_id"])
         for r in QUERIES["ann_cosine_topk"](spark, SF_DIR).collect()
     }
+    queries, emb = _ann_inputs(spark)
     approx = {
         (r["query_id"], r["cand_id"])
-        for r in ann_lsh_topk_detail(spark, SF_DIR).collect()
+        for r in similarity.lsh_topk(queries, emb, dim=64, k=5).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, f"LSH ANN recall {recall} too low (multiprobe=1)"
-
-
-def test_normalize_embeddings_arrow(spark):
-    """mapInArrow normalization: unit norms, direction preserved, and the
-    norm column reproduces the original magnitude."""
-    import math
-
-    from near_event_streams_spark.operators.similarity import (
-        normalize_embeddings_arrow,
-    )
-    from near_event_streams_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings").limit(50)
-    orig = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
-    out = {r["vec_id"]: r for r in normalize_embeddings_arrow(emb).collect()}
-    assert set(out) == set(orig)
-    for vid, r in out.items():
-        v = orig[vid]
-        n = math.sqrt(sum(x * x for x in v))
-        assert abs(r["norm"] - n) < 1e-6
-        if n > 0:
-            got = math.sqrt(sum(x * x for x in r["unit"]))
-            # float32 source precision bounds the unit norm at ~1e-7
-            assert abs(got - 1.0) < 1e-6
-            # direction preserved
-            assert abs(r["unit"][0] - v[0] / n) < 1e-6
 
 
 def test_connected_components_transitive_chain(spark):
@@ -145,16 +118,22 @@ def test_ann_ivf_recall_against_brute_force(spark):
         (r["query_id"], r["cand_id"])
         for r in QUERIES["ann_cosine_topk"](spark, SF_DIR).collect()
     }
+    queries, emb = _ann_inputs(spark)
     approx = {
         (r["query_id"], r["cand_id"])
-        for r in ann_ivf_topk_detail(spark, SF_DIR).collect()
+        for r in similarity.ivf_topk(
+            queries, emb, k=5, n_clusters=16, nprobe=8
+        ).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, f"IVF ANN recall {recall} too low"
 
 
 def test_ann_ivf_rank_shape(spark):
-    out = ann_ivf_topk_detail(spark, SF_DIR).collect()
+    queries, emb = _ann_inputs(spark)
+    out = similarity.ivf_topk(
+        queries, emb, k=5, n_clusters=16, nprobe=8
+    ).collect()
     per_query = {}
     for r in out:
         per_query.setdefault(r["query_id"], []).append(r["rank"])
@@ -452,27 +431,6 @@ def test_ivfpq_append_preserves_and_extends(spark, tmp_path):
         assert rows_back[vid] == row, vid
 
 
-def test_binary_file_source_to_features(spark, tmp_path):
-    """Real binaryFile-source ingestion: synthetic files with magic bytes
-    → typed media table → Arrow-batched feature extraction."""
-    from near_event_streams_spark.operators import multimodal
-
-    (tmp_path / "a.png").write_bytes(bytes.fromhex("89504e47") + b"rest-of-png")
-    (tmp_path / "b.jpg").write_bytes(bytes.fromhex("ffd8ffe0") + b"jpeg-body")
-    (tmp_path / "c.bin").write_bytes(b"\x00\x01\x02\x03unknown")
-
-    media = multimodal.read_media_dir(spark, str(tmp_path))
-    rows = {r["magic_hex"]: r for r in media.collect()}
-    assert rows["89504e47"]["media_type"] == "image/png"
-    assert rows["ffd8ffe0"]["media_type"] == "image/jpeg"
-    assert rows["00010203"]["media_type"] == "application/octet-stream"
-
-    feats = multimodal.extract_features(media).collect()
-    assert len(feats) == 3
-    for f in feats:
-        assert f["width"] >= 1 and f["height"] >= 1 and f["checksum"] > 0
-
-
 def test_chunk_documents_edges(spark):
     """Chunk arithmetic at the boundaries: short doc -> 1 chunk; exact
     multiple -> no empty trailing chunk; overlap stitches correctly."""
@@ -617,90 +575,24 @@ def test_kmeans_fixedpoint_separates_planted_clusters(spark):
     assert all(r["dist_units"] >= 0 for r in out)
 
 
-def test_decoder_seam_prefers_hook_and_preserves_fallback(spark):
-    """The optional ``decoder=`` hook (the PIL/libjpeg seam): payloads
-    the hook accepts decode through it; payloads it rejects still go
-    through the dependency-free BMP/PPM path; schema unchanged. The
-    stand-in codec accepts a FAKE magic and rejects everything else;
-    defined inside the test so cloudpickle ships it by VALUE (the test
-    module is not importable on executors)."""
-    from near_event_streams_spark.operators import multimodal
-
-    def _fake_codec_samples(p: bytes) -> tuple[int, int, list[int]]:
-        if p[:4] != b"FAKE":
-            raise ValueError("not a FAKE payload")
-        body = list(p[4:])
-        return len(body), 1, [b for b in body for _ in range(3)]
-
-    def _fake_codec_mean(p: bytes) -> tuple[int, int, float]:
-        w, h, samples = _fake_codec_samples(p)
-        return w, h, round(sum(samples) / len(samples), 6)
-
-    ppm = b"P3 2 1 255 10 20 30 40 50 60"
-    rows = [(1, "image", bytearray(b"FAKEab"), 6), (2, "image", bytearray(ppm), len(ppm))]
-    media = spark.createDataFrame(
-        rows, "media_id long, media_type string, payload binary, n_bytes long"
-    )
-    feats = {
-        r["media_id"]: r
-        for r in multimodal.extract_features(
-            media, decoder=_fake_codec_mean
-        ).collect()
-    }
-    assert feats[1]["decoded"] and (feats[1]["width"], feats[1]["height"]) == (2, 1)
-    assert feats[1]["mean_pixel"] == round((97 + 98) / 2, 6)
-    assert feats[2]["decoded"] and (feats[2]["width"], feats[2]["height"]) == (2, 1)
-
-    resized = {
-        r["media_id"]: r
-        for r in multimodal.resize_nearest(
-            media, 1, 1, decoder=_fake_codec_samples
-        ).collect()
-    }
-    # 1x1 nearest-neighbor keeps source pixel (0,0): FAKE payload 'a'
-    assert resized[1]["decoded"] and resized[1]["resized_mean"] == 97.0
-    assert resized[2]["decoded"] and resized[2]["resized_mean"] == 20.0
-
-
-def test_pil_decoder_seam_with_real_jpeg(spark, tmp_path):
-    """When Pillow IS importable (not this container — skip-marked),
-    a real JPEG flows through the same seam unchanged."""
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    from near_event_streams_spark.operators import multimodal
-
-    buf = io.BytesIO()
-    Image.new("RGB", (4, 2), (100, 150, 200)).save(buf, format="JPEG")
-    jpeg = buf.getvalue()
-    w, h, mean = multimodal.pil_decode(jpeg)
-    assert (w, h) == (4, 2) and 50 < mean < 250
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(jpeg), len(jpeg))],
-        "media_id long, media_type string, payload binary, n_bytes long",
-    )
-    row = multimodal.extract_features(
-        media, decoder=multimodal.pil_decode
-    ).collect()[0]
-    assert row["decoded"] and (row["width"], row["height"]) == (4, 2)
-
-
-def test_extract_features_decodes_real_rasters(spark, tmp_path):
-    """binaryFile source -> extract_features must REALLY decode BMP/PPM
-    (true dimensions + pixel mean, decoded=True) and fall back to byte
-    stats for undecodable payloads (decoded=False, NULL mean)."""
+def test_extract_features_decodes_real_rasters(spark):
+    """extract_features must REALLY decode BMP/PPM (true dimensions +
+    pixel mean, decoded=True) and fall back to byte stats for
+    undecodable payloads (decoded=False, NULL mean)."""
     from near_event_streams_spark.operators import multimodal
 
     bmp = _make_bmp(7, 4, lambda r, c: ((r * 7 + c) % 256,) * 3)
     vals = [(i * 11) % 256 for i in range(3 * 2 * 3)]
     ppm = b"P6\n3 2\n255\n" + bytes(vals)
-    (tmp_path / "img.bmp").write_bytes(bmp)
-    (tmp_path / "img.ppm").write_bytes(ppm)
-    (tmp_path / "blob.bin").write_bytes(b"\x01\x02\x03opaque")
-
-    media = multimodal.read_media_dir(spark, str(tmp_path))
+    blob = b"\x01\x02\x03opaque"
+    media = spark.createDataFrame(
+        [
+            (1, "image/bmp", bytearray(bmp), len(bmp)),
+            (2, "image/x-portable-pixmap", bytearray(ppm), len(ppm)),
+            (3, "application/octet-stream", bytearray(blob), len(blob)),
+        ],
+        "media_id long, media_type string, payload binary, n_bytes long",
+    )
     feats = {
         r["media_type"]: r
         for r in multimodal.extract_features(media).collect()

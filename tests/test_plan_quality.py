@@ -223,10 +223,6 @@ def test_dedup_pipelines_never_cartesian(spark):
     for name, df in [
         ("ppjoin", dedup.jaccard_pairs(docs, 0.8)),
         ("minhash", dedup.minhash_lsh_dedup(docs, 0.8)),
-        (
-            "simhash",
-            dedup.simhash_near_pairs(dedup.simhash_signatures(docs)),
-        ),
     ]:
         plan = plan_text(df)
         assert "CartesianProduct" not in plan, name
@@ -583,33 +579,6 @@ def test_token_encode_vocab_join_broadcasts(spark):
     plan = plan_text(df, mode="simple")
     assert "BroadcastHashJoin" in plan, plan[:2000]
     assert "CartesianProduct" not in plan
-
-
-def test_cap_twophase_windows_are_salted_then_bounded(spark):
-    """The hot-domain cap: phase-1 window must partition by
-    (group, salt) — never the bare group over the full input — and the
-    bare-group window may only consume phase-1 survivors (plan prints
-    parents before children: the salted windowspec appears BELOW the
-    group-only one)."""
-    from near_event_streams_spark.operators.curation import (
-        cap_per_group_twophase,
-    )
-    from near_event_streams_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    df = cap_per_group_twophase(docs, "source", "n_chars", cap=10)
-    plan = plan_text(df, mode="simple")
-    specs = re.findall(r"windowspecdefinition\((.*?)\)", plan)
-    assert any("_salt" in s for s in specs), plan[:2000]
-    salted_pos = plan.index("_salt")
-    group_only = [s for s in specs if "_salt" not in s and "source" in s]
-    assert group_only, plan[:2000]
-    assert plan.index(group_only[0]) < salted_pos, (
-        "group-only window must consume the salted window's survivors:\n"
-        + plan[:2000]
-    )
 
 
 def test_interval_overlap_join_is_equi_not_nlj(spark):

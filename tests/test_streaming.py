@@ -328,20 +328,8 @@ def test_one_stream_runner():
 
 
 
-# The parity layer and the sinks: every top-level definition here must be
-# reached from a consumer.
-_GATED = (
-    "config.py",
-    "schemas.py",
-    "sources/streamer.py",
-    "operators/extract.py",
-    "operators/routing.py",
-    "sinks/*.py",
-    "streaming/job.py",
-    "streaming/stats.py",
-)
 # Unwired until the job reports its own health from the stream plan
-# (ROADMAP open item 1).
+# (ROADMAP open item 2).
 _UNREACHED_OK = {"BlockStatsListener"}
 
 
@@ -374,9 +362,9 @@ def _names(node):
 def test_parity_definitions_reached_from_consumers():
     """A transitive name walk from the consumers (the CLI,
     ``__spark_entry__``, ``bench.py``, ``plan_audit.py``, perfbench and
-    the package ``__all__``s) reaches every top-level definition of the
-    parity layer and the sinks. Tests are not consumers: code that only
-    its own tests call is dead."""
+    the package ``__all__``s) reaches every top-level definition of
+    every module in the package. Tests are not consumers: code that
+    only its own tests call is dead."""
     pkg = pathlib.Path(job.__file__).parents[1]
     repo = pkg.parent
     roots = [
@@ -391,6 +379,7 @@ def test_parity_definitions_reached_from_consumers():
         ),
     ]
     defs = {}
+    defined = []
     reached = set(_UNREACHED_OK)
     for path in sorted(pkg.rglob("*.py")):
         tree = ast.parse(path.read_text())
@@ -402,6 +391,8 @@ def test_parity_definitions_reached_from_consumers():
                     for c in ast.walk(node.value)
                     if isinstance(c, ast.Constant)
                 }
+            elif not name.startswith("__"):
+                defined.append((str(path.relative_to(pkg)), name))
     for path in roots:
         reached |= set(_names(ast.parse(path.read_text())))
     frontier = list(reached)
@@ -411,15 +402,8 @@ def test_parity_definitions_reached_from_consumers():
                 if name not in reached:
                     reached.add(name)
                     frontier.append(name)
-    gated = [
-        (str(path.relative_to(pkg)), name)
-        for pattern in _GATED
-        for path in sorted(pkg.glob(pattern))
-        for name, _ in _top_level_defs(ast.parse(path.read_text()))
-        if not name.startswith("__")
-    ]
-    assert _UNREACHED_OK <= {name for _, name in gated}
-    dead = [(path, name) for path, name in gated if name not in reached]
+    assert _UNREACHED_OK <= {name for _, name in defined}
+    dead = [(path, name) for path, name in defined if name not in reached]
     assert not dead, dead
 
 def test_inplace_compaction_preserves_rows_and_replay_safety(
